@@ -247,6 +247,7 @@ object Tables {
     merged.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*).parquet(path)
+    graft.operators.Ckpt.free(merged)
   }
 
   /** Bucketed catalog table: pre-shuffles once at write time so every

@@ -21,12 +21,9 @@ import Tables._
   */
 object LlmQueries {
 
-  /** q_domain_gate stopword threshold (‰) — env-tunable for at-scale
-    * bench probes where the default 55 gates out every source (see the
-    * registry entry's comment); the SAME value feeds the query and its
-    * oracle, so they cannot desync. */
-  private val domGatePermille: Int =
-    sys.env.get("SPARK_GRAFT_DOMGATE_PERMILLE").map(_.toInt).getOrElse(55)
+  /** q_domain_gate stopword threshold (‰); the SAME value feeds the
+    * query and its oracle, so they cannot desync. */
+  private val domGatePermille = 55
 
   private val langIdCase =
     """CASE WHEN s_en >= s_fr AND s_en >= s_es AND s_en >= s_de AND s_en >= s_zh THEN 'en'
@@ -2188,14 +2185,12 @@ object LlmQueries {
     // systematically-bad domains whose individual docs look fine. See
     // operators/DomainGate.
     Q("q_domain_gate",
-      // The stopword-rate threshold is env-tunable FOR BENCH PROBES
-      // only (both the query and its oracle read the same value, so
-      // the contract cannot desync): at sf100 the GenScale vocabulary
-      // diversification dilutes stopword rates below the default 55‰
-      // and every source fails the gate — 0 rows, so the at-scale run
-      // never exercised the doc-rejoin fan-out until r13's
-      // SPARK_GRAFT_DOMGATE_PERMILLE=0 probe (BASELINE.md). The driver
-      // runs without the env → default 55 → hashes unchanged.
+      // The stopword-rate threshold is the constant 55‰ (query and
+      // oracle share it). At sf100 the GenScale vocabulary
+      // diversification dilutes stopword rates below 55‰ and every
+      // source fails the gate, so the at-scale run returns 0 rows and
+      // never exercises the doc-rejoin fan-out (BASELINE.md records
+      // the one r13 run with the threshold at 0).
       (s, dir) => graft.operators.DomainGate
         .filterDocs(documents(s, dir), minDocs = 10, minAvgTokens = 52,
           minStopPerMille = domGatePermille)

@@ -110,14 +110,16 @@ object Enrich {
 
   /** Full bronze → silver transform. `players` may be empty (no fuzzy
     * normalization applied then, mirroring the reference's empty-catalog
-    * passthrough).
+    * passthrough); one catalog read gives both its emptiness and the
+    * squad map.
     */
   def transform(spark: SparkSession, bronze: DataFrame, meta: DataFrame,
                 players: Option[DataFrame] = None): DataFrame = {
     val typed = derive(coerceTypes(bronze))
     val withMeta = withTeamsAndMeta(typed, meta)
-    val named = players match {
-      case Some(p) if !p.isEmpty => FuzzyNames.normalize(spark, withMeta, p)
+    val named = players.map(FuzzyNames.catalogRows) match {
+      case Some(catalog) if catalog.nonEmpty =>
+        FuzzyNames.normalizeWith(spark, withMeta, FuzzyNames.squads(catalog))
       case _ => withMeta
     }
     dedup(named)

@@ -1,6 +1,6 @@
 package graft.silver
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Fuzzy player-name normalization (the one genuine "engine extension"
@@ -20,10 +20,10 @@ import org.apache.spark.sql.functions._
   * claim at README.md:64):
   *  - candidate pruning: choices restricted to the batting/bowling squad
   *    via a broadcast team→players map (small dimension, never shuffled);
-  *  - memoization: the fuzzy UDF runs once per DISTINCT (team, raw name)
-  *    pair — a tiny aggregate — and rows get the result back via a
-  *    broadcast join, so the quadratic string matching never touches the
-  *    fact table's row count.
+  *  - memoization: the fuzzy matcher runs once per DISTINCT (team, raw
+  *    name) pair — a tiny set, collected in one action — and rows get
+  *    the result back via a broadcast map lookup, so the quadratic string
+  *    matching never touches the fact table's row count.
   */
 object FuzzyNames {
 
@@ -160,9 +160,16 @@ object FuzzyNames {
 
   /** Load the players catalog into the broadcastable squad map.
     * (reference: ex_match_bs.py:159-196 — team→players + all names) */
-  def squadMap(players: DataFrame): (Map[String, Seq[String]], Seq[String]) = {
-    val rows = players.select(col("Name"), col("Team"))
-      .where(col("Name").isNotNull).collect()
+  def squadMap(players: DataFrame): (Map[String, Seq[String]], Seq[String]) =
+    squads(catalogRows(players))
+
+  /** The catalog's (Name, Team) rows, null names included: one action
+    * that gives both the squad map and the catalog's emptiness. */
+  private[silver] def catalogRows(players: DataFrame): Array[Row] =
+    players.select(col("Name"), col("Team")).collect()
+
+  private[silver] def squads(catalog: Array[Row]): (Map[String, Seq[String]], Seq[String]) = {
+    val rows = catalog.filter(!_.isNullAt(0))
     val all = rows.map(_.getString(0)).distinct.toSeq
     val byTeam = rows.filter(!_.isNullAt(1))
       .groupBy(_.getString(1)).map { case (t, rs) => t -> rs.map(_.getString(0)).toSeq }
@@ -171,36 +178,37 @@ object FuzzyNames {
 
   /** Normalize `batsman`, `bowler`, `out_batsman` in a silver frame.
     *
-    * Distinct-memoize-join: one row per distinct (squad team, raw name),
-    * fuzzy-matched once, broadcast-joined back (ex_match_bs.py:315-336).
+    * One action, one lookup (ex_match_bs.py:315-336): the distinct
+    * (scoping team, raw name) pairs of all three roles are collected
+    * together — batsman and out_batsman scoped to the batting squad,
+    * bowler to the bowling squad — each pair is fuzzy-matched once on
+    * the driver, and the rows get the result back through one broadcast
+    * map lookup per role. The silver lineage is evaluated once for the
+    * pairs, not once per role.
     */
-  def normalize(spark: SparkSession, silver: DataFrame, players: DataFrame): DataFrame = {
-    val (byTeam, all) = squadMap(players)
-    val bcTeams = spark.sparkContext.broadcast(byTeam)
-    val bcAll = spark.sparkContext.broadcast(all)
+  def normalize(spark: SparkSession, silver: DataFrame, players: DataFrame): DataFrame =
+    normalizeWith(spark, silver, squadMap(players))
 
-    val matchUdf = udf { (team: String, name: String) =>
-      FuzzyNames.matchPlayerName(
-        name, FuzzyNames.teamChoices(team, bcTeams.value, bcAll.value))
+  private[silver] def normalizeWith(spark: SparkSession, silver: DataFrame,
+      squads: (Map[String, Seq[String]], Seq[String])): DataFrame = {
+    val (byTeam, all) = squads
+    val roles = Seq("batsman" -> "batting_team", "bowler" -> "bowling_team",
+      "out_batsman" -> "batting_team")
+    val pairs = silver
+      .select(explode(array(roles.map { case (name, team) =>
+        struct(col(team).as("t"), col(name).as("raw")) }: _*)).as("p"))
+      .select("p.t", "p.raw").rdd
+      .mapPartitions(_.map(r => (r.getString(0), r.getString(1))).toSet.iterator)
+      .collect().toSet
+    val scored = pairs.iterator.map { case (t, raw) =>
+      (t, raw) -> matchPlayerName(raw, teamChoices(t, byTeam, all))
+    }.toMap
+    val bcScored = spark.sparkContext.broadcast(scored)
+    val lookup = udf { (t: String, raw: String) =>
+      bcScored.value.getOrElse((t, raw), raw)
     }
-
-    // (scoping team, raw name) pairs per role; batsman & out_batsman are
-    // scoped to the batting squad, bowler to the bowling squad.
-    def mapped(teamCol: String, nameCol: String): DataFrame =
-      silver.select(col(teamCol).as("t"), col(nameCol).as("raw"))
-        .distinct()
-        .withColumn("mapped", matchUdf(col("t"), col("raw")))
-
-    def rejoin(df: DataFrame, teamCol: String, nameCol: String): DataFrame = {
-      val m = mapped(teamCol, nameCol)
-      df.join(broadcast(m),
-          df(teamCol) <=> m("t") && df(nameCol) <=> m("raw"), "left")
-        .withColumn(nameCol, coalesce(col("mapped"), col(nameCol)))
-        .drop("t", "raw", "mapped")
+    roles.foldLeft(silver) { case (df, (name, team)) =>
+      df.withColumn(name, lookup(col(team), col(name)))
     }
-
-    val s1 = rejoin(silver, "batting_team", "batsman")
-    val s2 = rejoin(s1, "bowling_team", "bowler")
-    rejoin(s2, "batting_team", "out_batsman")
   }
 }

@@ -1,11 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.{Pipeline, io => gio}
 import graft.bronze.{EventDecode, Innings}
 import graft.model.Schemas
+import graft.operators.Ckpt
 import graft.silver.Enrich
 
 /** Streaming/incremental ingestion (SURVEY §2.10, T1–T5).
@@ -20,13 +22,25 @@ import graft.silver.Enrich
   *    batch-queue semantics of the reference's event bus);
   *  - T2 append + dedup → `foreachBatch`: merge the batch's decoded rows
   *    with the stored bronze rows of the affected matches, first-wins
-  *    keyed dedup (new rows get a seq offset past the stored maximum, so
-  *    re-delivered duplicates lose to their original);
+  *    keyed dedup (new rows get a seq offset past their match's stored
+  *    maximum, so re-delivered duplicates lose to their original);
   *  - T3 partition replace → dynamic partition overwrite of exactly the
   *    affected `match` (bronze) and `(match, innings)` (silver)
   *    partitions — untouched matches are never rewritten;
   *  - T5 late/duplicate data → same dedup; state never expires, matching
   *    the reference (no watermark exists there).
+  *
+  * One pass per micro-batch. A snapshot is a few hundred rows, so its
+  * latency is the fixed cost of each Spark action and shuffle, not data
+  * volume. The batch therefore runs:
+  *  - one action for the affected match ids (a per-partition distinct);
+  *  - one shuffle by `match` for all of bronze: it clusters the seq
+  *    offset, the first-wins dedup and both innings windows (every
+  *    window's keys include `match`), ending in one eager checkpoint;
+  *  - silver derived from that checkpoint (the rows just written, no
+  *    re-read of the table), whose fuzzy names cost one action
+  *    ([[graft.silver.FuzzyNames.normalize]]).
+  * The checkpoint's blocks are freed once both writes commit.
   *
   * Scale: each micro-batch shuffles only the affected matches' rows; the
   * checkpoint dir gives exactly-once file processing. At 100 TB the unit
@@ -37,16 +51,18 @@ object Incremental {
   /** The shared per-batch computation: decode, merge with the stored
     * bronze rows of the affected matches (innings assignment needs
     * whole-match context), first-wins dedup, innings segmentation.
-    * Returns (bronze rows for the affected matches — lineage-truncated,
-    * safe to write over `bronzePath` — the pinned schema, the affected
-    * match ids), or None for an empty batch. */
+    * Returns the bronze rows of the affected matches — a checkpoint,
+    * lineage-truncated, safe to write over `bronzePath`, and exactly the
+    * rows the write stores for them — or None for an empty batch. */
   private def bronzeForBatch(spark: SparkSession, rawBatch: DataFrame,
-                             bronzePath: String)
-      : Option[(DataFrame, org.apache.spark.sql.types.StructType, Seq[String])] = {
-    if (rawBatch.isEmpty) return None
+                             bronzePath: String): Option[DataFrame] = {
+    val matches = rawBatch.select("match").rdd
+      .mapPartitions(_.map(_.getString(0)).toSet.iterator)
+      .collect().distinct.toSeq
+    if (matches.isEmpty) return None
+    // decode on the unshuffled source read: `seq` (monotonically
+    // increasing id) is fixed below the exchange
     val decoded = EventDecode.decode(rawBatch)
-    val matches = decoded.select("match").distinct()
-      .collect().map(_.getString(0)).toSeq
 
     // Pinned read-back schema (plan-only, no job): partition-column
     // inference would retype numeric-looking match ids (merging '01'
@@ -60,45 +76,46 @@ object Incremental {
         val existing = spark.read.schema(bronzeSchema).parquet(bronzePath)
           .where(col("match").isin(matches: _*))
           .select(decoded.columns.toIndexedSeq.map(col): _*)
-        val maxSeq = existing.agg(max("seq")).first() match {
-          case r if r.isNullAt(0) => 0L
-          case r => r.getLong(0) + 1
-        }
-        existing.unionByName(
-          decoded.withColumn("seq", col("seq") + lit(maxSeq)))
-      } else decoded
+        // new rows sort after their match's stored rows: offset = the
+        // match's stored max(seq) + 1 (0 for a match not stored yet)
+        val stored = col("_stored")
+        val offset = coalesce(
+          max(when(stored, col("seq"))).over(Window.partitionBy("match")) + 1,
+          lit(0L))
+        existing.withColumn("_stored", lit(true))
+          .unionByName(decoded.withColumn("_stored", lit(false)))
+          .repartition(col("match"))
+          .withColumn("seq", when(stored, col("seq")).otherwise(col("seq") + offset))
+          .drop("_stored")
+      } else decoded.repartition(col("match"))
 
     // Materialize (lineage-truncating) BEFORE the overwrite: the merged
     // plan lazily reads bronzePath, the same path the write replaces.
     // Dynamic partition overwrite defers deletion to job commit, but a
     // recompute-during-write (task retry) or a mid-commit crash would
     // otherwise read partially-replaced state with no recovery copy.
-    val bronze = Innings.addInnings(Pipeline.dedupDecoded(merged))
-      .localCheckpoint(eager = true)
-    Some((bronze, bronzeSchema, matches))
+    Some(Innings.addInnings(Pipeline.dedupDecoded(merged))
+      .localCheckpoint(eager = true))
   }
 
   /** Process one micro-batch of raw snapshot rows (exposed for tests +
     * reuse by a non-streaming backfill). T3 as dynamic partition
     * overwrite: the affected `match` / `(match, innings)` partitions are
-    * rewritten wholesale. */
+    * rewritten wholesale. Silver derives from the bronze checkpoint just
+    * written (the parquet round trip is lossless), whose blocks are
+    * freed once both writes commit. */
   def processBatch(spark: SparkSession, rawBatch: DataFrame, meta: DataFrame,
                    bronzePath: String, silverPath: String,
                    players: Option[DataFrame] = None): Unit =
-    bronzeForBatch(spark, rawBatch, bronzePath).foreach {
-      case (bronze, bronzeSchema, matches) =>
-        bronze.write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("match").parquet(bronzePath)
-
-        // Re-read the just-written partitions so silver derives from the
-        // stored bronze (the reference's silver job reads the bronze file).
-        val storedBronze = spark.read.schema(bronzeSchema).parquet(bronzePath)
-          .where(col("match").isin(matches: _*))
-        val silver = Enrich.transform(spark, storedBronze, meta, players)
-        silver.write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("match", "innings").parquet(silverPath)
+    bronzeForBatch(spark, rawBatch, bronzePath).foreach { bronze =>
+      bronze.write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("match").parquet(bronzePath)
+      Enrich.transform(spark, bronze, meta, players)
+        .write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("match", "innings").parquet(silverPath)
+      Ckpt.free(bronze)
     }
 
   /** The alternative T2/T3 formulation: keyed MERGE upsert (Delta MERGE
@@ -118,22 +135,20 @@ object Incremental {
                         meta: DataFrame, bronzePath: String,
                         silverPath: String,
                         players: Option[DataFrame] = None): Unit =
-    bronzeForBatch(spark, rawBatch, bronzePath).foreach {
-      case (bronze, bronzeSchema, matches) =>
-        gio.Tables.mergeUpsertKeyed(spark, bronze, bronzePath,
-          keys = Pipeline.dupKey, partitionCols = Seq("match"))
-
-        val storedBronze = spark.read.schema(bronzeSchema).parquet(bronzePath)
-          .where(col("match").isin(matches: _*))
-        // materialize ONCE: mergeUpsertKeyed evaluates its source plan
-        // several times (dup-key guard, partition-tuple collect,
-        // anti-join keys, final write) — an unmaterialized silver would
-        // re-run the whole enrichment per pass
-        val silver = Enrich.transform(spark, storedBronze, meta, players)
-          .localCheckpoint(true)
-        gio.Tables.mergeUpsertKeyed(spark, silver, silverPath,
-          keys = Seq("match", "innings", "over", "ball", "rebowl"),
-          partitionCols = Seq("match", "innings"))
+    bronzeForBatch(spark, rawBatch, bronzePath).foreach { bronze =>
+      gio.Tables.mergeUpsertKeyed(spark, bronze, bronzePath,
+        keys = Pipeline.dupKey, partitionCols = Seq("match"))
+      // materialize ONCE: mergeUpsertKeyed evaluates its source plan
+      // several times (dup-key guard, partition-tuple collect,
+      // anti-join keys, final write) — an unmaterialized silver would
+      // re-run the whole enrichment per pass
+      val silver = Enrich.transform(spark, bronze, meta, players)
+        .localCheckpoint(true)
+      gio.Tables.mergeUpsertKeyed(spark, silver, silverPath,
+        keys = Seq("match", "innings", "over", "ball", "rebowl"),
+        partitionCols = Seq("match", "innings"))
+      Ckpt.free(silver)
+      Ckpt.free(bronze)
     }
 
   /** T1: watch `rawDir` for new CSV snapshots and upsert bronze+silver

@@ -1,12 +1,14 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import graft.silver.{Enrich, FuzzyNames}
 import graft.silver.FuzzyNames._
 
 /** WRatio scorer spec — realistic abbreviation pairs that rapidfuzz's
   * default `process.extractOne` scorer matches at cutoff 75 but plain
   * normalized-indel ratio does not (VERDICT r1 finding #1). */
-class FuzzyNamesSpec extends AnyFunSuite {
+class FuzzyNamesSpec extends SparkSpec {
 
   test("indel ratio basics") {
     assert(ratio("abc", "abc") === 100.0)
@@ -75,5 +77,68 @@ class FuzzyNamesSpec extends AnyFunSuite {
     assert(matchPlayerName(null, Seq("A")) === "N/A")
     assert(matchPlayerName("N/A", Seq("A")) === "N/A")
     assert(matchPlayerName("  X Y  ", Nil) === "X Y")
+  }
+  private val roles = Seq("batsman" -> "batting_team", "bowler" -> "bowling_team",
+    "out_batsman" -> "batting_team")
+
+  /** normalize must equal the row-wise reference: every name matched
+    * against teamChoices(its scoping team) of the same catalog. */
+  private def assertRowWise(silver: DataFrame, players: DataFrame): Unit = {
+    val (byTeam, all) = squadMap(players)
+    val expected = silver.collect().map { r =>
+      roles.foldLeft(r.toSeq) { case (vs, (name, team)) =>
+        vs.updated(r.fieldIndex(name), matchPlayerName(
+          r.getAs[String](name), teamChoices(r.getAs[String](team), byTeam, all)))
+      }.mkString("|")
+    }.sorted.toSeq
+    val got = FuzzyNames.normalize(spark, silver, players)
+      .select(silver.columns.toIndexedSeq.map(org.apache.spark.sql.functions.col): _*)
+      .collect().map(_.mkString("|")).sorted.toSeq
+    assert(got === expected)
+  }
+
+  test("normalize == row-wise matchPlayerName over teamChoices, frame-level") {
+    import spark.implicits._
+    val silver = Seq[(String, String, String, String, String, String)](
+      // exact squad keys, abbreviated names
+      ("m1", "Mumbai Indians", "Chennai Super Kings", "R Sharma", "Dhoni", "R Sharma"),
+      // null names → "N/A"; padded name trimmed
+      ("m1", "Mumbai Indians", "Chennai Super Kings", null, " MS Dhoni ", null),
+      // misspelled team key: squad chosen at the fuzzy cutoff of 70
+      ("m2", "Mumbai Indian", "Chennai Super King", "J Bumrah", "MS Dhoni", "N/A"),
+      // unknown team: the full catalog
+      ("m3", "Gotham Knights", "N/A", "V Kohli", "Bumrah", "Zzzz Qqqq"),
+      // the same pair twice in one frame, and across roles
+      ("m3", "Gotham Knights", "N/A", "V Kohli", "V Kohli", "V Kohli"))
+      .toDF("match", "batting_team", "bowling_team", "batsman", "bowler", "out_batsman")
+    val players = Seq(
+      ("Rohit Sharma", "Mumbai Indians"), ("Jasprit Bumrah", "Mumbai Indians"),
+      ("MS Dhoni", "Chennai Super Kings"), ("Virat Kohli", "Royal Challengers"),
+      ("Dhoni Junior", null)).toDF("Name", "Team")
+    assertRowWise(silver, players)
+    // and the names really moved
+    assert(FuzzyNames.normalize(spark, silver, players).where($"match" === "m1")
+      .select("batsman").as[String].collect().toSet === Set("Rohit Sharma", "N/A"))
+
+    // a catalog whose rows all have a null Name: no choices anywhere,
+    // names are only trimmed / N-A'd
+    val nullNames = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      org.apache.spark.sql.Row(null, "Mumbai Indians"),
+      org.apache.spark.sql.Row(null, null))),
+      StructType(Seq(StructField("Name", StringType), StructField("Team", StringType))))
+    assertRowWise(silver, nullNames)
+  }
+
+  test("Enrich.transform with an empty players frame passes names through") {
+    val (raw, meta) = Fixtures.rawSeason(spark)
+    val bronze = Pipeline.toBronze(raw)
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(Seq(StructField("Name", StringType), StructField("Team", StringType))))
+    def rows(df: DataFrame) = df.collect().map(_.mkString("|")).sorted.toSeq
+    val withEmpty = Enrich.transform(spark, bronze, meta, Some(empty))
+    assert(rows(withEmpty) === rows(Enrich.transform(spark, bronze, meta, None)))
+    val names = Seq("batsman", "bowler", "out_batsman").map(org.apache.spark.sql.functions.col)
+    assert(withEmpty.select(names: _*).except(bronze.select(names: _*)).isEmpty,
+      "every silver name is a raw bronze name")
   }
 }

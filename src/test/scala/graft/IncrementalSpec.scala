@@ -1,6 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.graftprobe.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerUnpersistRDD}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.Incremental
 
@@ -10,16 +14,30 @@ import graft.streaming.Incremental
   */
 class IncrementalSpec extends SparkSpec {
 
-  private def writeMatchCsvs(dir: String, matchIds: Seq[String]): Unit = {
+  private def writeMatchCsvs(dir: String, matchIds: Seq[String]): Unit =
+    matchIds.foreach(m => writeSnapshot(s"$dir/$m.csv", m, Int.MaxValue))
+
+  /** A cumulative scrape of match `m`: its first `rows` deliveries. */
+  private def writeSnapshot(path: String, m: String, rows: Int): Unit = {
     val (rawRows, _) = Fixtures.seasonRows
     val header = "match,date,time,venue,over,ball,bowler,batsman,ball_event,event_info,extract_time"
-    matchIds.foreach { m =>
-      val lines = rawRows.filter(_.getString(0) == m).map { r =>
-        (0 until 11).map(i => Option(r.getString(i)).getOrElse("")).mkString(",")
-      }
-      Files.write(Paths.get(s"$dir/$m.csv"),
-        (header +: lines).mkString("\n").getBytes("UTF-8"))
+    val lines = rawRows.filter(_.getString(0) == m).take(rows).map { r =>
+      (0 until 11).map(i => Option(r.getString(i)).getOrElse("")).mkString(",")
     }
+    Files.write(Paths.get(path), (header +: lines).mkString("\n").getBytes("UTF-8"))
+  }
+
+  /** A players catalog NDJSON (read back through Tables.readPlayers)
+    * whose names differ from the scraped ones by a trailing "x", so the
+    * fuzzy normalization rewrites every name. */
+  private def writePlayers(base: String): DataFrame = {
+    val (rawRows, _) = Fixtures.seasonRows
+    val names = rawRows.flatMap(r => Seq(r.getString(6), r.getString(7))).distinct.sorted
+    val team = Map("alp" -> "Alpha", "bet" -> "Beta", "gam" -> "Gamma", "del" -> "Delta")
+    val dir = Files.createDirectories(Paths.get(s"$base/players"))
+    Files.write(dir.resolve("players.json"), names.map(n =>
+      s"""{"Name":"${n}x","Team":"${team(n.take(3))}"}""").mkString("\n").getBytes("UTF-8"))
+    graft.io.Tables.readPlayers(spark, dir.toString)
   }
 
   private def silverSummary(df: org.apache.spark.sql.DataFrame): Seq[String] =
@@ -198,5 +216,111 @@ class IncrementalSpec extends SparkSpec {
     val c = summarize(raw)
     assert(a === b)
     assert(a === c)
+  }
+
+  test("a re-scrape of two stored matches in one batch equals the batch silver") {
+    val base = Files.createTempDirectory("graft-incr-two").toString
+    val rawDir = s"$base/raw"; Files.createDirectories(Paths.get(rawDir))
+    val bronzePath = s"$base/bronze"; val silverPath = s"$base/silver"
+    val ckpt = s"$base/ckpt"
+    val (_, meta) = Fixtures.rawSeason(spark)
+    val players = writePlayers(base)
+    val Seq(m1, m2) = meta.select("short_name").collect().map(_.getString(0)).toSeq.take(2)
+
+    // drain 1: partial scrapes of both matches (different lengths, so
+    // their stored seq maxima differ)
+    writeSnapshot(s"$rawDir/a_$m1.csv", m1, 25)
+    writeSnapshot(s"$rawDir/a_$m2.csv", m2, 40)
+    Incremental.run(spark, rawDir, meta, bronzePath, silverPath, ckpt, Some(players))
+      .awaitTermination()
+    // drain 2: one micro-batch re-scraping BOTH stored matches in full
+    writeSnapshot(s"$rawDir/b_$m1.csv", m1, Int.MaxValue)
+    writeSnapshot(s"$rawDir/b_$m2.csv", m2, Int.MaxValue)
+    Incremental.run(spark, rawDir, meta, bronzePath, silverPath, ckpt, Some(players))
+      .awaitTermination()
+
+    val batch = Pipeline.toSilver(spark,
+      Pipeline.toBronze(graft.io.Tables.readRawBallCsv(spark, rawDir)), meta, Some(players))
+    val stored = spark.read.schema(batch.schema).parquet(silverPath)
+    val cols = batch.columns.filter(_ != "seq").toSeq
+    val b = batch.select(cols.map(col): _*)
+    val st = stored.select(cols.map(col): _*)
+    assert(b.exceptAll(st).isEmpty && st.exceptAll(b).isEmpty,
+      "stored silver must equal the batch silver on every column but seq")
+    assert(stored.where(col("batsman").endsWith("x")).count() === stored.count(),
+      "every name normalized to the catalog")
+
+    // within each match, rows come in the same seq order
+    def ordered(df: DataFrame, m: String): Seq[String] =
+      df.where(col("match") === m).orderBy("seq")
+        .select(cols.map(col): _*).collect().map(_.mkString("|")).toSeq
+    Seq(m1, m2).foreach(m => assert(ordered(stored, m) === ordered(batch, m), m))
+  }
+
+  test("a micro-batch frees its checkpoints once its writes commit") {
+    val base = Files.createTempDirectory("graft-incr-free").toString
+    val rawDir = s"$base/raw"; Files.createDirectories(Paths.get(rawDir))
+    val (_, meta) = Fixtures.rawSeason(spark)
+    val m = meta.select("short_name").first().getString(0)
+    writeMatchCsvs(rawDir, Seq(m))
+    val batch = graft.io.Tables.readRawBallCsv(spark, rawDir)
+    val freed = ArrayBuffer.empty[Int]
+    val listener = new SparkListener {
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+        freed.synchronized(freed += e.rddId)
+    }
+    // checkpoints per (new store, existing store) batch: overwrite mode
+    // holds bronze; merge mode holds bronze and silver, and each keyed
+    // merge into an existing table holds its merged rows
+    Seq(false -> 2, true -> 6).foreach { case (mergeMode, checkpoints) =>
+      val bronzePath = s"$base/bronze_$mergeMode"; val silverPath = s"$base/silver_$mergeMode"
+      val upsert = if (mergeMode) Incremental.processBatchMerge _ else Incremental.processBatch _
+      val held = spark.sparkContext.getPersistentRDDs.keySet
+      val firstId = spark.sparkContext.emptyRDD[Int].id
+      freed.synchronized(freed.clear())
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        upsert(spark, batch, meta, bronzePath, silverPath, None) // new store
+        upsert(spark, batch, meta, bronzePath, silverPath, None) // existing store
+        ListenerDrain.drain(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(spark.sparkContext.getPersistentRDDs.keySet === held,
+        s"mergeMode=$mergeMode: a checkpoint outlived its micro-batch")
+      assert(freed.synchronized(freed.filter(_ > firstId).toSet.size) === checkpoints)
+    }
+  }
+
+  test("one snapshot of a stored match costs at most 10 Spark jobs") {
+    val base = Files.createTempDirectory("graft-incr-jobs").toString
+    val rawDir = s"$base/raw"; Files.createDirectories(Paths.get(rawDir))
+    val bronzePath = s"$base/bronze"; val silverPath = s"$base/silver"
+    val ckpt = s"$base/ckpt"
+    val (_, meta) = Fixtures.rawSeason(spark)
+    val players = writePlayers(base)
+    val m = meta.select("short_name").first().getString(0)
+    def drain(): Unit = {
+      val q = Incremental.run(spark, rawDir, meta, bronzePath, silverPath, ckpt, Some(players))
+      q.awaitTermination()
+      q.exception.foreach(e => throw e)
+    }
+    writeSnapshot(s"$rawDir/1_$m.csv", m, 30)
+    drain()
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    writeSnapshot(s"$rawDir/2_$m.csv", m, 60)
+    ListenerDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      drain()
+      ListenerDrain.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // affected ids 1, bronze checkpoint 2 (shuffle by match + count),
+    // bronze write 1, catalog 1, name pairs 2 (meta broadcast + collect),
+    // silver write 3 (meta broadcast + Enrich.dedup shuffle + write)
+    assert(jobs.get <= 10)
+    assert(spark.read.parquet(bronzePath).count() === 60L, "the snapshot landed")
   }
 }
