@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.util.concurrent.{ExecutionException, FutureTask}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,23 +31,78 @@ import graft.silver.Enrich
   *  - T5 late/duplicate data → same dedup; state never expires, matching
   *    the reference (no watermark exists there).
   *
-  * One pass per micro-batch. A snapshot is a few hundred rows, so its
-  * latency is the fixed cost of each Spark action and shuffle, not data
-  * volume. The batch therefore runs:
-  *  - one action for the affected match ids (a per-partition distinct);
+  * One pass per micro-batch, in overlapping branches. A snapshot is a
+  * few hundred rows, so its latency is the fixed cost of each Spark
+  * action on the critical path, not data volume. The batch therefore
+  * runs:
+  *  - the two dimensions (the players catalog and the prepared match
+  *    meta, [[graft.silver.Enrich.Dims]]), one action each, on their own
+  *    driver threads, beside the bronze chain;
+  *  - one action for the affected match ids (a per-partition distinct),
+  *    on its own thread beside the planning of the bronze chain;
   *  - one shuffle by `match` for all of bronze: it clusters the seq
   *    offset, the first-wins dedup and both innings windows (every
   *    window's keys include `match`), ending in one eager checkpoint;
-  *  - silver derived from that checkpoint (the rows just written, no
-  *    re-read of the table), whose fuzzy names cost one action
-  *    ([[graft.silver.FuzzyNames.normalize]]).
-  * The checkpoint's blocks are freed once both writes commit.
+  *  - the bronze write on a second thread, beside the silver chain on
+  *    the batch thread: silver derives from the same checkpoint (the
+  *    rows being written, no re-read of the table); its fuzzy names cost
+  *    one action ([[graft.silver.FuzzyNames.normalize]]) and its meta is
+  *    a map lookup, not a join, so it costs none.
+  * The batch returns only once both writes are joined, and a failure in
+  * either fails it (the stream then does not commit the offset, and a
+  * replay converges). The checkpoint's blocks are freed after the join,
+  * whether the writes succeeded or not. Forked threads are created per
+  * batch, so they inherit the batch thread's Spark local properties (job
+  * group, scheduler pool, SQL execution).
   *
   * Scale: each micro-batch shuffles only the affected matches' rows; the
   * checkpoint dir gives exactly-once file processing. At 100 TB the unit
   * of work stays one match (a few thousand rows), not the table.
   */
 object Incremental {
+
+  /** A driver thread running `body`, created on (so inheriting the
+    * Spark local properties of) the calling thread. */
+  private final class Fork[T](name: String)(body: => T) {
+    private val task = new FutureTask[T](() => body)
+    private val thread = new Thread(task, s"incremental-$name")
+    thread.setDaemon(true)
+    thread.start()
+
+    /** Waits for the thread; rethrows its failure. */
+    def join(): T =
+      try task.get() catch { case e: ExecutionException => throw e.getCause }
+  }
+
+  /** Runs `body`, then joins every fork whether or not `body` failed, so
+    * no fork outlives the call (short of an interrupt: a stopped query
+    * cancels the forks' jobs through the inherited job group). The first
+    * failure is thrown, with any later ones attached to it as
+    * suppressed. */
+  private def joining[T](forks: Seq[Fork[_]])(body: => T): T = {
+    var failure: Throwable = null
+    def fail(t: Throwable): Unit =
+      if (failure == null) failure = t else if (t ne failure) failure.addSuppressed(t)
+    val result = try Some(body) catch { case t: Throwable => fail(t); None }
+    forks.foreach(f => try f.join() catch { case t: Throwable => fail(t) })
+    if (failure != null) throw failure
+    result.get
+  }
+
+  /** Starts loading both silver dimensions on their own threads and runs
+    * `body` with a join of them; both threads are joined before return. */
+  private def withDims(meta: DataFrame, players: Option[DataFrame])(
+      body: (() => Enrich.Dims) => Unit): Unit = {
+    val metaFork = new Fork("meta")(Enrich.loadMeta(meta))
+    val squadsFork = new Fork("catalog")(Enrich.loadSquads(players))
+    joining(Seq(metaFork, squadsFork))(
+      body(() => Enrich.Dims(metaFork.join(), squadsFork.join())))
+  }
+
+  private def overwrite(df: DataFrame, path: String, partitionCols: String*): Unit =
+    df.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*).parquet(path)
 
   /** The shared per-batch computation: decode, merge with the stored
     * bronze rows of the affected matches (innings assignment needs
@@ -56,23 +112,27 @@ object Incremental {
     * rows the write stores for them — or None for an empty batch. */
   private def bronzeForBatch(spark: SparkSession, rawBatch: DataFrame,
                              bronzePath: String): Option[DataFrame] = {
-    val matches = rawBatch.select("match").rdd
+    // the affected match ids, collected beside the plan-only work below
+    val ids = new Fork("match-ids")(rawBatch.select("match").rdd
       .mapPartitions(_.map(_.getString(0)).toSet.iterator)
-      .collect().distinct.toSeq
+      .collect().distinct.toSeq)
+    val (decoded, bronzeSchema, bronzeStored) = joining(Seq(ids)) {
+      // decode on the unshuffled source read: `seq` (monotonically
+      // increasing id) is fixed below the exchange
+      val decoded = EventDecode.decode(rawBatch)
+      // Pinned read-back schema (plan-only, no job): partition-column
+      // inference would retype numeric-looking match ids (merging '01'
+      // with '1'), break the unionByName below, and defeat the isin
+      // partition filter — the exact failure RunPipeline's silver
+      // read-back fixed.
+      (decoded, Innings.addInnings(Pipeline.dedupDecoded(decoded)).schema,
+        gio.Tables.tableExists(spark, bronzePath))
+    }
+    val matches = ids.join()
     if (matches.isEmpty) return None
-    // decode on the unshuffled source read: `seq` (monotonically
-    // increasing id) is fixed below the exchange
-    val decoded = EventDecode.decode(rawBatch)
-
-    // Pinned read-back schema (plan-only, no job): partition-column
-    // inference would retype numeric-looking match ids (merging '01'
-    // with '1'), break the unionByName below, and defeat the isin
-    // partition filter — the exact failure RunPipeline's silver
-    // read-back fixed.
-    val bronzeSchema = Innings.addInnings(Pipeline.dedupDecoded(decoded)).schema
 
     val merged =
-      if (gio.Tables.tableExists(spark, bronzePath)) {
+      if (bronzeStored) {
         val existing = spark.read.schema(bronzeSchema).parquet(bronzePath)
           .where(col("match").isin(matches: _*))
           .select(decoded.columns.toIndexedSeq.map(col): _*)
@@ -101,21 +161,20 @@ object Incremental {
   /** Process one micro-batch of raw snapshot rows (exposed for tests +
     * reuse by a non-streaming backfill). T3 as dynamic partition
     * overwrite: the affected `match` / `(match, innings)` partitions are
-    * rewritten wholesale. Silver derives from the bronze checkpoint just
-    * written (the parquet round trip is lossless), whose blocks are
-    * freed once both writes commit. */
+    * rewritten wholesale. The bronze write runs on its own thread beside
+    * the silver chain; both read the bronze checkpoint, whose blocks are
+    * freed once both writes are joined. */
   def processBatch(spark: SparkSession, rawBatch: DataFrame, meta: DataFrame,
                    bronzePath: String, silverPath: String,
                    players: Option[DataFrame] = None): Unit =
-    bronzeForBatch(spark, rawBatch, bronzePath).foreach { bronze =>
-      bronze.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("match").parquet(bronzePath)
-      Enrich.transform(spark, bronze, meta, players)
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("match", "innings").parquet(silverPath)
-      Ckpt.free(bronze)
+    withDims(meta, players) { dims =>
+      bronzeForBatch(spark, rawBatch, bronzePath).foreach { bronze =>
+        try {
+          val bronzeWrite = new Fork("bronze-write")(overwrite(bronze, bronzePath, "match"))
+          joining(Seq(bronzeWrite))(overwrite(
+            Enrich.transformWith(spark, bronze, dims()), silverPath, "match", "innings"))
+        } finally Ckpt.free(bronze)
+      }
     }
 
   /** The alternative T2/T3 formulation: keyed MERGE upsert (Delta MERGE
@@ -129,26 +188,31 @@ object Incremental {
     * merge, and both modes converge to the same stored tables
     * (IncrementalSpec pins this). Innings stay stable under merge
     * because batch rows always sequence AFTER stored rows, so session
-    * boundaries of already-stored deliveries never move.
+    * boundaries of already-stored deliveries never move. The dimensions
+    * load beside the bronze chain as in [[processBatch]]; the two merges
+    * run in turn.
     */
   def processBatchMerge(spark: SparkSession, rawBatch: DataFrame,
                         meta: DataFrame, bronzePath: String,
                         silverPath: String,
                         players: Option[DataFrame] = None): Unit =
-    bronzeForBatch(spark, rawBatch, bronzePath).foreach { bronze =>
-      gio.Tables.mergeUpsertKeyed(spark, bronze, bronzePath,
-        keys = Pipeline.dupKey, partitionCols = Seq("match"))
-      // materialize ONCE: mergeUpsertKeyed evaluates its source plan
-      // several times (dup-key guard, partition-tuple collect,
-      // anti-join keys, final write) — an unmaterialized silver would
-      // re-run the whole enrichment per pass
-      val silver = Enrich.transform(spark, bronze, meta, players)
-        .localCheckpoint(true)
-      gio.Tables.mergeUpsertKeyed(spark, silver, silverPath,
-        keys = Seq("match", "innings", "over", "ball", "rebowl"),
-        partitionCols = Seq("match", "innings"))
-      Ckpt.free(silver)
-      Ckpt.free(bronze)
+    withDims(meta, players) { dims =>
+      bronzeForBatch(spark, rawBatch, bronzePath).foreach { bronze =>
+        try {
+          gio.Tables.mergeUpsertKeyed(spark, bronze, bronzePath,
+            keys = Pipeline.dupKey, partitionCols = Seq("match"))
+          // materialize ONCE: mergeUpsertKeyed evaluates its source plan
+          // several times (dup-key guard, partition-tuple collect,
+          // anti-join keys, final write) — an unmaterialized silver would
+          // re-run the whole enrichment per pass
+          val silver = Enrich.transformWith(spark, bronze, dims())
+            .localCheckpoint(true)
+          try gio.Tables.mergeUpsertKeyed(spark, silver, silverPath,
+            keys = Seq("match", "innings", "over", "ball", "rebowl"),
+            partitionCols = Seq("match", "innings"))
+          finally Ckpt.free(silver)
+        } finally Ckpt.free(bronze)
+      }
     }
 
   /** T1: watch `rawDir` for new CSV snapshots and upsert bronze+silver

@@ -6,6 +6,7 @@ import org.apache.spark.graftprobe.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerUnpersistRDD}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 import graft.streaming.Incremental
 
 /** Streaming/incremental contract (SURVEY §2.10): draining the raw
@@ -290,7 +291,7 @@ class IncrementalSpec extends SparkSpec {
     }
   }
 
-  test("one snapshot of a stored match costs at most 10 Spark jobs") {
+  test("one snapshot of a stored match costs at most 9 Spark jobs") {
     val base = Files.createTempDirectory("graft-incr-jobs").toString
     val rawDir = s"$base/raw"; Files.createDirectories(Paths.get(rawDir))
     val bronzePath = s"$base/bronze"; val silverPath = s"$base/silver"
@@ -307,20 +308,87 @@ class IncrementalSpec extends SparkSpec {
     drain()
 
     val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val untagged = new java.util.concurrent.atomic.AtomicInteger
+    val tag = "graft.spec.caller"
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        if (Option(e.properties).forall(_.getProperty(tag) != "jobs")) untagged.incrementAndGet()
+      }
     }
     writeSnapshot(s"$rawDir/2_$m.csv", m, 60)
     ListenerDrain.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setLocalProperty(tag, "jobs")
     try {
       drain()
       ListenerDrain.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally {
+      spark.sparkContext.setLocalProperty(tag, null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
     // affected ids 1, bronze checkpoint 2 (shuffle by match + count),
-    // bronze write 1, catalog 1, name pairs 2 (meta broadcast + collect),
-    // silver write 3 (meta broadcast + Enrich.dedup shuffle + write)
-    assert(jobs.get <= 10)
+    // catalog 1, meta 1, bronze write 1, name pairs 1, silver write 2
+    // (Enrich.dedup shuffle + write)
+    assert(jobs.get <= 9)
+    // the jobs of the batch's own driver threads carry the caller's
+    // local properties, as the stream thread's do
+    assert(untagged.get === 0, "a job lost the caller's local properties")
     assert(spark.read.parquet(bronzePath).count() === 60L, "the snapshot landed")
+  }
+
+  test("a failed write fails the batch, frees its checkpoint, and a replay converges") {
+    val base = Files.createTempDirectory("graft-incr-fail").toString
+    val rawDir = s"$base/raw"; Files.createDirectories(Paths.get(rawDir))
+    val bronzePath = s"$base/bronze"; val silverPath = s"$base/silver"
+    val ckpt = s"$base/ckpt"
+    val (_, meta) = Fixtures.rawSeason(spark)
+    val players = writePlayers(base)
+    val Seq(m1, m2) = meta.select("short_name").collect().map(_.getString(0)).toSeq.take(2)
+    def run() = Incremental.run(spark, rawDir, meta, bronzePath, silverPath, ckpt, Some(players))
+
+    writeSnapshot(s"$rawDir/a_$m1.csv", m1, 25)
+    run().awaitTermination()
+    // a plain file where the silver table directory goes (the stored
+    // silver moved aside): the next batch's silver write fails, its
+    // bronze write (beside it) does not
+    val obstacle = Paths.get(silverPath)
+    Files.move(obstacle, Paths.get(s"$base/silver_aside"))
+    Files.write(obstacle, "not a table".getBytes("UTF-8"))
+    writeSnapshot(s"$rawDir/b_$m1.csv", m1, Int.MaxValue)
+    writeSnapshot(s"$rawDir/b_$m2.csv", m2, 30)
+
+    val freed = ArrayBuffer.empty[Int]
+    val listener = new SparkListener {
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+        freed.synchronized(freed += e.rddId)
+    }
+    val held = spark.sparkContext.getPersistentRDDs.keySet
+    spark.sparkContext.addSparkListener(listener)
+    val q = run()
+    try {
+      intercept[StreamingQueryException](q.awaitTermination())
+      ListenerDrain.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(q.exception.isDefined, "the query surfaces the write's failure")
+    assert(spark.sparkContext.getPersistentRDDs.keySet === held,
+      "the failed batch's checkpoint was not freed")
+    assert(freed.synchronized(freed.nonEmpty), "the failed batch checkpointed bronze")
+
+    // remove the obstacle: the uncommitted batch replays and converges
+    Files.delete(obstacle)
+    val replay = run()
+    replay.awaitTermination()
+    replay.exception.foreach(e => throw e)
+
+    val batch = Pipeline.toSilver(spark,
+      Pipeline.toBronze(graft.io.Tables.readRawBallCsv(spark, rawDir)), meta, Some(players))
+    val stored = spark.read.schema(batch.schema).parquet(silverPath)
+    val cols = batch.columns.filter(_ != "seq").toSeq.map(col)
+    val b = batch.select(cols: _*)
+    val st = stored.select(cols: _*)
+    assert(b.exceptAll(st).isEmpty && st.exceptAll(b).isEmpty,
+      "stored silver must equal the batch silver on every column but seq")
+    assert(stored.select("match").distinct().count() === 2L)
   }
 }
