@@ -30,8 +30,8 @@ object Pipeline {
     Innings.addInnings(dedupDecoded(EventDecode.decode(raw)))
 
   /** Logical identity of a decoded delivery row — everything except the
-    * per-scrape `seq`/`extract_time`. Also the merge key of the
-    * incremental MERGE-upsert mode (Incremental.processBatchMerge). */
+    * per-scrape `seq`/`extract_time`: the key of the first-wins dedup,
+    * in the batch pipeline and in each incremental micro-batch. */
   val dupKey: Seq[String] = Seq("match", "over", "ball", "bowler",
     "batsman", "runs", "extra_runs", "extra", "extra_type", "rebowl",
     "wicket", "wicket_method", "out_batsman", "total_runs")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Flagship smoke (verify-skill step 3): run [[SparkEntry.entry]] — the
+/** Flagship smoke (verify-skill step 4): run [[SparkEntry.entry]] — the
   * full medallion pipeline on the deterministic synthetic season — and
   * require rows > 0, mirroring the driver's smoke check. */
 object Smoke {

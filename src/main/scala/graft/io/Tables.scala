@@ -140,16 +140,19 @@ object Tables {
       }
     }
 
-  /** S7 — partitioned silver sink (ex_match_bs.py:464-482; layout
-    * partitioned by (match, innings) per :467). */
-  def writeSilver(df: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).partitionBy("match", "innings").parquet(path)
+  /** The silver layout: partitioned by (match, innings), per
+    * ex_match_bs.py:467. */
+  private val silverPartitionCols = Seq("match", "innings")
+
+  /** S7 — partitioned silver sink (ex_match_bs.py:464-482). */
+  def writeSilver(df: DataFrame, path: String): Unit =
+    df.write.mode(SaveMode.Overwrite).partitionBy(silverPartitionCols: _*).parquet(path)
 
   /** S8 — partition upsert: replace exactly the (match, innings)
     * partitions present in `df`, keep all others — the Parquet analogue
     * of Delta `replaceWhere "match = X"` (ex_match_bs.py:461-472). */
   def upsertSilverPartitions(df: DataFrame, path: String): Unit =
-    upsertPartitions(df, path, Seq("match", "innings"))
+    upsertPartitions(df, path, silverPartitionCols)
 
   /** Generic dynamic partition upsert: replace exactly the `cols`
     * partitions present in `df`, keep all others. Idempotent for a
@@ -161,94 +164,6 @@ object Tables {
     df.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(cols: _*).parquet(path)
-
-  /** S8, atomic — the same partition-upsert semantics published
-    * through a [[Manifest]] commit: a concurrent [[readTable]] reader
-    * sees the whole table before or after the swap, never a
-    * half-replaced partition (the plain dynamic overwrite deletes and
-    * rewrites partition dirs in place). Superseded files remain until
-    * [[Manifest.vacuum]]. */
-  def upsertPartitionsAtomic(df: DataFrame, path: String,
-                             cols: Seq[String]): Unit = {
-    Manifest.publishPartitionUpsert(df, path, cols)
-    ()
-  }
-
-  /** S8/T2 — keyed MERGE upsert: the Delta `MERGE ON keys` shape
-    * (SURVEY §2.10 maps the reference's per-delivery upsert,
-    * ex_match_rb.py:201-221, to it). For each source row, the matching
-    * target row (same `keys`) is UPDATED (source wins) and unmatched
-    * rows are INSERTED — restricted to the partitions the source
-    * touches, so the unit of IO is the affected partition set, never
-    * the table:
-    *
-    *  1. read back ONLY the affected partitions (literal partition
-    *     predicate from the source's distinct partition tuples — the
-    *     scan prunes);
-    *  2. anti-join stored rows against the source keys (rows being
-    *     updated drop out; join strategy is Catalyst's choice — AQE
-    *     broadcasts the key set when the batch is small);
-    *  3. union the source back in and dynamic-partition-overwrite the
-    *     affected partitions (lineage-truncated first: the plan reads
-    *     the same path the write replaces).
-    *
-    * Duplicate SOURCE keys fail fast (IllegalArgumentException) — the
-    * same contract as Delta MERGE's multiple-source-rows-matched error:
-    * with two source rows for one key, "source wins" is ambiguous and
-    * the union would silently store BOTH. Callers wanting last-wins
-    * must pre-reduce the batch themselves (see
-    * [[graft.silver.Enrich.dedup]] for the first-wins shape).
-    */
-  def mergeUpsertKeyed(spark: SparkSession, source: DataFrame, path: String,
-                       keys: Seq[String], partitionCols: Seq[String]): Unit = {
-    require(keys.nonEmpty && partitionCols.nonEmpty)
-    // Partition-scoped MERGE can only see the partitions the source
-    // names, so a key that MOVED partitions would leave its old row
-    // behind as a silent duplicate. Requiring the partition columns to
-    // be part of the key makes a "moved" row a different key by
-    // construction — the only shape whose semantics this operator can
-    // honor without a full-table scan.
-    require(partitionCols.forall(keys.contains),
-      s"mergeUpsertKeyed needs keys ⊇ partitionCols (got keys=$keys, partitionCols=$partitionCols)")
-    import org.apache.spark.sql.functions.{col, count, lit}
-    // Fail fast on duplicate source keys (Delta MERGE raises here too).
-    // One aggregation over the batch-sized source; limit(1) stops at the
-    // first offender.
-    val dup = source.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n")).where(col("n") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      s"mergeUpsertKeyed: duplicate source rows for key ${keys.mkString(",")} = " +
-        dup.headOption.map(_.toSeq.init.mkString(",")).getOrElse(""))
-    if (!tableExists(spark, path)) {
-      source.write.mode(SaveMode.Overwrite)
-        .partitionBy(partitionCols: _*).parquet(path)
-      return
-    }
-    // a partition tuple is driver-sized by definition (it names a dir)
-    val partTuples = source.select(partitionCols.map(col): _*).distinct().collect()
-    if (partTuples.isEmpty) return // empty batch ⇒ no-op, not empty.reduce
-    val affected = partTuples.map { row =>
-      partitionCols.zipWithIndex
-        // null-safe: a null partition value (__HIVE_DEFAULT_PARTITION__)
-        // must still match its stored rows or the overwrite drops them
-        .map { case (c, i) => col(c) <=> lit(row.get(i)) }
-        .reduce(_ && _)
-    }.reduce(_ || _)
-    val existing = spark.read.schema(source.schema).parquet(path)
-      .where(affected)
-    // the anti-join must be null-safe like the partition predicate: with
-    // USING-style keys, null = null is null, so a stored row with a null
-    // key component would survive next to its replacement
-    val srcKeys = source.select(keys.map(col): _*).distinct()
-    val keyCond = keys.map(k => existing(k) <=> srcKeys(k)).reduce(_ && _)
-    val kept = existing.join(srcKeys, keyCond, "left_anti")
-    val merged = kept.unionByName(source.select(existing.columns.toIndexedSeq.map(col): _*))
-      .localCheckpoint(eager = true)
-    merged.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*).parquet(path)
-    graft.operators.Ckpt.free(merged)
-  }
 
   /** Bucketed catalog table: pre-shuffles once at write time so every
     * subsequent equi-join/aggregation on the bucket key is co-located —

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.util.concurrent.{ExecutionException, FutureTask}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -26,8 +26,10 @@ import graft.silver.Enrich
   *    keyed dedup (new rows get a seq offset past their match's stored
   *    maximum, so re-delivered duplicates lose to their original);
   *  - T3 partition replace → dynamic partition overwrite of exactly the
-  *    affected `match` (bronze) and `(match, innings)` (silver)
-  *    partitions — untouched matches are never rewritten;
+  *    affected bronze and silver partitions, through the sinks that own
+  *    the table layouts ([[graft.io.Tables.upsertPartitions]] by `match`,
+  *    [[graft.io.Tables.upsertSilverPartitions]]) — untouched matches are
+  *    never rewritten;
   *  - T5 late/duplicate data → same dedup; state never expires, matching
   *    the reference (no watermark exists there).
   *
@@ -54,6 +56,11 @@ import graft.silver.Enrich
   * whether the writes succeeded or not. Forked threads are created per
   * batch, so they inherit the batch thread's Spark local properties (job
   * group, scheduler pool, SQL execution).
+  *
+  * A keyed-MERGE formulation (Delta `MERGE ON` the delivery key) once
+  * stood beside this one and converged to the same tables; it cost 24
+  * Spark jobs per snapshot of a stored match, all serial, against 9
+  * here, and was removed.
   *
   * Scale: each micro-batch shuffles only the affected matches' rows; the
   * checkpoint dir gives exactly-once file processing. At 100 TB the unit
@@ -88,21 +95,6 @@ object Incremental {
     if (failure != null) throw failure
     result.get
   }
-
-  /** Starts loading both silver dimensions on their own threads and runs
-    * `body` with a join of them; both threads are joined before return. */
-  private def withDims(meta: DataFrame, players: Option[DataFrame])(
-      body: (() => Enrich.Dims) => Unit): Unit = {
-    val metaFork = new Fork("meta")(Enrich.loadMeta(meta))
-    val squadsFork = new Fork("catalog")(Enrich.loadSquads(players))
-    joining(Seq(metaFork, squadsFork))(
-      body(() => Enrich.Dims(metaFork.join(), squadsFork.join())))
-  }
-
-  private def overwrite(df: DataFrame, path: String, partitionCols: String*): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*).parquet(path)
 
   /** The shared per-batch computation: decode, merge with the stored
     * bronze rows of the affected matches (innings assignment needs
@@ -160,60 +152,31 @@ object Incremental {
 
   /** Process one micro-batch of raw snapshot rows (exposed for tests +
     * reuse by a non-streaming backfill). T3 as dynamic partition
-    * overwrite: the affected `match` / `(match, innings)` partitions are
-    * rewritten wholesale. The bronze write runs on its own thread beside
-    * the silver chain; both read the bronze checkpoint, whose blocks are
-    * freed once both writes are joined. */
+    * overwrite: the affected bronze and silver partitions are rewritten
+    * wholesale ([[graft.io.Tables.upsertPartitions]],
+    * [[graft.io.Tables.upsertSilverPartitions]]). The dimensions load on
+    * their own threads beside the bronze chain, and the bronze write runs
+    * on its own thread beside the silver chain; both writes read the
+    * bronze checkpoint, whose blocks are freed once both are joined. */
   def processBatch(spark: SparkSession, rawBatch: DataFrame, meta: DataFrame,
                    bronzePath: String, silverPath: String,
-                   players: Option[DataFrame] = None): Unit =
-    withDims(meta, players) { dims =>
+                   players: Option[DataFrame] = None): Unit = {
+    val metaFork = new Fork("meta")(Enrich.loadMeta(meta))
+    val squadsFork = new Fork("catalog")(Enrich.loadSquads(players))
+    joining(Seq(metaFork, squadsFork)) {
       bronzeForBatch(spark, rawBatch, bronzePath).foreach { bronze =>
         try {
-          val bronzeWrite = new Fork("bronze-write")(overwrite(bronze, bronzePath, "match"))
-          joining(Seq(bronzeWrite))(overwrite(
-            Enrich.transformWith(spark, bronze, dims()), silverPath, "match", "innings"))
+          val bronzeWrite = new Fork("bronze-write")(
+            gio.Tables.upsertPartitions(bronze, bronzePath, Seq("match")))
+          joining(Seq(bronzeWrite)) {
+            val dims = Enrich.Dims(metaFork.join(), squadsFork.join())
+            gio.Tables.upsertSilverPartitions(
+              Enrich.transformWith(spark, bronze, dims), silverPath)
+          }
         } finally Ckpt.free(bronze)
       }
     }
-
-  /** The alternative T2/T3 formulation: keyed MERGE upsert (Delta MERGE
-    * semantics via [[graft.io.Tables.mergeUpsertKeyed]]) instead of
-    * partition overwrite. Bronze merges on the logical delivery identity
-    * ([[Pipeline.dupKey]] — first-wins dedup makes the batch unique on
-    * it); silver on the ball key `(match, innings, over, ball, rebowl)`
-    * (unique after Enrich's keyed dedup). Row-level instead of
-    * partition-level replacement: re-delivered identical rows rewrite in
-    * place, unrelated rows in the same partition are carried over by the
-    * merge, and both modes converge to the same stored tables
-    * (IncrementalSpec pins this). Innings stay stable under merge
-    * because batch rows always sequence AFTER stored rows, so session
-    * boundaries of already-stored deliveries never move. The dimensions
-    * load beside the bronze chain as in [[processBatch]]; the two merges
-    * run in turn.
-    */
-  def processBatchMerge(spark: SparkSession, rawBatch: DataFrame,
-                        meta: DataFrame, bronzePath: String,
-                        silverPath: String,
-                        players: Option[DataFrame] = None): Unit =
-    withDims(meta, players) { dims =>
-      bronzeForBatch(spark, rawBatch, bronzePath).foreach { bronze =>
-        try {
-          gio.Tables.mergeUpsertKeyed(spark, bronze, bronzePath,
-            keys = Pipeline.dupKey, partitionCols = Seq("match"))
-          // materialize ONCE: mergeUpsertKeyed evaluates its source plan
-          // several times (dup-key guard, partition-tuple collect,
-          // anti-join keys, final write) — an unmaterialized silver would
-          // re-run the whole enrichment per pass
-          val silver = Enrich.transformWith(spark, bronze, dims())
-            .localCheckpoint(true)
-          try gio.Tables.mergeUpsertKeyed(spark, silver, silverPath,
-            keys = Seq("match", "innings", "over", "ball", "rebowl"),
-            partitionCols = Seq("match", "innings"))
-          finally Ckpt.free(silver)
-        } finally Ckpt.free(bronze)
-      }
-    }
+  }
 
   /** T1: watch `rawDir` for new CSV snapshots and upsert bronze+silver
     * per micro-batch. `AvailableNow` drains everything unprocessed and
@@ -221,20 +184,16 @@ object Incremental {
     * polling loop, ex_match_raw.py:270-271). */
   def run(spark: SparkSession, rawDir: String, meta: DataFrame,
           bronzePath: String, silverPath: String, checkpoint: String,
-          players: Option[DataFrame] = None,
-          mergeMode: Boolean = false): StreamingQuery = {
+          players: Option[DataFrame] = None): StreamingQuery = {
     val stream = spark.readStream
       .option("header", "true")
       .schema(Schemas.rawBall)
       .csv(rawDir)
-    val upsert: (SparkSession, DataFrame, DataFrame, String, String,
-      Option[DataFrame]) => Unit =
-      if (mergeMode) processBatchMerge else processBatch
     stream.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsert(spark, batch, meta, bronzePath, silverPath, players)
+        processBatch(spark, batch, meta, bronzePath, silverPath, players)
       }
       .start()
   }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.graftprobe.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerUnpersistRDD}
@@ -47,6 +48,23 @@ class IncrementalSpec extends SparkSpec {
         "bowling_team", "wicket_method")
       .collect().map(_.mkString("|")).sorted.toSeq
 
+  private def bronzeSummary(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select("match", "innings", "over", "ball", "rebowl", "runs",
+        "total_runs", "wicket", "wicket_method")
+      .collect().map(_.mkString("|")).sorted.toSeq
+
+  /** The files stored for match `m` under each table root, by their
+    * path relative to it: `match=m/…` (bronze), `match=m/innings=…/…`
+    * (silver). */
+  private def storedFiles(m: String, tables: String*): Set[String] =
+    tables.flatMap { t =>
+      val dir = Paths.get(s"$t/match=$m")
+      val walk = Files.walk(dir)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => Paths.get(t).relativize(f).toString).toList
+      finally walk.close()
+    }.toSet
+
   test("two incremental drains == one batch run; duplicate redelivery is a no-op") {
     val base = Files.createTempDirectory("graft-incr").toString
     val rawDir = s"$base/raw"; Files.createDirectories(Paths.get(rawDir))
@@ -63,6 +81,14 @@ class IncrementalSpec extends SparkSpec {
       .awaitTermination()
     val afterFirst = spark.read.parquet(silverPath)
     assert(afterFirst.select("match").distinct().count() === firstHalf.size.toLong)
+    // the first-half matches drain 2 does not re-deliver
+    val untouched = firstHalf.tail
+    assert(untouched.nonEmpty)
+    val untouchedFiles = untouched.map(m => m -> storedFiles(m, bronzePath, silverPath)).toMap
+    untouchedFiles.foreach { case (m, files) =>
+      assert(files.exists(_.startsWith(s"match=$m/part-")), s"$m: no bronze files")
+      assert(files.exists(_.startsWith(s"match=$m/innings=")), s"$m: no silver files")
+    }
 
     // drain 2: rest of the season + a re-delivered duplicate of match 1
     writeMatchCsvs(rawDir + "/", secondHalf)
@@ -76,132 +102,19 @@ class IncrementalSpec extends SparkSpec {
     val batch = Pipeline.toSilver(spark, Pipeline.toBronze(rawAll), meta)
 
     assert(silverSummary(incremental) === silverSummary(batch))
+    // stored bronze equals the batch bronze over every landed file,
+    // the re-delivered duplicate included
+    assert(bronzeSummary(spark.read.parquet(bronzePath)) ===
+      bronzeSummary(Pipeline.toBronze(graft.io.Tables.readRawBallCsv(spark, rawDir))))
+    // drain 2 rewrote neither table's partitions of the matches it did
+    // not deliver: the same files, by name
+    untouched.foreach(m =>
+      assert(storedFiles(m, bronzePath, silverPath) === untouchedFiles(m), s"$m was rewritten"))
 
     // drain 3: nothing new → silver unchanged (idempotence)
     Incremental.run(spark, rawDir, meta, bronzePath, silverPath, ckpt)
       .awaitTermination()
     assert(silverSummary(spark.read.parquet(silverPath)) === silverSummary(batch))
-  }
-
-  test("keyed MERGE upsert: re-delivered MODIFIED row updates in place") {
-    import spark.implicits._
-    val path = Files.createTempDirectory("graft-merge").toString + "/t"
-
-    // initial table: 2 partitions, 2 rows each, keyed by (part, id)
-    val initial = Seq(
-      ("p1", 1L, "a", 10), ("p1", 2L, "b", 20),
-      ("p2", 3L, "c", 30), ("p2", 4L, "d", 40))
-      .toDF("part", "id", "name", "value")
-    graft.io.Tables.mergeUpsertKeyed(spark, initial, path,
-      keys = Seq("part", "id"), partitionCols = Seq("part"))
-
-    val untouchedFiles = Files.list(Paths.get(s"$path/part=p2")).toArray.toSet
-
-    // merge batch: id=1 re-delivered MODIFIED + id=9 brand new, both p1
-    val batch = Seq(("p1", 1L, "a2", 11), ("p1", 9L, "z", 90))
-      .toDF("part", "id", "name", "value")
-    graft.io.Tables.mergeUpsertKeyed(spark, batch, path,
-      keys = Seq("part", "id"), partitionCols = Seq("part"))
-
-    val after = spark.read.parquet(path)
-      .select("part", "id", "name", "value").as[(String, Long, String, Int)]
-      .collect().sortBy(_._2).toSeq
-    assert(after === Seq(
-      ("p1", 1L, "a2", 11), // updated in place, not duplicated
-      ("p1", 2L, "b", 20),
-      ("p2", 3L, "c", 30), ("p2", 4L, "d", 40),
-      ("p1", 9L, "z", 90)).sortBy(_._2))
-
-    // the untouched partition's files were not rewritten
-    assert(Files.list(Paths.get(s"$path/part=p2")).toArray.toSet === untouchedFiles)
-
-    // idempotence: re-merging the identical batch is a no-op
-    graft.io.Tables.mergeUpsertKeyed(spark, batch, path,
-      keys = Seq("part", "id"), partitionCols = Seq("part"))
-    assert(spark.read.parquet(path).count() === 5)
-
-    // an EMPTY batch is a no-op, not a crash
-    graft.io.Tables.mergeUpsertKeyed(spark, batch.limit(0), path,
-      keys = Seq("part", "id"), partitionCols = Seq("part"))
-    assert(spark.read.parquet(path).count() === 5)
-
-    // a key shape that could silently duplicate moved rows is rejected
-    intercept[IllegalArgumentException] {
-      graft.io.Tables.mergeUpsertKeyed(spark, batch, path,
-        keys = Seq("id"), partitionCols = Seq("part"))
-    }
-
-    // duplicate SOURCE keys fail fast (Delta MERGE multi-match
-    // semantics) — the union would otherwise store BOTH rows
-    val dupBatch = Seq(("p1", 1L, "first", 1), ("p1", 1L, "second", 2))
-      .toDF("part", "id", "name", "value")
-    intercept[IllegalArgumentException] {
-      graft.io.Tables.mergeUpsertKeyed(spark, dupBatch, path,
-        keys = Seq("part", "id"), partitionCols = Seq("part"))
-    }
-    // and the failed merge left the table untouched
-    assert(spark.read.parquet(path).count() === 5)
-  }
-
-  test("keyed MERGE upsert: null key/partition values update, not duplicate") {
-    import spark.implicits._
-    val path = Files.createTempDirectory("graft-merge-null").toString + "/t"
-    val initial = Seq((Option("p1"), 1L, 10), (Option.empty[String], 2L, 20))
-      .toDF("part", "id", "value")
-    graft.io.Tables.mergeUpsertKeyed(spark, initial, path,
-      keys = Seq("part", "id"), partitionCols = Seq("part"))
-    // re-deliver the null-partition row modified
-    val batch = Seq((Option.empty[String], 2L, 99)).toDF("part", "id", "value")
-    graft.io.Tables.mergeUpsertKeyed(spark, batch, path,
-      keys = Seq("part", "id"), partitionCols = Seq("part"))
-    val after = spark.read.parquet(path).select("id", "value")
-      .as[(Long, Int)].collect().sortBy(_._1).toSeq
-    assert(after === Seq((1L, 10), (2L, 99)),
-      s"null-keyed row must update in place, got $after")
-  }
-
-  test("merge-mode incremental drain converges to the overwrite mode") {
-    // the alternative T2/T3 formulation — keyed MERGE upsert instead of
-    // dynamic partition overwrite — must produce the SAME stored bronze
-    // and silver tables over the same batch sequence, including a
-    // re-delivered duplicate
-    val base = Files.createTempDirectory("graft-incr-merge").toString
-    val rawDir = s"$base/raw"; Files.createDirectories(Paths.get(rawDir))
-    val (_, meta) = Fixtures.rawSeason(spark)
-    val allMatches = meta.select("short_name").collect().map(_.getString(0)).toSeq
-    val (firstHalf, secondHalf) = allMatches.splitAt(allMatches.size / 2)
-
-    def drainAll(mergeMode: Boolean, tag: String): (String, String) = {
-      val bronzePath = s"$base/bronze_$tag"; val silverPath = s"$base/silver_$tag"
-      val ckpt = s"$base/ckpt_$tag"
-      writeMatchCsvs(rawDir, firstHalf)
-      Incremental.run(spark, rawDir, meta, bronzePath, silverPath, ckpt,
-        mergeMode = mergeMode).awaitTermination()
-      writeMatchCsvs(rawDir, secondHalf)
-      Files.copy(Paths.get(s"$rawDir/${firstHalf.head}.csv"),
-        Paths.get(s"$rawDir/${firstHalf.head}_redelivery.csv"))
-      Incremental.run(spark, rawDir, meta, bronzePath, silverPath, ckpt,
-        mergeMode = mergeMode).awaitTermination()
-      Files.delete(Paths.get(s"$rawDir/${firstHalf.head}_redelivery.csv"))
-      (bronzePath, silverPath)
-    }
-
-    val (bronzeA, silverA) = drainAll(mergeMode = false, "overwrite")
-    val (bronzeB, silverB) = drainAll(mergeMode = true, "merge")
-
-    def bronzeSummary(path: String): Seq[String] =
-      spark.read.parquet(path)
-        .select("match", "innings", "over", "ball", "rebowl", "runs",
-          "total_runs", "wicket", "wicket_method")
-        .collect().map(_.mkString("|")).sorted.toSeq
-    assert(bronzeSummary(bronzeB) === bronzeSummary(bronzeA))
-    assert(silverSummary(spark.read.parquet(silverB)) ===
-      silverSummary(spark.read.parquet(silverA)))
-
-    // and the merge mode agrees with the one-shot batch pipeline
-    val (rawAll, _) = Fixtures.rawSeason(spark)
-    assert(silverSummary(spark.read.parquet(silverB)) ===
-      silverSummary(Pipeline.toSilver(spark, Pipeline.toBronze(rawAll), meta)))
   }
 
   test("bronze dedup is deterministic under input repartitioning") {
@@ -270,25 +183,19 @@ class IncrementalSpec extends SparkSpec {
       override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
         freed.synchronized(freed += e.rddId)
     }
-    // checkpoints per (new store, existing store) batch: overwrite mode
-    // holds bronze; merge mode holds bronze and silver, and each keyed
-    // merge into an existing table holds its merged rows
-    Seq(false -> 2, true -> 6).foreach { case (mergeMode, checkpoints) =>
-      val bronzePath = s"$base/bronze_$mergeMode"; val silverPath = s"$base/silver_$mergeMode"
-      val upsert = if (mergeMode) Incremental.processBatchMerge _ else Incremental.processBatch _
-      val held = spark.sparkContext.getPersistentRDDs.keySet
-      val firstId = spark.sparkContext.emptyRDD[Int].id
-      freed.synchronized(freed.clear())
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        upsert(spark, batch, meta, bronzePath, silverPath, None) // new store
-        upsert(spark, batch, meta, bronzePath, silverPath, None) // existing store
-        ListenerDrain.drain(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      assert(spark.sparkContext.getPersistentRDDs.keySet === held,
-        s"mergeMode=$mergeMode: a checkpoint outlived its micro-batch")
-      assert(freed.synchronized(freed.filter(_ > firstId).toSet.size) === checkpoints)
-    }
+    val bronzePath = s"$base/bronze"; val silverPath = s"$base/silver"
+    val held = spark.sparkContext.getPersistentRDDs.keySet
+    val firstId = spark.sparkContext.emptyRDD[Int].id
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Incremental.processBatch(spark, batch, meta, bronzePath, silverPath) // new store
+      Incremental.processBatch(spark, batch, meta, bronzePath, silverPath) // existing store
+      ListenerDrain.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === held,
+      "a checkpoint outlived its micro-batch")
+    // one checkpoint per batch: its bronze rows
+    assert(freed.synchronized(freed.filter(_ > firstId).toSet.size) === 2)
   }
 
   test("one snapshot of a stored match costs at most 9 Spark jobs") {
