@@ -7,31 +7,7 @@ object Bench {
     // stale blockmgr starved the next run's page cache)
     graft.tools.Scratch.sweepStale()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bounded-id fetches (ANN rerank: vec_id isin over ~nQ·rerankK
-      // scattered ids) must push the real In SET to parquet: above this
-      // threshold Spark degrades In to a [min,max] range, which prunes
-      // no row group over scattered ids — measured at 20M vectors as a
-      // full-corpus cold read per serve (6.7 GiB -> 2.4 GiB with the
-      // set pushed; BASELINE.md r16)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      // ContextCleaner's own periodic driver GC (default 30 min): on a
-      // >1 h at-scale sweep the explicit every-8-queries System.gc()
-      // below still left enough un-reclaimed shuffle scratch on disk to
-      // ENOSPC a 49 GB-headroom box mid-sweep (r14 sf100, the two
-      // embed queries' sort spill landing on top of ~100 queries'
-      // accumulated shuffle files). 2 min keeps reclamation ahead of
-      // accumulation regardless of query cadence.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // JVM/JIT/codegen/parquet-reader warmup so whichever query the map
     // happens to order first doesn't absorb one-time startup cost. The
@@ -73,36 +49,6 @@ object Bench {
       "q_dedup_simhash_pairs", "q_embed_ann_ivf", "q_dedup_clusters",
       "q_bloom_decontaminate", "q_text_lm_score", "q_neardup_prune",
       "q_embed_semdedup", "q_embed_ann_lsh", "q_x3_fuzzy_prefix_join")
-    // Optional explicit skip list (comma-separated query names) for
-    // above-sf0.1 scale runs: the two deliberately-quadratic CONTRAST
-    // queries (see BASELINE.md r9) grow without bound and would bury the
-    // linear-claimed operators' measurement. Skips are RECORDED in the
-    // output JSON — nothing silently disappears; the driver never sets
-    // this, so contract runs always time every query.
-    val skip = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    // SPARK_GRAFT_SINGLE=1: one timed run per query, no medians/primes —
-    // for the very large scale factors (sf100's heavy queries run
-    // minutes each; a median-of-3 + prime would take hours for numbers
-    // whose purpose is order-of-magnitude scaling ratios). The driver
-    // never sets this, so contract runs keep the median discipline.
-    val single = sys.env.get("SPARK_GRAFT_SINGLE").contains("1")
-    // SPARK_GRAFT_FORK: run the named queries (or the whole heavy set,
-    // value "heavy") each in a FRESH FORKED JVM via BenchOne instead of
-    // the shared session. The r14 sweep showed the shared 90-minute
-    // JVM's per-query numbers swing 2-4x on byte-identical code
-    // (accumulated scratch/GC/page-cache interference) — exactly how a
-    // real regression hides. A forked number is a fresh-JVM steady
-    // (the only per-query figure comparable round-over-round at sf100)
-    // at the cost of ~30 s JVM+warmup overhead per forked query, which
-    // is OUTSIDE the timed window. The driver never sets this, so
-    // contract runs are unchanged.
-    val forkSet: Set[String] = sys.env.get("SPARK_GRAFT_FORK") match {
-      case Some("heavy") => heavy
-      case Some(s) => s.split(",").map(_.trim).filter(_.nonEmpty).toSet
-      case None => Set.empty
-    }
     // a failing query must be VISIBLE in the output, not silently timed
     // as a fast success deflating the total
     val failed = scala.collection.mutable.SortedSet[String]()
@@ -119,18 +65,11 @@ object Bench {
     // (sf100 read 0.12–0.3 s for 5M-doc signature passes), and even
     // agg queries dropped unreferenced aggregate expressions and
     // top-level sorts. The noop sink evaluates every output row
-    // end-to-end (sorts included) at zero sink cost. The old action
-    // stays behind SPARK_GRAFT_FORCE=count for like-for-like A/Bs
-    // against pre-r12 artifacts; the config JSON records which ran.
-    val force = sys.env.getOrElse("SPARK_GRAFT_FORCE", "noop")
+    // end-to-end (sorts included) at zero sink cost.
     def once(name: String,
              fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try {
-        val df = fn(spark, sfDir)
-        if (force == "count") { df.count(); () }
-        else df.write.format("noop").mode("overwrite").save()
-      }
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case t: Throwable =>
         failed += name
         failMsg.getOrElseUpdate(name,
@@ -146,7 +85,6 @@ object Bench {
     // its first real-scale execution, and a median of 3 cold runs is
     // still cold.
     val (lightQ, heavyQ) = SparkEntry.queries
-      .filter { case (n, _) => !skip(n) }
       .partition { case (n, _) => !heavy(n) }
     // Light queries report a MEDIAN of 3 too (first run doubles as the
     // prime — the median discards it if slow): a single timed run in the
@@ -159,7 +97,7 @@ object Bench {
     def median3(name: String,
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val r1 = once(name, fn)
-      if (single || failed(name)) r1
+      if (failed(name)) r1
       else Seq(r1, once(name, fn), once(name, fn))
         .sorted(Ordering.Double.TotalOrdering)(1)
     }
@@ -174,39 +112,6 @@ object Bench {
     // costs seconds itself.
     var sinceGc = 0
     def maybeGc(): Unit = { sinceGc += 1; if (sinceGc >= 8) { sinceGc = 0; System.gc() } }
-    // fresh-JVM measurement of one query: fork BenchOne with this JVM's
-    // exact flags/classpath/env, parse its per-run lines, median them.
-    // A child failure is recorded like an in-process one.
-    def forkOne(name: String): Double = {
-      import scala.jdk.CollectionConverters._
-      val javaBin = System.getProperty("java.home") + "/bin/java"
-      val jvmArgs = java.lang.management.ManagementFactory
-        .getRuntimeMXBean.getInputArguments.asScala.toSeq
-      val cmd = Seq(javaBin) ++ jvmArgs ++
-        Seq("-cp", System.getProperty("java.class.path"),
-          "graft.BenchOne", name)
-      val pb = new ProcessBuilder(cmd.asJava)
-      pb.environment().put("SPARK_GRAFT_RUNS", if (single) "1" else "3")
-      pb.redirectErrorStream(false)
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      val p = pb.start()
-      val out = scala.io.Source.fromInputStream(p.getInputStream, "UTF-8")
-        .getLines().toList
-      val rc = p.waitFor()
-      val times = out.flatMap { l =>
-        val m = s"\\[benchone\\] \\Q$name\\E run \\d+: ([0-9.]+) s".r
-          .findFirstMatchIn(l)
-        m.map(_.group(1).toDouble)
-      }
-      if (rc != 0 || times.isEmpty) {
-        failed += name
-        failMsg.getOrElseUpdate(name,
-          s"fork rc=$rc: ${out.lastOption.getOrElse("")}"
-            .replaceAll("[\\x00-\\x1f\"\\\\]", " ").take(300))
-        System.err.println(s"[bench] $name FORK FAILED rc=$rc")
-        0.0
-      } else times.sorted.apply(times.size / 2)
-    }
     // per-query progress on stderr: a sweep cut by wall-clock (the r15
     // sf100 incident — ~75 min of a ~2.5 h sweep lost with no partial
     // data, Bench's JSON prints only at the end) still leaves every
@@ -221,17 +126,12 @@ object Bench {
     }
     val lightResults = lightQ.map { case (name, fn) =>
       maybeGc()
-      name -> progress(name,
-        if (forkSet(name)) forkOne(name) else median3(name, fn))
+      name -> progress(name, median3(name, fn))
     }
     val heavyResults = heavyQ.map { case (name, fn) =>
       maybeGc()
-      if (forkSet(name)) name -> progress(name, forkOne(name))
-      else {
-        if (!single) once(name, fn) // untimed prime
-        name -> progress(name,
-          if (failed(name)) 0.0 else median3(name, fn))
-      }
+      once(name, fn) // untimed prime
+      name -> progress(name, if (failed(name)) 0.0 else median3(name, fn))
     }
     val results = lightResults ++ heavyResults
     // per-query seconds rounded to 3 decimals (r17 verdict #5/#6): the
@@ -248,7 +148,6 @@ object Bench {
     val failMsgJson = failMsg
       .map { case (k, v) => s"\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
-    val skippedJson = skip.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // record the MEASUREMENT CONFIG in the artifact: the r11 sf100
     // sweep ran at 32 shuffle partitions (~19M rows/partition through
@@ -256,12 +155,12 @@ object Bench {
     // in-bench numbers looked like plan regressions instead of a
     // measurement setting
     val shufp = spark.conf.get("spark.sql.shuffle.partitions")
+    val cpus = spark.sparkContext.defaultParallelism
     val heapGb = Runtime.getRuntime.maxMemory / (1 << 30)
-    val forkJson = forkSet.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val config =
-      s"""{"shuffle_partitions":$shufp,"cpus":"$cpus","heap_gb":$heapGb,"single":$single,"force":"$force","fork":$forkJson}"""
+      s"""{"shuffle_partitions":$shufp,"cpus":"$cpus","heap_gb":$heapGb}"""
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"fail_msgs":$failMsgJson,"skipped":$skippedJson,"config":$config,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"fail_msgs":$failMsgJson,"config":$config,"sf":"$sfDir"}"""
     val totalOnly =
       s"""{"metric":"total_only","value":$total,"unit":"sec","n_queries":${results.size},"failed":$failedJson}"""
     // The harness keeps only the TAIL of this process's output and the

@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     graft.tools.Scratch.sweepStale() // drop crashed runs' dead scratch first
-    // identical session config to Bench, so a BenchOne timing/row-count
+    // the same session as Bench, so a BenchOne timing/row-count
     // reproduces Bench instead of measuring a config delta
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4") // same default as Bench
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bounded-id fetches (ANN rerank: vec_id isin over ~nQ·rerankK
-      // scattered ids) must push the real In SET to parquet: above this
-      // threshold Spark degrades In to a [min,max] range, which prunes
-      // no row group over scattered ids — measured at 20M vectors as a
-      // full-corpus cold read per serve (6.7 GiB -> 2.4 GiB with the
-      // set pushed; BASELINE.md r16)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session("graft-benchone")
     spark.sparkContext.setLogLevel("ERROR")
     val name = args(0)
     val fn = SparkEntry.queries(name)
@@ -35,14 +20,11 @@ object BenchOne {
     // row count from ONE untimed pruned pass (sanity + per-query
     // prime); timed runs force FULL output evaluation through the
     // noop sink, matching Bench (r12 — .count() let Catalyst prune
-    // the computed columns; see Bench.scala). SPARK_GRAFT_FORCE=count
-    // restores the old action for A/Bs against pre-r12 numbers.
-    val force = sys.env.getOrElse("SPARK_GRAFT_FORCE", "noop")
+    // the computed columns; see Bench.scala)
     val rows = fn(spark, sfDir).count()
     (1 to runs).foreach { i =>
       val t0 = System.nanoTime()
-      if (force == "count") { fn(spark, sfDir).count(); () }
-      else fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       println(f"[benchone] $name run $i: ${(System.nanoTime()-t0)/1e9}%.2f s ($rows rows)")
     }
     spark.stop()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.io.Tables
 
 /** Operational batch entry point — the one-command replacement for the
@@ -20,17 +19,7 @@ object RunPipeline {
     require(args.length >= 3,
       "usage: RunPipeline <rawCsvDirOrFile> <metaJson> <outDir> [playersNdjson]")
     val Array(rawPath, metaPath, outDir) = args.take(3)
-    // SPARK_GRAFT_CPUS means the same here as in Verify/Bench: local
-    // cores AND shuffle partitions (SPARK_MASTER overrides the master
-    // for cluster submission)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = Session("graft-pipeline")
     try {
       val raw = Tables.readRawBallCsv(spark, rawPath)
       val meta = Tables.readMetaJson(spark, metaPath)

@@ -9,8 +9,9 @@ object SparkEntry {
   /** Flagship: the full medallion pipeline (raw ball events → bronze
     * event-decode + innings sessionization → silver enrichment → gold
     * standings) over the deterministic synthetic season. Exercises scan,
-    * when-chain decode, window sessionization, broadcast meta join,
-    * keyed dedup, groupBy, outer join, window rank and sort in one plan.
+    * when-chain decode, window sessionization, broadcast-variable meta
+    * lookup, keyed dedup, groupBy, outer join, window rank and sort in
+    * one plan.
     */
   def entry(spark: SparkSession): DataFrame = {
     val (raw, meta) = Fixtures.rawSeason(spark)

@@ -63,7 +63,7 @@ object TextAnalysis {
     * [[wordNgrams]]' per-element lambda, which evaluates interpreted
     * (higher-order transform) and allocates the full gram-string array
     * per document. At corpus scale gram-stream PRODUCTION dominates
-    * every decontamination/LM consumer (measured 12× in ProbeStages),
+    * every decontamination/LM consumer (measured 12×, BASELINE.md),
     * so stream consumers use this; [[wordNgrams]] remains for
     * array-shaped consumers (per-doc lambdas, streaming filters). Emits
     * nothing for docs with fewer than n tokens — same contract as
@@ -142,7 +142,7 @@ object TextAnalysis {
     * monotone ranking as N/df-based IDF for per-document top-k).
     *
     * Scale shape — the r5 three-pass form, KEPT against the "obvious"
-    * r12 improvement on measured evidence (BASELINE.md r12, ProbeTfidf
+    * r12 improvement on measured evidence (BASELINE.md r12,
     * in-JVM A/B at sf100: this shape 96.8 s vs ~450-540 s for every
     * variant that rides len on the tf key): one exploded word stream
     * feeds three narrow aggregates (tf, per-doc len, distinct df) and
@@ -212,7 +212,7 @@ object TextAnalysis {
     * cross that near ~3·10¹³ training tokens, so beyond ~10¹³ tokens
     * lower the 1e8 scale factor a decade per decade of corpus.
     *
-    * Scaling evidence (r13, BASELINE.md / ProbeLmZipf): the r10–r12
+    * Scaling evidence (BASELINE.md r13): the r10–r12
     * "GenScale vocabulary diversification erodes the collapse" theory
     * for the apparent sf10→sf100 superlinearity was measured and
     * REFUTED — the suffix corpus's vocabulary is small (3.1k unigrams

@@ -120,9 +120,7 @@ object Dedup {
 
   /** Candidate pairs of the prefix-filtered Jaccard join: each
     * qualifying pair exactly once, every bound applied MAP-SIDE inside
-    * the join stage, before the pair shuffle. Shared by [[jaccardPairs]]
-    * and the at-scale probe ([[graft.tools.ProbeJaccard]]) so the two
-    * can't drift.
+    * the join stage, before the pair shuffle. Used by [[jaccardPairs]].
     *
     * Four conjoined *necessary* conditions, each lossless (r12 — the
     * full ppjoin family, Xiao et al. WWW'08):
@@ -151,9 +149,7 @@ object Dedup {
     *
     * `positional = false` selects [[jaccardCandidatesSymmetric]] — the
     * r11 shape (symmetric probe prefixes, no bound) kept as the
-    * like-for-like A/B baseline behind ProbeJaccard's SPARK_GRAFT_AB
-    * and the pruning spec's superset check; production callers never
-    * pass it. */
+    * pruning spec's reference; production callers never pass it. */
   private[graft] def jaccardCandidates(pfx: DataFrame, threshold: Double,
                                        salts: Int = 1,
                                        positional: Boolean = true): DataFrame = {
@@ -214,9 +210,8 @@ object Dedup {
   }
 
   /** The r11 symmetric probe×probe shape without the positional bound —
-    * kept ONLY as the like-for-like A/B baseline behind
-    * `jaccardCandidates(positional = false)` (ProbeJaccard's
-    * SPARK_GRAFT_AB run and the pruning spec's superset check). */
+    * kept ONLY as the pruning spec's reference, behind
+    * `jaccardCandidates(positional = false)`. */
   private def jaccardCandidatesSymmetric(pfx: DataFrame, threshold: Double,
                                          salts: Int): DataFrame = {
     val a = pfx.select(col("doc_id").as("doc_a"), col("lang"),
@@ -540,7 +535,6 @@ object Dedup {
     var prevSum = initSum
     var round = 0
     var converged = false
-    val ccTrace = sys.env.contains("GRAFT_CC_TRACE")
     // Convergence probe selection (r18, the r17 verdict's #2). The label
     // sum detects a fixpoint one full round AFTER the labels stop moving:
     // the last CHANGING round produces the final labels, and only the
@@ -570,7 +564,6 @@ object Dedup {
     }
     while (!converged) {
       round += 1
-      val t0 = if (ccTrace) System.nanoTime() else 0L
       require(round <= maxRounds, s"CC did not converge in $maxRounds rounds")
       // Round 1 is join-free (r12, the hash-to-min initialization): the
       // labels are still the identity (label(src) == src for every
@@ -659,8 +652,6 @@ object Dedup {
         oldCkpt.foreach(Ckpt.free)
       }
       if (wasBig) System.gc() // release the round's shuffle files (see above)
-      if (ccTrace) System.err.println(
-        f"[cc] round $round: ${(System.nanoTime() - t0) / 1e9}%.2f s, edges=$edgeCount converged=$converged")
     }
     labels.join(docs.select("doc_id").distinct(), "doc_id")
       .select(col("doc_id"), col("label").as("cluster_id"))
@@ -737,11 +728,12 @@ object Dedup {
     minhashStages(docs, threshold, bands, rows).verified
 
   /** The [[minhashLshPairs]] pipeline with its stage frames exposed —
-    * the production query is `verified`; the earlier frames exist so a
-    * probe (tools/ProbeMinhash) can time/count each stage with the
-    * exact production payload and predicates instead of a drifting
-    * re-derivation. Constructing this EAGERLY computes the signature
-    * stage (the localCheckpoint), same as the fused operator. */
+    * the production query is `verified`; the earlier frames let a
+    * measurement time/count each stage with the exact production
+    * payload and predicates instead of a drifting re-derivation
+    * (BASELINE.md r13). Constructing this EAGERLY computes the
+    * signature stage (the localCheckpoint), same as the fused
+    * operator. */
   private[graft] case class MinhashStages(
       sigs: DataFrame,        // checkpointed (doc_id, sig, htoks, bhs)
       candidates: DataFrame,  // canonical-occurrence pairs + payload
@@ -801,7 +793,7 @@ object Dedup {
     // SAME `>= threshold` filter — the emitted row set is identical to
     // the plain kernel's (property-pinned in LlmOperatorsSpec; r13
     // sf100 A/B in BASELINE.md). `boundedVerify = false` keeps the
-    // plain kernel reachable for that A/B (ProbeMinhash `verify`).
+    // plain kernel reachable for that property spec.
     val inter =
       if (boundedVerify) graft.plans.SortedIntersectBounded
         .boundedCol(docs.sparkSession, col("x.htoks"), col("y.htoks"),

@@ -1125,9 +1125,9 @@ object Similarity {
     // default inFilterThreshold (10) a >10-id In is pushed as the
     // degenerate [min,max] range, which over scattered candidate ids
     // prunes nothing — measured cold at 20M vectors as a full-corpus
-    // read per serve (ProbeFunnel r16: 6.7 GiB -> 2.4 GiB once the
-    // session raises the threshold past nQueries·rerankK; the graft
-    // session builders set 1024, and [[warnInOverflow]] flags a
+    // read per serve (BASELINE.md r16: 6.7 GiB -> 2.4 GiB once the
+    // session raises the threshold past nQueries·rerankK; graft.Session
+    // sets 1024, and [[warnInOverflow]] flags a
     // geometry that outgrows the session's setting)
     warnInOverflow(spark, rerankIds.size, "ivfTopKFromIndexInt8 rerank fetch")
     val exact = v.where(col("vec_id").isin(rerankIds: _*))
@@ -1240,9 +1240,9 @@ object Similarity {
     // default inFilterThreshold (10) a >10-id In is pushed as the
     // degenerate [min,max] range, which over scattered candidate ids
     // prunes nothing — measured cold at 20M vectors as a full-corpus
-    // read per serve (ProbeFunnel r16: 6.7 GiB -> 2.4 GiB once the
-    // session raises the threshold past nQueries·rerankK; the graft
-    // session builders set 1024, and [[warnInOverflow]] flags a
+    // read per serve (BASELINE.md r16: 6.7 GiB -> 2.4 GiB once the
+    // session raises the threshold past nQueries·rerankK; graft.Session
+    // sets 1024, and [[warnInOverflow]] flags a
     // geometry that outgrows the session's setting)
     warnInOverflow(spark, rerankIds.size,
       "ivfTopKFromIndexFunnel rerank fetch")

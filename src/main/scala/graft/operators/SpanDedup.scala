@@ -42,13 +42,13 @@ import graft.functions.TextAnalysis
   *    spilled its hash tables and rebuilt the gram stream for the
   *    join (the agg-side exchange contains the partial agg, so
   *    ReuseExchange can't unify it with the join-side exchange);
-  *    the window shape measured 5.2× faster there (ProbeSpan r14:
+  *    the window shape measured 5.2× faster there (BASELINE.md r14:
   *    94.2 s vs 493.0 s for the same marking answer). WindowExec
   *    buffers one gh-group at a time in a spillable array, so a
   *    pathological million-occurrence gram degrades to a serialized
   *    single-task spillable sort, not OOM — measured at 10⁷
   *    occurrences: +45 s wall on a 14-19 s sf10 query, straggler
-  *    task ~29 s ≈ 360k occurrences/s (ProbeSpanSkew r15). Above
+  *    task ~29 s ≈ 360k occurrences/s (BASELINE.md r15). Above
   *    ~2¹⁹ occurrences the HOT-GRAM GUARD salts the window key: a
   *    1-in-[[HotGramStride]] occurrence sample flags
   *    certain-duplicate heavy hitters, whose occurrences then spread
@@ -94,7 +94,7 @@ object SpanDedup {
     * count (every sampled occurrence is real — no false "duplicate"
     * possible) and expected true count ≳ stride·minSampled ≈ 2¹⁹ —
     * past the point where its serialized single-task window sort is
-    * worth routing around (ProbeSpanSkew: 10.4M occurrences sort at
+    * worth routing around (BASELINE.md r15: 10.4M occurrences sort at
     * ~360k occ/s in one task ⇒ ~29 s straggler; below ~2¹⁹ the
     * straggler is ≤ ~1.5 s, cheaper than the detour). Hot grams are
     * certain duplicates, so their window key gains a salt (see
@@ -134,13 +134,13 @@ object SpanDedup {
     pipeline(toks, l, useWindow = nGrams >= WindowShapeMinGrams)
   }
 
-  /** Shape-forced variant — the test/probe seam that pins both
-    * marking shapes to the identical answer (SpanDedupSpec) and lets
-    * ProbeSpanSkew measure each under a hot gram. `hotStride`/
-    * `hotMinSampled` override the hot-gram guard so specs can trigger
-    * it on tiny corpora (stride 1 samples everything) and probes can
-    * disable it (`hotMinSampled = Long.MaxValue`) to measure the raw
-    * window shape. */
+  /** Shape-forced variant — the test/measurement seam that pins both
+    * marking shapes to the identical answer (SpanDedupSpec) and lets a
+    * measurement time each under a hot gram (BASELINE.md r15).
+    * `hotStride`/`hotMinSampled` override the hot-gram guard so specs
+    * can trigger it on tiny corpora (stride 1 samples everything) and
+    * measurements can disable it (`hotMinSampled = Long.MaxValue`) to
+    * measure the raw window shape. */
   private[graft] def removeDuplicateSpansShape(docs: DataFrame, l: Int,
       useWindow: Boolean, hotStride: Int = HotGramStride,
       hotMinSampled: Long = HotGramMinSampled): DataFrame = {

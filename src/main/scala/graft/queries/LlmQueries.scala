@@ -731,7 +731,7 @@ object LlmQueries {
     // one hash exchange (no RangePartitioner sampling pass), each
     // shard one internally-sorted file; concat in boundary order ≡
     // this global sort (ShardedPairsSpec pins it; sf100 A/B in
-    // BASELINE.md r15 via tools/ProbeShards). The oracle keeps the
+    // BASELINE.md r15). The oracle keeps the
     // orderBy because the harness compares one hash, not a sharded
     // layout.
     Q("q_dedup_minhash_lsh",

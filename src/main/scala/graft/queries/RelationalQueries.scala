@@ -871,7 +871,7 @@ object RelationalQueries {
       (s, dir) => {
         // the time dimension is stored as DATE: the corpus's shipdates
         // are all midnight (lossless), and two reader-side findings
-        // (ProbeZorder, BASELINE.md r13) make the type choice part of
+        // (BASELINE.md r13) make the type choice part of
         // the layout design — (a) an LTZ literal against the NTZ
         // column casts the COLUMN and un-pushes the filter; (b) even
         // PUSHED TimestampNTZ predicates never row-group-skip in this

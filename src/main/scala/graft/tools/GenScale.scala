@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for BENCH runs above the driver-provided scale
@@ -27,57 +27,7 @@ import org.apache.spark.sql.functions._
   */
 object GenScale {
 
-  /** Zipfian-vocabulary documents variant (`GenScale zipfdocs <src>
-    * <out> [vocab]`): every doc keeps its token COUNT but each token is
-    * redrawn from a FIXED `vocab`-word pool with Zipf(1) weights —
-    * rank = ⌊V^u⌋ for a deterministic per-(doc, position) uniform u
-    * (inverse-CDF sampling: P(rank ≤ r) = ln r / ln V). This is the
-    * distribution the bigramLmScores occurrence-collapse was designed
-    * for: a natural corpus's vocabulary grows ~Heaps-slowly, so the
-    * distinct-unigram/bigram tables stay far below the occurrence
-    * stream. The suffix-rewrite scaling above deliberately DIVERSIFIES
-    * vocabulary per replica (×factor per level — right for keeping
-    * dedup answers linear, wrong as an lm_score workload), which is
-    * the r10-r12 explanation for that query's superlinear residual —
-    * this variant exists to measure the claim instead of arguing it
-    * (BASELINE.md r13). Only documents.parquet is written. */
-  def zipfDocs(spark: SparkSession, src: String, out: String,
-               vocab: Int): Unit = {
-    import graft.operators.Sampling
-    val docs = spark.read.parquet(s"$src/documents.parquet")
-    val nToks = size(split(trim(col("text")), "\\s+"))
-    val toks = transform(sequence(lit(0), greatest(nToks, lit(1)) - 1),
-      i => {
-        // u on a 1/10⁶ grid (portableBucket granularity) — fine enough
-        // that ~min(vocab, 10⁶/lnV) ranks actually occur
-        val u = (Sampling.portableBucket(
-            col("doc_id") * lit(1000003L) + i.cast("long") * lit(7919L),
-            23, 1000000).cast("double") + lit(0.5)) / lit(1000000.0)
-        concat(lit("w"),
-          greatest(lit(1.0), floor(pow(lit(vocab.toDouble), u)))
-            .cast("long").cast("string"))
-      })
-    docs.withColumn("text", concat_ws(" ", toks))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .repartition(8)
-      .write.mode("overwrite").parquet(s"$out/documents.parquet")
-    println(s"zipf-rewrote $src/documents.parquet (vocab $vocab) -> $out")
-  }
-
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("zipfdocs")) {
-      val spark = SparkSession.builder()
-        .master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      zipfDocs(spark, args(1), args(2),
-        if (args.length > 3) args(3).toInt else 50000)
-      spark.stop()
-      return
-    }
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "testdata-sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
@@ -86,13 +36,7 @@ object GenScale {
     // "data"+r3 at level 2 collides with level-1 "datar3", recreating
     // verbatim cross-replica duplicates and inflating dedup answers
     val tag = if (args.length > 3) args(3) else "r"
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session("graft-genscale")
     spark.sparkContext.setLogLevel("WARN")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")

@@ -178,7 +178,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q_text_tfidf: the measured three-pass shape — bounded window, broadcast N, no cartesian") {
     val plan = executed("q_text_tfidf")
-    // deliberately the r5 three-aggregate form: ProbeTfidf's in-JVM
+    // deliberately the r5 three-aggregate form: the in-JVM
     // sf100 A/B read 96.8 s for this shape vs ~450-540 s for every
     // len-rides-the-tf-key variant (BASELINE.md r12) — recomputing the
     // map-side explode beats widening the aggregate key or round-
@@ -355,7 +355,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(scannedRows("1024") <= 2000L)
     // Spark's default 10: the same query degrades to the [0,9015]
     // range pushdown, which prunes NOTHING over scattered ids — the
-    // full-corpus cold read ProbeFunnel measured at 20M vectors
+    // full-corpus cold read BASELINE.md r16 measured at 20M vectors
     assert(scannedRows("10") === 10000L)
     // and the serve-path guard classifies both regimes: the registry
     // geometries (nQueries·rerankK = 160, ·coarseK = 320) stay under

@@ -123,7 +123,7 @@ class SkewStressSpec extends SparkSpec {
       // of the window stage reads all ~5982 hot occurrences while the
       // ~4000 cold grams spread. The degradation bound is a serialized
       // spillable sort of the hot gram's occurrences, not OOM; the
-      // scaladoc documents it and ProbeSpanSkew measures it at scale.
+      // scaladoc documents it and BASELINE.md r15 measures it at scale.
       assert(maxOverMean(tasks) > 2.0,
         s"expected hot-gram concentration, got spread $tasks")
     }

@@ -1,0 +1,64 @@
+package graft
+
+import java.io.File
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-level guard against config drift: [[graft.Session]] is the one
+  * place under `src/main/scala` that builds a SparkSession, and the
+  * environment is read only for the deployment settings below, so no
+  * query result can depend on an environment variable. Comment lines
+  * are skipped (usage blocks may show a builder). */
+class SourceHygieneSpec extends AnyFunSuite {
+
+  private val root = new File("src/main/scala")
+
+  /** file (relative to `src/main/scala`) → the variables it may read */
+  private val envAllowed = Map(
+    "graft/Session.scala" -> Set("SPARK_GRAFT_CPUS", "SPARK_MASTER"),
+    "graft/Bench.scala" -> Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_RUNS"),
+    "graft/BenchOne.scala" -> Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_RUNS"),
+    "graft/tools/Scratch.scala" -> Set("SPARK_GRAFT_NO_SWEEP"))
+
+  /** (path relative to `src/main/scala`, its lines minus comment
+    * lines). A trailing `// ...` stays, so it can only add a hit. */
+  private lazy val sources: Seq[(String, String)] = {
+    def walk(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    walk(root).map { f =>
+      val rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
+      val code = Files.readAllLines(f.toPath).asScala.filterNot { l =>
+        val t = l.trim
+        t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+      }
+      rel -> code.mkString("\n")
+    }
+  }
+
+  test("SparkSession.builder appears only in graft/Session.scala") {
+    val builders = sources.collect {
+      case (rel, code) if code.contains("SparkSession.builder") => rel
+    }
+    assert(builders === Seq("graft/Session.scala"))
+  }
+
+  test("environment reads are the allow-listed deployment settings only") {
+    val read = "(sys\\.env|System\\.getenv)".r
+    val named =
+      "(?:sys\\.env(?:\\.get|\\.getOrElse|\\.contains|\\.apply)?|System\\.getenv)\\(\\s*\"([A-Z0-9_]+)\"".r
+    val offenders = sources.flatMap { case (rel, code) =>
+      val names = named.findAllMatchIn(code).map(_.group(1)).toSeq
+      // a read whose variable is not a literal cannot be checked
+      val unnamed =
+        if (read.findAllMatchIn(code).size > names.size) Seq(s"$rel: non-literal read")
+        else Nil
+      unnamed ++ names.filterNot(envAllowed.getOrElse(rel, Set.empty[String]))
+        .map(n => s"$rel: $n")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+}

@@ -91,14 +91,19 @@ class StreamIndexAppendSpec extends SparkSpec {
 
     // the many-batch stream accumulated one+ posting file per batch;
     // compaction bounds the file count in ONE committed swap and the
-    // index answers are identical through it (r15 verdict #7). r17:
+    // index answers (postings and served top-k) are identical through
+    // it and the vacuum after it (r15 verdict #7). r17:
     // appends commit at the index ROOT (one manifest governs both
     // families), so compaction runs there — per-parent-dir grouping
     // keeps postings coalescing with postings only
     def postingsFiles: Int = graft.io.Manifest.latest(spark, dir).get
       ._2.count(_.startsWith("postings/"))
+    def served = Similarity.ivfTopKFromIndex(spark, dir, 5, 5)
+      .orderBy("query_id", "rank").collect().toSeq
     val preFiles = postingsFiles
     assert(preFiles >= 3, s"stream should have accumulated files: $preFiles")
+    val preServed = served
+    assert(preServed.nonEmpty)
     graft.io.Manifest.compact(spark, dir, 64L << 20)
     assert(postingsFiles === 1, s"compaction left $postingsFiles files")
     val gotC = graft.io.Manifest.readUnder(spark, dir, Seq("postings")).head
@@ -108,7 +113,7 @@ class StreamIndexAppendSpec extends SparkSpec {
     // vacuum (exercised in anger: reclaims every superseded batch file)
     val reclaimed = graft.io.Manifest.vacuum(spark, dir)
     assert(reclaimed.size >= preFiles - 1, s"vacuum reclaimed $reclaimed")
-    assert(Similarity.ivfTopKFromIndex(spark, dir, 5, 5).count() > 0L)
+    assert(served === preServed, "compaction changed the served answer")
   }
 
   test("replay rail is multiplicity-proof: postings duplicated by a crashed " +

@@ -1,11 +1,11 @@
 #!/usr/bin/env bash
-# Direct JVM launcher for graft mains (Bench/BenchOne/Probe*/GenScale):
+# Direct JVM launcher for graft mains (Bench/BenchOne/GenScale):
 # same classpath and JVM flags as sbt's forked run (build.sbt), without
 # taking the sbt build lock. Usage:
 #   SPARK_DRIVER_MEM=80g tools/run.sh graft.BenchOne q_embed_semdedup
 set -euo pipefail
 CLASSES=/root/repo/target/scala-2.13/classes
-# fail fast on missing/stale bytecode: probes/benches silently measuring
+# fail fast on missing/stale bytecode: benches silently measuring
 # code from before the last edit are worse than no measurement
 if [[ ! -d "$CLASSES" ]]; then
   echo "ERROR: $CLASSES missing — run 'sbt compile' first" >&2
