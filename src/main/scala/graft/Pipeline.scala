@@ -50,11 +50,15 @@ object Pipeline {
                players: Option[DataFrame] = None): DataFrame =
     Enrich.transform(spark, bronze, meta, players)
 
-  /** Silver → the four gold tables (reference: ex_match_sg.py). */
-  def toGold(silver: DataFrame): Map[String, DataFrame] = Map(
-    "gold_batsman_stats" -> GoldTables.batsmanStats(silver),
-    "gold_bowler_stats" -> GoldTables.bowlerStats(silver),
-    "gold_team_stats" -> GoldTables.teamStats(silver),
-    "gold_tournament_standings" -> GoldTables.tournamentStandings(silver),
-  )
+  /** Silver → the four gold tables (reference: ex_match_sg.py), each a
+    * fold over one per-match facts frame: a single silver pass. */
+  def toGold(silver: DataFrame): Map[String, DataFrame] = {
+    val facts = GoldTables.facts(silver)
+    Map(
+      "gold_batsman_stats" -> GoldTables.batsmanStats(facts),
+      "gold_bowler_stats" -> GoldTables.bowlerStats(facts),
+      "gold_team_stats" -> GoldTables.teamStats(facts),
+      "gold_tournament_standings" -> GoldTables.tournamentStandings(facts),
+    )
+  }
 }

@@ -10,8 +10,8 @@ object SparkEntry {
     * event-decode + innings sessionization → silver enrichment → gold
     * standings) over the deterministic synthetic season. Exercises scan,
     * when-chain decode, window sessionization, broadcast-variable meta
-    * lookup, keyed dedup, groupBy, outer join, window rank and sort in
-    * one plan.
+    * lookup, keyed dedup, an explode + groupBy into per-match facts, a
+    * per-match window, window rank and sort.
     */
   def entry(spark: SparkSession): DataFrame = {
     val (raw, meta) = Fixtures.rawSeason(spark)

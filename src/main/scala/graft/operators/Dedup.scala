@@ -725,23 +725,14 @@ object Dedup {
     // BAND REPLICA (8×docs rows) ever did. The fused in-stage shape —
     // payload through ONE reused exchange, dedup/gate/verify map-side —
     // is the right trade at every measured scale; reverted to it.
-    minhashStages(docs, threshold, bands, rows).verified
+    minhashStages(docs, threshold, bands, rows)
 
-  /** The [[minhashLshPairs]] pipeline with its stage frames exposed —
-    * the production query is `verified`; the earlier frames let a
-    * measurement time/count each stage with the exact production
-    * payload and predicates instead of a drifting re-derivation
-    * (BASELINE.md r13). Constructing this EAGERLY computes the
-    * signature stage (the localCheckpoint), same as the fused
-    * operator. */
-  private[graft] case class MinhashStages(
-      sigs: DataFrame,        // checkpointed (doc_id, sig, htoks, bhs)
-      candidates: DataFrame,  // canonical-occurrence pairs + payload
-      gated: DataFrame,       // + signature-agreement estimate gate
-      verified: DataFrame)    // + exact Jaccard ≥ threshold (production)
-
+  /** The [[minhashLshPairs]] pipeline. `boundedVerify = false` swaps
+    * in the plain intersection kernel, the reference the bounded one is
+    * checked against (ArrayExprSpec). Calling it EAGERLY computes the
+    * signature stage (the localCheckpoint). */
   private[graft] def minhashStages(docs: DataFrame, threshold: Double,
-      bands: Int, rows: Int, boundedVerify: Boolean = true): MinhashStages = {
+      bands: Int, rows: Int, boundedVerify: Boolean = true): DataFrame = {
     val numPerm = bands * rows
     val sigUdf = udf { (toks: Seq[String]) => minhashSignature(toks, numPerm) }
     val bandHashUdf = udf { (sig: Seq[Long]) =>
@@ -812,16 +803,14 @@ object Dedup {
     // keeps estimator variance from dropping true pairs
     // (property-tested in LlmOperatorsSpec); the final filter is
     // EXACT Jaccard, so precision is unaffected.
-    val gated = candidates
+    candidates
       .where(estMatches >= lit(math.max(0.0, threshold - 0.15) * numPerm))
-    val verified = gated
       .withColumn("inter", inter)
       .withColumn("jaccard", col("inter").cast("double") /
         (size(col("x.htoks")) + size(col("y.htoks")) - col("inter")))
       .where(col("jaccard") >= threshold)
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
         col("jaccard"))
-    MinhashStages(sigs, candidates, gated, verified)
   }
 
   /** 64-bit SimHash over the word set (unweighted votes). */

@@ -65,10 +65,10 @@ class ArrayExprSpec extends SparkSpec {
     "with either verify kernel") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val bounded = graft.operators.Dedup
-      .minhashStages(docs, 0.9, 8, 8, boundedVerify = true).verified
+      .minhashStages(docs, 0.9, 8, 8, boundedVerify = true)
       .collect().map(_.toString).sorted.toSeq
     val plain = graft.operators.Dedup
-      .minhashStages(docs, 0.9, 8, 8, boundedVerify = false).verified
+      .minhashStages(docs, 0.9, 8, 8, boundedVerify = false)
       .collect().map(_.toString).sorted.toSeq
     assert(bounded.nonEmpty)
     assert(bounded === plain)
