@@ -67,6 +67,20 @@ object LlmQueries {
       |    SUM(CASE WHEN v > 0 THEN (CAST(1 AS HUGEINT) << b) ELSE CAST(0 AS HUGEINT) END) AS u
       |  FROM bits GROUP BY doc_id)""".stripMargin
 
+  /** Build the sf's embeddings into a fresh IVF index `name` under the
+    * warehouse dir and return its path. The staged rebuild (r17) keeps
+    * the previous generation's files for old-snapshot readers; this
+    * bench/verify REBUILD context has none, so they are vacuumed, or
+    * repeat runs into the persistent warehouse would accumulate
+    * superseded generations. */
+  private def freshIndex(s: org.apache.spark.sql.SparkSession, dir: String,
+                         name: String, int8: Boolean): String = {
+    val ix = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") + "/" + name
+    Similarity.buildIvfIndex(embeddings(s, dir), ix, int8 = int8)
+    graft.io.Manifest.vacuum(s, ix)
+    ix
+  }
+
   /** Shared oracle CTE chain replaying [[Similarity.lloydFit]] bit-exact
     * with the registry parameters (auto-sized nLists =
     * `greatest(16, least(16384, n // 1024))` ≡ [[Similarity.autoNLists]],
@@ -1008,23 +1022,14 @@ object LlmQueries {
     // full Lloyd-replay SQL as q_embed_ann_ivf — the hash match proves
     // save → load → serve loses nothing vs the fused operator.
     Q("q_embed_ann_ivf_indexed",
-      (s, dir) => {
-        val ix = s.conf.get("spark.sql.warehouse.dir")
-          .stripSuffix("/") + "/graft_ivf_index"
-        Similarity.buildIvfIndex(embeddings(s, dir), ix)
-        // the staged rebuild (r17) keeps the previous generation's
-        // files for old-snapshot readers; this bench/verify REBUILD
-        // context has none, so reclaim them or repeat runs into the
-        // persistent warehouse accumulate superseded generations
-        graft.io.Manifest.vacuum(s, ix)
-        Similarity.ivfTopKFromIndex(s, ix, 5, 5)
-          .orderBy("query_id", "rank")
-      },
+      (s, dir) => Similarity
+        .ivfTopKFromIndex(s, freshIndex(s, dir, "graft_ivf_index", int8 = false), 5, 5)
+        .orderBy("query_id", "rank"),
       Some(ivfTopKOracleSql)),
 
     // int8-compressed index serving (ADC + full-precision re-rank):
     // same fit/assignment as q_embed_ann_ivf_indexed, but the stored
-    // postings are int8 (Similarity.buildIvfIndexInt8) and the
+    // postings are int8 (Similarity.buildIvfIndex's int8 codec) and the
     // candidate ranking runs on the quantized dot with rerankK=32
     // exact-re-scored survivors — small enough that the int8 ordering
     // is DECISIVE (thousands of candidates per query at sf0.01), so
@@ -1032,15 +1037,10 @@ object LlmQueries {
     // exact tail. Full bit-exact DuckDB replay (every step is integer
     // or order-pinned double arithmetic).
     Q("q_embed_ann_ivf_int8",
-      (s, dir) => {
-        val ix = s.conf.get("spark.sql.warehouse.dir")
-          .stripSuffix("/") + "/graft_ivf_index_q8"
-        Similarity.buildIvfIndexInt8(embeddings(s, dir), ix)
-        graft.io.Manifest.vacuum(s, ix) // reclaim the superseded build
-        Similarity.ivfTopKFromIndexInt8(s, ix, embeddings(s, dir), 5, 5,
-            nProbe = 4, rerankK = 32)
-          .orderBy("query_id", "rank")
-      },
+      (s, dir) => Similarity
+        .ivfTopKFromIndexInt8(s, freshIndex(s, dir, "graft_ivf_index_q8", int8 = true),
+          embeddings(s, dir), 5, 5, nProbe = 4, rerankK = 32)
+        .orderBy("query_id", "rank"),
       Some(ivfInt8OracleSql)),
 
     // The three-tier serving funnel — the actual 100 TB serve shape,
@@ -1053,15 +1053,10 @@ object LlmQueries {
     // end-to-end; DuckDB replays the full chain (Hamming by its
     // definition — count of sign disagreements).
     Q("q_embed_ann_funnel",
-      (s, dir) => {
-        val ix = s.conf.get("spark.sql.warehouse.dir")
-          .stripSuffix("/") + "/graft_ivf_index_funnel"
-        Similarity.buildIvfIndexInt8(embeddings(s, dir), ix)
-        graft.io.Manifest.vacuum(s, ix) // reclaim the superseded build
-        Similarity.ivfTopKFromIndexFunnel(s, ix, embeddings(s, dir), 5, 5,
-            nProbe = 4, coarseK = 64, rerankK = 32)
-          .orderBy("query_id", "rank")
-      },
+      (s, dir) => Similarity
+        .ivfTopKFromIndexInt8(s, freshIndex(s, dir, "graft_ivf_index_funnel", int8 = true),
+          embeddings(s, dir), 5, 5, nProbe = 4, rerankK = 32, coarseK = 64)
+        .orderBy("query_id", "rank"),
       Some(ivfFunnelOracleSql)),
 
     // Three-level (tree) IVF — the beyond-16M-vectors fit
@@ -1077,8 +1072,8 @@ object LlmQueries {
     // (nQueries=25, k=5, nLists=48 → ns=7, cq=7, nProbe=4, iters=2,
     // maxFitRows=4096, seeds 7/17): regenerate if the call changes.
     Q("q_embed_ann_ivf_tree",
-      (s, dir) => Similarity.ivfTopKTree(embeddings(s, dir), 25, 5,
-          nLists = 48)
+      (s, dir) => Similarity.ivfTopK(embeddings(s, dir), 25, 5,
+          nLists = 48, tree = true)
         .orderBy("query_id", "rank"),
       Some(s"""WITH vv AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec,
              |    list_dot_product(CAST(embedding AS DOUBLE[]),

@@ -118,7 +118,11 @@ class HierQuantizerSpec extends SparkSpec {
     }.toDF("vec_id", "vec")
     val lit = df.withColumn("list_id", Similarity.hierArgminCol(df, cents, 2))
       .select("vec_id", "list_id").as[(Long, Int)].collect().toMap
-    val tab = Similarity.hierAssignByTable(df, cents, 2)
+    // literalCap = 0 forces the child-table route (the tree assignment
+    // over the flat children)
+    val tab = Similarity.assignLists(df.withColumn("vv",
+        graft.plans.DotProduct.dotCol(spark, col("vec"), col("vec"))),
+        cents, 2, literalCap = 0)
       .select("vec_id", "list_id")
       .as[(Long, Int)].collect().toMap
     assert(tab.size == 400)

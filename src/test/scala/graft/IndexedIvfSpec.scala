@@ -117,7 +117,7 @@ class IndexedIvfSpec extends SparkSpec {
     val dir = ixDir + "_int8"
     Similarity.buildIvfIndex(emb, ixDir)
     graft.io.Manifest.vacuum(spark, ixDir) // dirBytes below needs live-only
-    Similarity.buildIvfIndexInt8(emb, dir)
+    Similarity.buildIvfIndex(emb, dir, int8 = true)
     graft.io.Manifest.vacuum(spark, dir)
     val full = Similarity.ivfTopKFromIndex(spark, ixDir, 5, 5)
       .orderBy("query_id", "rank").collect().toSeq
@@ -151,7 +151,7 @@ class IndexedIvfSpec extends SparkSpec {
     "serve; generous everywhere equals the full-precision index; " +
     "practical tiers hold recall") {
     val dir = ixDir + "_funnel"
-    Similarity.buildIvfIndexInt8(emb, dir)
+    Similarity.buildIvfIndex(emb, dir, int8 = true)
     val n = emb.count().toInt
     // tier parity rung 1: coarseK >= any per-query candidate count ⇒
     // the 1-bit tier passes everything through ⇒ identical to the int8
@@ -160,7 +160,7 @@ class IndexedIvfSpec extends SparkSpec {
       .ivfTopKFromIndexInt8(spark, dir, emb, 5, 5, rerankK = 32)
       .orderBy("query_id", "rank").collect().toSeq
     val genCoarse = Similarity
-      .ivfTopKFromIndexFunnel(spark, dir, emb, 5, 5, coarseK = n, rerankK = 32)
+      .ivfTopKFromIndexInt8(spark, dir, emb, 5, 5, rerankK = 32, coarseK = n)
       .orderBy("query_id", "rank").collect().toSeq
     assert(genCoarse === int8)
     // rung 2: both caps generous ⇒ every candidate exactly re-scored ⇒
@@ -169,13 +169,13 @@ class IndexedIvfSpec extends SparkSpec {
     val full = Similarity.ivfTopKFromIndex(spark, ixDir, 5, 5)
       .orderBy("query_id", "rank").collect().toSeq
     val genAll = Similarity
-      .ivfTopKFromIndexFunnel(spark, dir, emb, 5, 5, coarseK = n, rerankK = n)
+      .ivfTopKFromIndexInt8(spark, dir, emb, 5, 5, rerankK = n, coarseK = n)
       .orderBy("query_id", "rank").collect().toSeq
     assert(genAll === full)
     // practical caps: every tier's ordering is decisive, recall@5 vs
     // the full-precision index answer stays high
     val practical = Similarity
-      .ivfTopKFromIndexFunnel(spark, dir, emb, 5, 5, coarseK = 64, rerankK = 32)
+      .ivfTopKFromIndexInt8(spark, dir, emb, 5, 5, rerankK = 32, coarseK = 64)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val fullSet = full.map(r => (r.getLong(0), r.getLong(2))).toSet

@@ -6,7 +6,7 @@ import graft.operators.Similarity
 
 /** Pins the three-level (tree) quantizer — distributed super fit +
   * grouped per-super child Lloyd + table-routed corpus assignment
-  * (Similarity.treeFit / treeAssign / ivfTopKTree) — against an
+  * (Similarity.treeFit / treeAssign / ivfTopK with `tree`) — against an
   * independent brute-force reference, plus the contracts that make it
   * the beyond-16M-vectors path: flat-id injectivity, route determinism,
   * the null-vv drop rule, and recall against exact top-k. The sf0.01
@@ -41,7 +41,7 @@ class TreeQuantizerSpec extends SparkSpec {
 
   test("treeFit: flat ids injective and branch-recoverable, returned supers all populated") {
     val v = withVv(corpus(600).toDF("vec_id", "vec"))
-    val (supers, kids) =
+    val Similarity.TreeQuantizer(supers, kids, _) =
       Similarity.treeFit(v, nLists = 12, iters = 2, maxFitRows = 4096L)
     val ns = Similarity.superCount(12)
     val cq = (12 + ns - 1) / ns
@@ -63,7 +63,7 @@ class TreeQuantizerSpec extends SparkSpec {
   test("treeAssign == brute-force reference (nearest populated super, then nearest child of that branch)") {
     val vecs = corpus(500)
     val v = withVv(vecs.toDF("vec_id", "vec"))
-    val (supers, kids) =
+    val Similarity.TreeQuantizer(supers, kids, _) =
       Similarity.treeFit(v, nLists = 12, iters = 2, maxFitRows = 4096L)
     val kidRows = kids.collect().map(r => (r.getInt(0), r.getInt(1),
       r.getSeq[Double](2).toArray, r.getDouble(3))).toSeq
@@ -90,7 +90,7 @@ class TreeQuantizerSpec extends SparkSpec {
       (java.lang.Double.valueOf(1.0) +: Array.fill(dim - 1)(
         null.asInstanceOf[java.lang.Double])).toSeq))
     val v = withVv(dirty.toDF("vec_id", "vec"))
-    val (supers, kids) =
+    val Similarity.TreeQuantizer(supers, kids, _) =
       Similarity.treeFit(v, nLists = 12, iters = 2, maxFitRows = 4096L)
     // no child centroid may carry a null component (the dirty row must
     // not have seeded or shifted any child)
@@ -110,8 +110,8 @@ class TreeQuantizerSpec extends SparkSpec {
     // checkpoint, so downstream consumers (treeAssign's broadcast, the
     // probe cross-join) read blocks instead of re-running the Lloyd fit.
     val v = withVv(corpus(400).toDF("vec_id", "vec"))
-    val (_, kids) = Similarity.treeFit(v, nLists = 12, iters = 2,
-      maxFitRows = 4096L)
+    val kids = Similarity.treeFit(v, nLists = 12, iters = 2,
+      maxFitRows = 4096L).kids
     val rdd = kids.queryExecution.logical match {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
       case other => fail(s"kids is not checkpoint-backed: $other")
@@ -126,8 +126,8 @@ class TreeQuantizerSpec extends SparkSpec {
   test("treeFit is deterministic across runs") {
     val v = withVv(corpus(400).toDF("vec_id", "vec"))
     def run(): (Seq[Int], Set[(Int, Int, Seq[Double], Long)]) = {
-      val (s, k) = Similarity.treeFit(v, nLists = 12, iters = 2,
-        maxFitRows = 4096L)
+      val Similarity.TreeQuantizer(s, k, _) = Similarity.treeFit(v,
+        nLists = 12, iters = 2, maxFitRows = 4096L)
       (s.map(_._1), k.collect().map(r => (r.getInt(0), r.getInt(1),
         r.getSeq[Double](2), java.lang.Double.doubleToLongBits(
           r.getDouble(3)))).toSet)
@@ -137,51 +137,21 @@ class TreeQuantizerSpec extends SparkSpec {
     assert(s1 == s2 && k1 == k2)
   }
 
-  test("ivfTopKTree recall vs exact top-k on the clustered corpus") {
+  test("tree ivfTopK recall vs exact top-k on the clustered corpus") {
     val emb = corpus(500).toDF("vec_id", "embedding")
     val nq = 10
     def pairs(df: DataFrame): Set[(Long, Long)] =
       df.select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val exact = pairs(Similarity.exactTopK(emb, nq, 5))
-    val tree = pairs(Similarity.ivfTopKTree(emb, nq, 5, nLists = 12))
+    val tree = pairs(Similarity.ivfTopK(emb, nq, 5, nLists = 12, tree = true))
     assert(exact.size == nq * 5 && tree.size == nq * 5)
     val recall = (exact & tree).size.toDouble / exact.size
     assert(recall >= 0.8, s"tree IVF recall $recall < 0.8")
   }
 
-  test("semDedupSurvivorsTree == brute-force within-cluster prune over the tree clusters") {
-    val vecs = corpus(400)
-    val emb = vecs.toDF("vec_id", "embedding")
-    val thr = 0.87
-    val got = Similarity.semDedupSurvivorsTree(emb, thr, nLists = 12)
-      .select("vec_id", "list_id").as[(Long, Int)].collect().toMap
-    // reference: identical (deterministic) tree assignment, then prune
-    // every vector with a smaller-id cluster-mate at cos >= thr
-    val v = withVv(vecs.toDF("vec_id", "vec"))
-    val (supers, kids) =
-      Similarity.treeFit(v, nLists = 12, iters = 2, maxFitRows = 4096L)
-    val asg = Similarity.treeAssign(v, supers, kids, nLists = 12)
-      .select("vec_id", "list_id").as[(Long, Int)].collect().toSeq
-    val vecOf = vecs.toMap.map { case (id, s) => id -> s.toArray }
-    val survivors = asg.groupBy(_._2).values.flatMap { cluster =>
-      val sorted = cluster.sortBy(_._1)
-      sorted.filter { case (id, _) =>
-        !sorted.exists { case (other, _) =>
-          other < id && {
-            val a = vecOf(other); val b = vecOf(id)
-            dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))) >= thr
-          }
-        }
-      }
-    }.toMap
-    assert(survivors.size < 400 && survivors.nonEmpty,
-      s"threshold $thr should prune some but not all (kept ${survivors.size})")
-    assert(got == survivors)
-  }
-
   test("corpus assignment carries no k-sized literal: children arrive via a broadcast join") {
     val v = withVv(corpus(300).toDF("vec_id", "vec"))
-    val (supers, kids) =
+    val Similarity.TreeQuantizer(supers, kids, _) =
       Similarity.treeFit(v, nLists = 12, iters = 2, maxFitRows = 4096L)
     val plan = Similarity.treeAssign(v, supers, kids, nLists = 12)
       .queryExecution.executedPlan.toString

@@ -18,7 +18,8 @@ SKIP_RUN = os.environ.get("SKIP_RUN") == "1"
 
 if not SKIP_RUN:
     r = subprocess.run(
-        ["sbt", f'runMain graft.Verify {SF_DIR} {OUT}'],
+        ["sbt", f'runMain graft.Verify {SF_DIR} {OUT}'
+                + (f' {sys.argv[3]}' if ONLY else '')],
         capture_output=True, text=True, cwd="/root/repo")
     tail = "\n".join((r.stdout + r.stderr).splitlines()[-15:])
     if r.returncode != 0:
