@@ -92,7 +92,7 @@ object Tables {
       .where(org.apache.spark.sql.functions.col("Name").isNotNull)
 
   /** S6 — silver/gold table scan. Manifest-resolving ([[Manifest.read]]):
-    * a table published through [[writeGoldAtomic]]/[[Manifest]] is read
+    * a table published through [[Manifest]] is read
     * at its last committed snapshot; any other directory reads plain. */
   def readTable(spark: SparkSession, path: String): DataFrame =
     Manifest.read(spark, path)
@@ -227,21 +227,10 @@ object Tables {
 
   /** S9 — gold full-overwrite sink (ex_match_sg.py:299-315). Plain
     * parquet overwrite: readers concurrent with the write can see a
-    * torn state (the pre-manifest contract). Use [[writeGoldAtomic]]
-    * when readers may overlap writers. */
+    * torn state (the pre-manifest contract). When readers may overlap
+    * writers, publish through [[Manifest.publishOverwrite]] instead. */
   def writeGold(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path)
-
-  /** S9, atomic — gold overwrite published through a [[Manifest]]
-    * commit: a concurrent [[readTable]] reader sees the previous
-    * snapshot until the one-file commit rename, the new one after,
-    * never a mix — the harness-local analogue of the reference's
-    * Delta overwrite atomicity (ex_match_sg.py:299-315). Superseded
-    * files remain until [[Manifest.vacuum]]. */
-  def writeGoldAtomic(df: DataFrame, path: String): Unit = {
-    Manifest.publishOverwrite(df, path)
-    ()
-  }
 
   /** S10 — CSV convenience sink (pipeline_local/to_gold/gld_match.py:317-319). */
   def writeCsv(df: DataFrame, path: String): Unit =

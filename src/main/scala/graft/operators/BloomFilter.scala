@@ -66,7 +66,7 @@ object BloomFilter {
     * only agree off-BMP if we do too. */
   private def withProbes(grams: DataFrame, m: Int): DataFrame =
     grams.withColumn("_h",
-        graft.plans.Cp31Hash.cp31uCol(grams.sparkSession, col("gram")))
+        graft.plans.Cp31Hash.cp31uCol(col("gram")))
       .withColumn("_h1", pmod(col("_h"), lit(m.toLong)))
       .withColumn("_h2", lit(1L) + pmod(expr(s"_h div $m"), lit(m - 1L)))
 

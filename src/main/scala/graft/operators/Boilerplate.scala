@@ -67,7 +67,7 @@ object Boilerplate {
             sequence(lit(1), size(col("t")) - (n - 1)))
           .otherwise(array().cast("array<int>"))).as("p"))
       .select(col("doc_id"), col("p"),
-        graft.plans.Tok64Hash.tok64Col(docs.sparkSession,
+        graft.plans.Tok64Hash.tok64Col(
           concat_ws(" ", slice(col("t"), col("p"), lit(n)))).as("gh"))
     val frequent = grams.select("doc_id", "gh").distinct()
       .groupBy("gh").agg(count(lit(1)).as("df"))

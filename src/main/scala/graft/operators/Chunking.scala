@@ -79,7 +79,7 @@ object Chunking {
     // split, no array per token; bit-parity with PortableHash.cp31uCol
     // pinned in PortableHashSpec): this runs once per corpus token
     def tokHash(tok: Column): Column =
-      graft.plans.Cp31Hash.cp31uCol(docs.sparkSession, tok)
+      graft.plans.Cp31Hash.cp31uCol(tok)
     docs
       .select(col("doc_id"),
         TextAnalysis.tokens(coalesce(col("text"), lit(""))).as("t"))

@@ -46,17 +46,17 @@ object Dedup {
     * compares in the two-pointer intersect. Hash identity ≡ string
     * identity up to 2⁻⁶⁴-scale collisions (the md5-fingerprint trade).
     */
-  private def sortedTokenHashSet(docs: DataFrame,
+  private def sortedTokenHashSet(
       text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     array_sort(transform(TextAnalysis.tokenSet(text),
-      t => graft.plans.Tok64Hash.tok64Col(docs.sparkSession, t)))
+      t => graft.plans.Tok64Hash.tok64Col(t)))
 
   /** One-pass token-set projection: (doc_id, lang, toks, n_toks) with
     * `toks` the sorted 64-bit token-hash set. Package-private so specs
     * can feed [[prefixTokens]] directly. */
   private[graft] def tokenSets(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("lang"),
-      sortedTokenHashSet(docs, col("text")).as("toks"))
+      sortedTokenHashSet(col("text")).as("toks"))
       .withColumn("n_toks", size(col("toks")))
 
   /** Prefix-filter token stream (AllPairs/ppjoin family; Bayardo et al.
@@ -189,7 +189,7 @@ object Dedup {
       .withColumn("size_bucket", explode(array(bkt, bkt + 1)))
       .withColumn("salt", explode(lit((0 until salts).toArray)))
     val pp = graft.plans.PrefixPositional
-      .posCol(pfx.sparkSession, col("pa"), col("pb"), col("tok"))
+      .posCol(col("pa"), col("pb"), col("tok"))
     // required overlap for J ≥ t: o/(na+nb−o) ≥ t ⟺ o ≥ t(na+nb)/(1+t)
     val alpha = ceil((col("na") + col("nb")) *
       lit(threshold / (1.0 + threshold)) - lit(1e-9))
@@ -224,7 +224,7 @@ object Dedup {
       .withColumn("size_bucket", explode(array(bkt - 1, bkt, bkt + 1)))
       .withColumn("salt", explode(lit((0 until salts).toArray)))
     val pp = graft.plans.PrefixPositional
-      .posCol(pfx.sparkSession, col("pa"), col("pb"), col("tok"))
+      .posCol(col("pa"), col("pb"), col("tok"))
     a.join(b, Seq("lang", "size_bucket", "tok", "salt"))
       .where(col("doc_a") < col("doc_b") &&
         col("na") >= col("nb") * threshold &&
@@ -301,7 +301,7 @@ object Dedup {
       val tb = toks.select(col("doc_id").as("doc_b"), col("toks").as("toks_b"),
         col("n_toks").as("nb"))
       val inter = graft.plans.SortedIntersectSize
-        .intersectSizeCol(docs.sparkSession, col("toks_a"), col("toks_b"))
+        .intersectSizeCol(col("toks_a"), col("toks_b"))
       cand.join(ta, "doc_a").join(tb, "doc_b")
         .withColumn("inter", inter)
         // raw int/int division — bit-identical in any engine, so no ROUND
@@ -762,7 +762,7 @@ object Dedup {
       .select(col("doc_id"),
         sigUdf(col("_ts")).as("sig"),
         array_sort(transform(col("_ts"),
-          t => graft.plans.Tok64Hash.tok64Col(docs.sparkSession, t)))
+          t => graft.plans.Tok64Hash.tok64Col(t)))
           .as("htoks"))
       .withColumn("bhs", bandHashUdf(col("sig")))
       .localCheckpoint()
@@ -773,9 +773,9 @@ object Dedup {
     // forms are CodegenFallback: interpreted lambdas + an intermediate
     // array per pair, and these run on every in-bucket occurrence)
     val firstShared = graft.plans.FirstEqualIndex
-      .firstEqualIndexCol(docs.sparkSession, col("x.bhs"), col("y.bhs"))
+      .firstEqualIndexCol(col("x.bhs"), col("y.bhs"))
     val estMatches = graft.plans.CountEqual
-      .countEqualCol(docs.sparkSession, col("x.sig"), col("y.sig"))
+      .countEqualCol(col("x.sig"), col("y.sig"))
     // verify kernel: the threshold-bounded merge aborts a pair the
     // moment `matched + min(remaining)` can no longer reach the minimal
     // passing intersection (which also kills size-mismatched pairs at
@@ -787,10 +787,9 @@ object Dedup {
     // plain kernel reachable for that property spec.
     val inter =
       if (boundedVerify) graft.plans.SortedIntersectBounded
-        .boundedCol(docs.sparkSession, col("x.htoks"), col("y.htoks"),
-          lit(threshold))
+        .boundedCol(col("x.htoks"), col("y.htoks"), lit(threshold))
       else graft.plans.SortedIntersectSize
-        .intersectSizeCol(docs.sparkSession, col("x.htoks"), col("y.htoks"))
+        .intersectSizeCol(col("x.htoks"), col("y.htoks"))
     val candidates = brows.as("x").join(brows.as("y"), Seq("bucket"))
       .where(col("x.doc_id") < col("y.doc_id"))
       // canonical occurrence: a pair is in every shared band's bucket;

@@ -122,7 +122,6 @@ object Layout {
     require(!df.columns.contains("__zval"),
       "zorderWrite: input already has a __zval column — withColumn would " +
         "silently overwrite it and write the curve value out as user data")
-    BucketSearch.register(df.sparkSession)
     val bnds = fitBoundaries(df, cols, bits, relErr)
     val out = df.columns.toIndexedSeq.map(col)
     graft.io.Manifest.publishOverwriteStaged(df.sparkSession, dir,

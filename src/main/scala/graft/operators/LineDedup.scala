@@ -44,7 +44,6 @@ object LineDedup {
 
   def dedupLines(docs: DataFrame, minDf: Int = 2): DataFrame = {
     require(minDf >= 2, s"minDf < 2 would remove every non-blank line; got $minDf")
-    val spark = docs.sparkSession
     val ls = docs.select(col("doc_id"), col("lang"),
         split(coalesce(col("text"), lit("")), "\n").as("ls"))
       .localCheckpoint()
@@ -56,7 +55,7 @@ object LineDedup {
         explode(sequence(lit(0), size(col("ls")) - 1)).as("p"))
       .where(line =!= "")
       .select(col("doc_id"), col("p"),
-        graft.plans.Tok64Hash.tok64Col(spark, line).as("lh"))
+        graft.plans.Tok64Hash.tok64Col(line).as("lh"))
     // no broadcast hint on the frequency side: hot lines are
     // vocabulary-sized at corpus scale (AQE broadcasts the few-MB
     // table itself when it fits)

@@ -88,7 +88,6 @@ object QualityClassifier {
     * stagings). */
   def scoreDocs(docs: DataFrame, weights: Seq[Double], bias: Double,
                 threshold: Double): DataFrame = {
-    graft.plans.QualityScore.register(docs.sparkSession)
     docs.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
       .select(col("doc_id"),
         size(col("toks")).cast("long").as("n_tokens"),

@@ -56,8 +56,7 @@ object Retrieval {
       s"kEach/k/kRrf must be >= 1, got $kEach/$k/$kRrf")
     require(denseLeg == "exact" || denseLeg == "lsh",
       s"denseLeg must be 'exact' or 'lsh', got '$denseLeg'")
-    val spark = docs.sparkSession
-    val ndot = graft.plans.DotProduct.dotCol(spark, _: Column, _: Column)
+    val ndot = graft.plans.DotProduct.dotCol(_: Column, _: Column)
 
     // sparse leg: the BM25 result is already (score DESC, doc_id)-sorted
     // and kEach rows — the single-partition rank window is metadata-scale
@@ -87,7 +86,7 @@ object Retrieval {
         val planes = Similarity.hyperplanes(tables, bits, dim)
         val planesLit = typedLit(planes.map(_.map(_.toSeq).toSeq).toSeq)
         def buckets(vec: Column): Column =
-          graft.plans.LshBuckets.bucketsCol(spark, planesLit, vec)
+          graft.plans.LshBuckets.bucketsCol(planesLit, vec)
         // ≤ `tables` query buckets — broadcast; candidate ids dedup on
         // the bare id (a vector can share several buckets), vectors
         // re-attach afterwards (the annTopK payload discipline)

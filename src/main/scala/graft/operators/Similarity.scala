@@ -36,7 +36,7 @@ import graft.plans.SignPack.packCol
 object Similarity {
 
   /** Sequential-fold dot product of two double arrays, composed from
-    * built-in higher-order functions. Session-free but interpreted
+    * built-in higher-order functions. Needs no extension but is interpreted
     * (HOFs are CodegenFallback) — the hot paths below use the native
     * codegen'd [[graft.plans.DotProduct]] instead, which accumulates in
     * the identical left-to-right order (bit-equal results). */
@@ -56,7 +56,7 @@ object Similarity {
   private def vectors(emb: DataFrame, keep: String*): DataFrame =
     emb.select(col("vec_id") +: keep.map(col) :+
         asDouble(col("embedding")).as("vec"): _*)
-      .withColumn("vv", dotCol(emb.sparkSession, col("vec"), col("vec")))
+      .withColumn("vv", dotCol(col("vec"), col("vec")))
 
   /** One side of a scored pair with its norm computed once per side,
     * not per pair: `s = "q"` gives (query_id, qvec, qnrm), `s = "c"`
@@ -80,7 +80,7 @@ object Similarity {
     * (query_id, rank, neighbor_id). */
   private def exactRank(pairs: DataFrame, k: Int): DataFrame =
     topPer(pairs.withColumn("cos",
-        dotCol(pairs.sparkSession, col("qvec"), col("cvec")) /
+        dotCol(col("qvec"), col("cvec")) /
           (col("qnrm") * col("cnrm"))), "query_id", k,
         desc("cos"), asc("neighbor_id"))
       .select(col("query_id"), col("rank").cast("long").as("rank"),
@@ -127,8 +127,8 @@ object Similarity {
     * ties (ascore desc, neighbor_id); same output as [[hammingTier]]. */
   private def adcTier(pairs: DataFrame, n: Int): DataFrame =
     topPer(pairs.withColumn("ascore", col("scale") / 127 *
-        graft.plans.DotIntDouble.dotIdCol(pairs.sparkSession,
-          col("qvec"), col("q8")) / sqrt(col("cvv"))),
+        graft.plans.DotIntDouble.dotIdCol(col("qvec"), col("q8")) /
+          sqrt(col("cvv"))),
         "query_id", n, desc("ascore"), asc("neighbor_id"))
       .select("query_id", "qvec", "qnrm", "neighbor_id")
       .localCheckpoint() // nQueries·n rows; the ADC stage runs once
@@ -159,18 +159,12 @@ object Similarity {
   def hammingTopK(emb: DataFrame, nQueries: Int, k: Int,
                   rerankK: Int = 48): DataFrame = {
     require(rerankK >= k, s"rerankK ($rerankK) must be >= k ($k)")
-    registerBits(emb.sparkSession)
     val v = vectors(emb)
     val sel = hammingTier(v.where(col("vec_id") >= nQueries)
       .select(col("vec_id").as("neighbor_id"), packCol(col("vec")).as("sig"))
       .crossJoin(broadcast(side(v.where(col("vec_id") < nQueries), "q",
         packCol(col("vec")).as("qsig")))), rerankK)
     rerank(sel, v, k, "hammingTopK")
-  }
-
-  private def registerBits(spark: SparkSession): Unit = {
-    graft.plans.SignPack.register(spark)
-    graft.plans.Hamming.register(spark)
   }
 
   /** Deterministic pseudo-random hyperplanes: nt tables × nb bits, dim
@@ -211,7 +205,7 @@ object Similarity {
     // ADVICE); the oracle side has no null vectors by data contract
     val v = vectors(emb).where(col("vec").isNotNull)
     val b = v.withColumn("bucket", explode(graft.plans.LshBuckets
-      .bucketsCol(emb.sparkSession, planesLit, col("vec"))))
+      .bucketsCol(planesLit, col("vec"))))
     // candidate DEDUP runs on the id pair only — distinct over the full
     // vectors would shuffle every embedding once per colliding bucket;
     // vectors re-attach afterwards by id from the PRE-explosion frame
@@ -247,14 +241,14 @@ object Similarity {
     * fold the old `vv` column used — bit-identical structs, so the
     * array_min/array_sort consumers and the DuckDB Lloyd-replay
     * oracles are untouched. */
-  private def scoresCol(spark: SparkSession, cents: Seq[Cent]): Column =
-    graft.plans.CentroidScores.scoresCol(spark,
+  private def scoresCol(cents: Seq[Cent]): Column =
+    graft.plans.CentroidScores.scoresCol(
       typedLit(cents.map(_._2.toSeq)), typedLit(cents.map(_._1)), col("vec"))
 
   /** Nearest-centroid id (argmin over the (d2, id) structs, ties to the
     * smaller list_id) as a single codegen'd expression. */
-  private def argminCol(spark: SparkSession, cents: Seq[Cent]): Column =
-    array_min(scoresCol(spark, cents)).getField("id")
+  private def argminCol(cents: Seq[Cent]): Column =
+    array_min(scoresCol(cents)).getField("id")
 
   /** The component sum every centroid mean is built from: each x
     * integerized as `floor(x·1e8 + 0.5)` (both engines evaluate this
@@ -348,7 +342,7 @@ object Similarity {
       .map { case (r, i) => (i, r.getSeq[Double](2).toArray) }
 
     (1 to iters).foldLeft(withNorm(init)) { case (c, _) =>
-      val rows = means(fit.withColumn("list_id", argminCol(v.sparkSession, c))
+      val rows = means(fit.withColumn("list_id", argminCol(c))
           .select(col("list_id"), posexplode(col("vec")).as(Seq("pos", "x"))),
         "list_id").collect()
       withNorm(rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map {
@@ -462,7 +456,7 @@ object Similarity {
       byBranch.flatMap(_._2.map(_._2.toSeq)),
       byBranch.flatMap(_._2.map(_._1)),
       byBranch.scanLeft(0)((acc, b) => acc + b._2.size))
-    graft.plans.HierArgmin.argminCol(v.sparkSession, typedLit(cfg), col("vec"))
+    graft.plans.HierArgmin.argminCol(typedLit(cfg), col("vec"))
   }
 
   /** The flat quantizer's corpus assignment, routed by child count: at
@@ -547,7 +541,6 @@ object Similarity {
       maxFitRows: Long, nRows: Long = -1L): TreeQuantizer = {
     require(iters >= 1, // round 1 also flushes any null-super init rows
       s"treeFit needs iters >= 1, got $iters")
-    val spark = v.sparkSession
     val n = if (nRows >= 0L) nRows else v.count()
     val nl = if (nLists > 0) nLists else autoNLists(n, 1L << 24)
     val ns = superCount(nl)
@@ -576,7 +569,7 @@ object Similarity {
     // materialization timing does not enter any computed number
     // (TreeQuantizerSpec pins determinism + brute-force equality).
     val fit = fitSample(v, n, nl, maxFitRows).where(col("vv").isNotNull)
-      .withColumn("super_id", argminCol(spark, supers))
+      .withColumn("super_id", argminCol(supers))
       .localCheckpoint(false) // sample-scale; reused every grouped round
     val wInit = Window.partitionBy("super_id")
       .orderBy(col("pb"), col("vec_id"))
@@ -592,7 +585,7 @@ object Similarity {
       // winning row's vector is re-attached by vec_id afterwards.
       val asg = fit.join(broadcast(c), "super_id")
         .withColumn("d2", col("vv") + col("cc") -
-          lit(2.0) * dotCol(spark, col("vec"), col("cvec")))
+          lit(2.0) * dotCol(col("vec"), col("cvec")))
         .select(col("vec_id"), col("super_id"), col("child_idx"), col("d2"))
         .groupBy("vec_id", "super_id")
         .agg(min_by(col("child_idx"), struct(col("d2"), col("child_idx")))
@@ -606,7 +599,7 @@ object Similarity {
           .as("pc"))
         .select(col("super_id"), col("child_idx"),
           transform(col("pc"), p => p.getField("c")).as("cvec"))
-        .withColumn("cc", dotCol(spark, col("cvec"), col("cvec")))
+        .withColumn("cc", dotCol(col("cvec"), col("cvec")))
         .localCheckpoint(false) // materialized by the next consumer's job
     }
     val kids = fin
@@ -637,10 +630,10 @@ object Similarity {
     val clean = v.where(col("vv").isNotNull)
     val kidsJ = if (nLists <= 16384) broadcast(kids) else kids
     val asg = clean.select(col("vec_id"), col("vec"), col("vv"))
-      .withColumn("super_id", argminCol(v.sparkSession, supers))
+      .withColumn("super_id", argminCol(supers))
       .join(kidsJ, "super_id")
       .withColumn("d2", col("vv") + col("cc") -
-        lit(2.0) * dotCol(v.sparkSession, col("vec"), col("cvec")))
+        lit(2.0) * dotCol(col("vec"), col("cvec")))
       // NARROW rows into the aggregate — (long, int, double) only. An
       // array-typed grouping key (carrying vec/vv to spare the attach
       // join) forces the n·√k-row aggregate out of hash aggregation
@@ -678,7 +671,7 @@ object Similarity {
     def assign(v: DataFrame): DataFrame = assignLists(v, cents, iters)
     def probe(q: DataFrame, nProbe: Int): DataFrame =
       q.withColumn("p", explode(slice(
-          array_sort(scoresCol(q.sparkSession, cents)), 1, nProbe)))
+          array_sort(scoresCol(cents)), 1, nProbe)))
         .withColumn("list_id", col("p.id")).drop("p")
   }
 
@@ -691,7 +684,7 @@ object Similarity {
     def assign(v: DataFrame): DataFrame = treeAssign(v, supers, kids, nLists)
     def probe(q: DataFrame, nProbe: Int): DataFrame =
       topPer(kids.crossJoin(broadcast(q)).withColumn("d2", col("vv") +
-          col("cc") - lit(2.0) * dotCol(q.sparkSession, col("vec"), col("cvec"))),
+          col("cc") - lit(2.0) * dotCol(col("vec"), col("cvec"))),
         "vec_id", nProbe, col("d2"), col("list_id"))
         .select(q.columns.toSeq.map(col) :+ col("list_id"): _*)
   }
@@ -775,7 +768,6 @@ object Similarity {
       val rows = quant.assign(v)
         .select(col("vec_id"), col("vec"), col("vv"), col("list_id"))
       if (int8) {
-        graft.plans.SignPack.register(spark)
         rows.withColumn("scale", scaleOf(col("vec")))
           .select(col("vec_id"), col("vv"), col("list_id"), col("scale"),
             q8Of(col("vec")).as("q8"), packCol(col("vec")).as("sig"))
@@ -900,7 +892,6 @@ object Similarity {
     val adc = cand.select(col("vec_id").as("neighbor_id"), col("q8"),
       col("scale"), col("vv").as("cvv"), col("list_id"))
     val adcIn = if (coarseK == 0) broadcast(q).join(adc, Seq("list_id")) else {
-      registerBits(spark)
       val survivors = hammingTier(
         broadcast(q.withColumn("qsig", packCol(col("qvec"))))
           .join(cand.select(col("vec_id").as("neighbor_id"), col("sig"),
@@ -1043,7 +1034,7 @@ object Similarity {
       .join(half("b").withColumn("_salt", explode(lit((0 until salts).toArray))),
         Seq(key, "_salt"))
       .where(col("vec_a") < col("vec_b"))
-      .withColumn("cos", dotCol(v.sparkSession, col("va"), col("vb")) /
+      .withColumn("cos", dotCol(col("va"), col("vb")) /
         (col("na") * col("nb")))
   }
 

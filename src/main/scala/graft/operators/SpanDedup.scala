@@ -161,7 +161,6 @@ object SpanDedup {
     require(hotStride >= 1,
       s"hotStride must be >= 1 (pmod by a non-positive stride is null," +
         s" which would silently disable the guard), got $hotStride")
-    val spark = toks.sparkSession
     // occurrence stream before the gram hash — the guard's sample
     // filter runs HERE so only 1/stride of positions pay slice+hash
     def positions = toks
@@ -169,7 +168,7 @@ object SpanDedup {
         explode(when(size(col("t")) >= l,
             sequence(lit(1), size(col("t")) - (l - 1)))
           .otherwise(array().cast("array<int>"))).as("p"))
-    def gh = graft.plans.Tok64Hash.tok64Col(spark,
+    def gh = graft.plans.Tok64Hash.tok64Col(
       concat_ws(" ", slice(col("t"), col("p"), lit(l)))).as("gh")
     // (doc, start, gram-hash, packed first-occurrence key); sequence()
     // counts DOWN for docs shorter than l, so guard to an empty array.

@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 
 /** Native codegen'd sorted-boundary bucket lookup:
@@ -88,21 +87,6 @@ case class BucketSearch(left: Expression, right: Expression)
 }
 
 object BucketSearch {
-
-  private val fnId = FunctionIdentifier("graft_bucket_search")
-  private val info = new ExpressionInfo(classOf[BucketSearch].getName,
-    "graft_bucket_search")
-  private[plans] val builder = (children: Seq[Expression]) => {
-    require(children.size == 2,
-      s"graft_bucket_search requires exactly 2 arguments, got ${children.size}")
-    BucketSearch(children(0), children(1))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(fnId)) reg.registerFunction(fnId, info, builder)
-  }
-
   def bucketCol(boundaries: Column, v: Column): Column =
     call_function("graft_bucket_search", boundaries, v)
 }

@@ -1,14 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 
 /** Per-centroid squared-distance scores of a vector against a literal
@@ -131,25 +130,7 @@ object CentroidScores {
     new GenericArrayData(out.asInstanceOf[Array[Any]])
   }
 
-  private val fnId = FunctionIdentifier("graft_centroid_scores")
-  private val info =
-    new ExpressionInfo(classOf[CentroidScores].getName, "graft_centroid_scores")
-  private[plans] val builder = (children: Seq[Expression]) => {
-    require(children.size == 3,
-      s"graft_centroid_scores requires exactly 3 arguments, got ${children.size}")
-    CentroidScores(children(0), children(1), children(2))
-  }
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(fnId)) reg.registerFunction(fnId, info, builder)
-  }
-
   /** Column-API entry. */
-  def scoresCol(spark: SparkSession, cents: Column, ids: Column,
-                vec: Column): Column = {
-    register(spark)
+  def scoresCol(cents: Column, ids: Column, vec: Column): Column =
     call_function("graft_centroid_scores", cents, ids, vec)
-  }
 }

@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 
 /** Native codegen'd count of positions where two `array<bigint>` columns
@@ -76,26 +75,7 @@ case class CountEqual(left: Expression, right: Expression)
 }
 
 object CountEqual {
-
-  private val fnId = FunctionIdentifier("graft_count_equal")
-  private val info = new ExpressionInfo(classOf[CountEqual].getName,
-    "graft_count_equal")
-  private[plans] val builder = (children: Seq[Expression]) => {
-    require(children.size == 2,
-      s"graft_count_equal requires exactly 2 arguments, got ${children.size}")
-    CountEqual(children(0), children(1))
-  }
-
-  /** Idempotent per-session registration (for sessions not built with
-    * [[GraftExtensions]]). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(fnId)) reg.registerFunction(fnId, info, builder)
-  }
-
   /** Column-API entry: `countEqualCol(a, b)` ≡ SQL `graft_count_equal(a, b)`. */
-  def countEqualCol(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def countEqualCol(a: Column, b: Column): Column =
     call_function("graft_count_equal", a, b)
-  }
 }

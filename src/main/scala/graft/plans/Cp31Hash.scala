@@ -1,11 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -85,25 +84,6 @@ case class Cp31Hash(child: Expression) extends UnaryExpression {
 }
 
 object Cp31Hash {
-
-  private val fnId = FunctionIdentifier("graft_cp31u")
-  private val info = new ExpressionInfo(classOf[Cp31Hash].getName, "graft_cp31u")
-  private[plans] val builder = (children: Seq[Expression]) => {
-    require(children.size == 1,
-      s"graft_cp31u requires exactly 1 argument, got ${children.size}")
-    Cp31Hash(children.head)
-  }
-
-  /** Idempotent per-session registration (for sessions not built with
-    * [[GraftExtensions]]). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(fnId)) reg.registerFunction(fnId, info, builder)
-  }
-
   /** Column-API entry: `cp31uCol(c)` ≡ SQL `graft_cp31u(c)`. */
-  def cp31uCol(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function("graft_cp31u", c)
-  }
+  def cp31uCol(c: Column): Column = call_function("graft_cp31u", c)
 }

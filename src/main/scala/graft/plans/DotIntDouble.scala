@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 
 /** Native codegen'd asymmetric dot product: `array<double>` query ×
@@ -85,24 +84,6 @@ case class DotIntDouble(left: Expression, right: Expression)
 }
 
 object DotIntDouble {
-
-  private val fnId = FunctionIdentifier("graft_dot_id")
-  private val info = new ExpressionInfo(classOf[DotIntDouble].getName, "graft_dot_id")
-  private[plans] val builder = (children: Seq[Expression]) => {
-    require(children.size == 2,
-      s"graft_dot_id requires exactly 2 arguments, got ${children.size}")
-    DotIntDouble(children(0), children(1))
-  }
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(fnId)) reg.registerFunction(fnId, info, builder)
-  }
-
   /** Column-API entry: `dotIdCol(q, c)` ≡ SQL `graft_dot_id(q, c)`. */
-  def dotIdCol(spark: SparkSession, q: Column, c: Column): Column = {
-    register(spark)
-    call_function("graft_dot_id", q, c)
-  }
+  def dotIdCol(q: Column, c: Column): Column = call_function("graft_dot_id", q, c)
 }

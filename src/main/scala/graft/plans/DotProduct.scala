@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 
 /** Native codegen'd dot product over two `array<double>` columns.
@@ -83,25 +82,6 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-
-  private val fnId = FunctionIdentifier("graft_dot")
-  private val info = new ExpressionInfo(classOf[DotProduct].getName, "graft_dot")
-  private[plans] val builder = (children: Seq[Expression]) => {
-    require(children.size == 2,
-      s"graft_dot requires exactly 2 arguments, got ${children.size}")
-    DotProduct(children(0), children(1))
-  }
-
-  /** Idempotent per-session registration (for sessions not built with
-    * [[GraftExtensions]]). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(fnId)) reg.registerFunction(fnId, info, builder)
-  }
-
   /** Column-API entry: `dotCol(a, b)` ≡ SQL `graft_dot(a, b)`. */
-  def dotCol(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_dot", a, b)
-  }
+  def dotCol(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 }

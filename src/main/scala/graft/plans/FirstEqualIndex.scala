@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 
 /** Native codegen'd first index (0-based) at which two `array<bigint>`
@@ -73,27 +72,8 @@ case class FirstEqualIndex(left: Expression, right: Expression)
 }
 
 object FirstEqualIndex {
-
-  private val fnId = FunctionIdentifier("graft_first_equal_index")
-  private val info = new ExpressionInfo(classOf[FirstEqualIndex].getName,
-    "graft_first_equal_index")
-  private[plans] val builder = (children: Seq[Expression]) => {
-    require(children.size == 2,
-      s"graft_first_equal_index requires exactly 2 arguments, got ${children.size}")
-    FirstEqualIndex(children(0), children(1))
-  }
-
-  /** Idempotent per-session registration (for sessions not built with
-    * [[GraftExtensions]]). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(fnId)) reg.registerFunction(fnId, info, builder)
-  }
-
   /** Column-API entry:
     * `firstEqualIndexCol(a, b)` ≡ SQL `graft_first_equal_index(a, b)`. */
-  def firstEqualIndexCol(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def firstEqualIndexCol(a: Column, b: Column): Column =
     call_function("graft_first_equal_index", a, b)
-  }
 }

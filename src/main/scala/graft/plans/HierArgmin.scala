@@ -1,13 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 
 /** Two-level (hierarchical) nearest-centroid assignment as ONE fused
@@ -175,24 +174,7 @@ object HierArgmin {
     }
   }
 
-  private val fnId = FunctionIdentifier("graft_hier_argmin")
-  private val info =
-    new ExpressionInfo(classOf[HierArgmin].getName, "graft_hier_argmin")
-  private[plans] val builder = (children: Seq[Expression]) => {
-    require(children.size == 2,
-      s"graft_hier_argmin requires exactly 2 arguments, got ${children.size}")
-    HierArgmin(children(0), children(1))
-  }
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(fnId)) reg.registerFunction(fnId, info, builder)
-  }
-
   /** Column-API entry. */
-  def argminCol(spark: SparkSession, config: Column, vec: Column): Column = {
-    register(spark)
+  def argminCol(config: Column, vec: Column): Column =
     call_function("graft_hier_argmin", config, vec)
-  }
 }

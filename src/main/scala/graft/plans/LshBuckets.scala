@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 
 /** All LSH hyperplane bucket ids of a vector in ONE fused expression:
@@ -124,26 +123,8 @@ object LshBuckets {
     new GenericArrayData(out)
   }
 
-  private val fnId = FunctionIdentifier("graft_lsh_buckets")
-  private val info =
-    new ExpressionInfo(classOf[LshBuckets].getName, "graft_lsh_buckets")
-  private[plans] val builder = (children: Seq[Expression]) => {
-    require(children.size == 2,
-      s"graft_lsh_buckets requires exactly 2 arguments, got ${children.size}")
-    LshBuckets(children(0), children(1))
-  }
-
-  /** Idempotent per-session registration (for sessions not built with
-    * [[GraftExtensions]]). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(fnId)) reg.registerFunction(fnId, info, builder)
-  }
-
   /** Column-API entry: `bucketsCol(planesLit, vec)` ≡ SQL
     * `graft_lsh_buckets(planesLit, vec)`. */
-  def bucketsCol(spark: SparkSession, planes: Column, vec: Column): Column = {
-    register(spark)
+  def bucketsCol(planes: Column, vec: Column): Column =
     call_function("graft_lsh_buckets", planes, vec)
-  }
 }

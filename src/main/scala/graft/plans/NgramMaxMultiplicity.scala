@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -125,26 +124,8 @@ object NgramMaxMultiplicity {
     0
   }
 
-  private val fnId = FunctionIdentifier("graft_ngram_max_multiplicity")
-  private val info = new ExpressionInfo(
-    classOf[NgramMaxMultiplicity].getName, "graft_ngram_max_multiplicity")
-  private[plans] val builder = (children: Seq[Expression]) => {
-    require(children.size == 2,
-      s"graft_ngram_max_multiplicity requires exactly 2 arguments, got ${children.size}")
-    NgramMaxMultiplicity(children(0), children(1))
-  }
-
-  /** Idempotent per-session registration (for sessions not built with
-    * [[GraftExtensions]]). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(fnId)) reg.registerFunction(fnId, info, builder)
-  }
-
   /** Column-API entry: `maxMultCol(toks, n)` ≡ SQL
     * `graft_ngram_max_multiplicity(toks, n)`. */
-  def maxMultCol(spark: SparkSession, toks: Column, n: Int): Column = {
-    register(spark)
+  def maxMultCol(toks: Column, n: Int): Column =
     call_function("graft_ngram_max_multiplicity", toks, lit(n))
-  }
 }

@@ -2,13 +2,12 @@ package graft.plans
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -187,19 +186,6 @@ object PiiRedact {
     new GenericInternalRow(Array[Any](
       if (red3 eq s) text else UTF8String.fromString(red3),
       nEmail, nIp, nPhone))
-  }
-
-  private val fnId = FunctionIdentifier("graft_pii_redact")
-  private val info = new ExpressionInfo(classOf[PiiRedact].getName, "graft_pii_redact")
-  private[plans] val builder = (children: Seq[Expression]) => {
-    require(children.size == 1,
-      s"graft_pii_redact requires exactly 1 argument, got ${children.size}")
-    PiiRedact(children.head)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(fnId)) reg.registerFunction(fnId, info, builder)
   }
 
   /** Column-API entry: struct(redacted_text, n_emails, n_ips, n_phones). */

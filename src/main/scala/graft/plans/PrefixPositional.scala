@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 
 /** Fused canonical-occurrence dedup + ppjoin positional lookup for the
@@ -133,26 +132,8 @@ case class PrefixPositional(pa: Expression, pb: Expression, tok: Expression)
 }
 
 object PrefixPositional {
-
-  private val fnId = FunctionIdentifier("graft_prefix_pos")
-  private val info = new ExpressionInfo(
-    classOf[PrefixPositional].getName, "graft_prefix_pos")
-  private[plans] val builder = (children: Seq[Expression]) => {
-    require(children.size == 3,
-      s"graft_prefix_pos requires exactly 3 arguments, got ${children.size}")
-    PrefixPositional(children(0), children(1), children(2))
-  }
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(fnId)) reg.registerFunction(fnId, info, builder)
-  }
-
   /** Column-API entry: NULL unless the join token is the pair's first
     * common prefix entry; else `(posA << 21) | posB`. */
-  def posCol(spark: SparkSession, pa: Column, pb: Column, tok: Column): Column = {
-    register(spark)
+  def posCol(pa: Column, pb: Column, tok: Column): Column =
     call_function("graft_prefix_pos", pa, pb, tok)
-  }
 }

@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 
 /** Native codegen'd hashed-feature linear quality score — the fused
@@ -130,26 +129,8 @@ case class QualityScore(first: Expression, second: Expression,
 }
 
 object QualityScore {
-
-  private val fnId = FunctionIdentifier("graft_qscore")
-  private val info = new ExpressionInfo(classOf[QualityScore].getName, "graft_qscore")
-  private[plans] val builder = (children: Seq[Expression]) => {
-    require(children.size == 3,
-      s"graft_qscore requires exactly 3 arguments, got ${children.size}")
-    QualityScore(children(0), children(1), children(2))
-  }
-
-  /** Idempotent per-session registration (for sessions not built with
-    * [[GraftExtensions]]). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(fnId)) reg.registerFunction(fnId, info, builder)
-  }
-
   /** Column-API entry: `scoreCol(toks, w, bias)` ≡ SQL
-    * `graft_qscore(toks, w, bias)`. Session-free by design (the
-    * streaming gate builds columns before any frame exists); callers
-    * with a session at hand should [[register]] defensively. */
+    * `graft_qscore(toks, w, bias)`. */
   def scoreCol(toks: Column, w: Column, bias: Column): Column =
     call_function("graft_qscore", toks, w, bias)
 }

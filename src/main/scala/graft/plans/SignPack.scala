@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 
 /** 1-bit (sign) embedding quantization: pack the sign bits of a double
@@ -72,20 +71,6 @@ object SignPack {
       i += 1
     }
     new GenericArrayData(words)
-  }
-
-  private val fnId = FunctionIdentifier("graft_sign_pack")
-  private val info = new ExpressionInfo(classOf[SignPack].getName,
-    "graft_sign_pack")
-  private[plans] val builder = (children: Seq[Expression]) => {
-    require(children.size == 1,
-      s"graft_sign_pack requires exactly 1 argument, got ${children.size}")
-    SignPack(children.head)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(fnId)) reg.registerFunction(fnId, info, builder)
   }
 
   def packCol(v: Column): Column = call_function("graft_sign_pack", v)

@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 
 /** [[SortedIntersectSize]] with a Jaccard-threshold early abort — the
@@ -119,22 +118,6 @@ object SortedIntersectBounded {
     m
   }
 
-  private val fnId = FunctionIdentifier("graft_sorted_intersect_bounded")
-  private val info = new ExpressionInfo(
-    classOf[SortedIntersectBounded].getName, "graft_sorted_intersect_bounded")
-  private[plans] val builder = (children: Seq[Expression]) => {
-    require(children.size == 3,
-      s"graft_sorted_intersect_bounded requires exactly 3 arguments, got ${children.size}")
-    SortedIntersectBounded(children(0), children(1), children(2))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(fnId)) reg.registerFunction(fnId, info, builder)
-  }
-
-  def boundedCol(spark: SparkSession, a: Column, b: Column, t: Column): Column = {
-    register(spark)
+  def boundedCol(a: Column, b: Column, t: Column): Column =
     call_function("graft_sorted_intersect_bounded", a, b, t)
-  }
 }

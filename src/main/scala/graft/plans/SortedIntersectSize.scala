@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 
 /** Native codegen'd intersection COUNT of two SORTED, DISTINCT
@@ -99,27 +98,8 @@ case class SortedIntersectSize(left: Expression, right: Expression)
 }
 
 object SortedIntersectSize {
-
-  private val fnId = FunctionIdentifier("graft_sorted_intersect_size")
-  private val info = new ExpressionInfo(
-    classOf[SortedIntersectSize].getName, "graft_sorted_intersect_size")
-  private[plans] val builder = (children: Seq[Expression]) => {
-    require(children.size == 2,
-      s"graft_sorted_intersect_size requires exactly 2 arguments, got ${children.size}")
-    SortedIntersectSize(children(0), children(1))
-  }
-
-  /** Idempotent per-session registration (for sessions not built with
-    * [[GraftExtensions]]). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(fnId)) reg.registerFunction(fnId, info, builder)
-  }
-
   /** Column-API entry: `intersectSizeCol(a, b)` ≡ SQL
     * `graft_sorted_intersect_size(a, b)`. */
-  def intersectSizeCol(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def intersectSizeCol(a: Column, b: Column): Column =
     call_function("graft_sorted_intersect_size", a, b)
-  }
 }

@@ -1,11 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -73,24 +72,6 @@ object Tok64Hash {
     h ^ (h >>> 33)
   }
 
-  private val fnId = FunctionIdentifier("graft_tok64")
-  private val info = new ExpressionInfo(classOf[Tok64Hash].getName, "graft_tok64")
-  private[plans] val builder = (children: Seq[Expression]) => {
-    require(children.size == 1,
-      s"graft_tok64 requires exactly 1 argument, got ${children.size}")
-    Tok64Hash(children.head)
-  }
-
-  /** Idempotent per-session registration (for sessions not built with
-    * [[GraftExtensions]]). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(fnId)) reg.registerFunction(fnId, info, builder)
-  }
-
   /** Column-API entry: `tok64Col(c)` ≡ SQL `graft_tok64(c)`. */
-  def tok64Col(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function("graft_tok64", c)
-  }
+  def tok64Col(c: Column): Column = call_function("graft_tok64", c)
 }

@@ -635,7 +635,6 @@ object LlmQueries {
         // pinned in PiiRedactSpec; the struct rides its own projection
         // so the four field reads share ONE evaluation (CollapseProject
         // won't re-inline a non-cheap alias used 4x).
-        graft.plans.PiiRedact.register(s)
         injected.withColumn("pii", TextAnalysis.redactPiiFused(col("text")))
           .select(col("doc_id"), col("pii.n_emails").as("n_emails"),
             col("pii.n_ips").as("n_ips"), col("pii.n_phones").as("n_phones"),
@@ -868,7 +867,6 @@ object LlmQueries {
     // the nested comprehension, COALESCE padding the last word.
     Q("q_embed_quantize_binary",
       (s, dir) => {
-        graft.plans.SignPack.register(s)
         // the compare harness can't hash array cells (the int8-quantize
         // precedent), so the signature rides out as scalar witnesses:
         // the first word verbatim (bit-exact packing), the word count,
@@ -1510,7 +1508,7 @@ object LlmQueries {
         documents(s, dir).select(col("lang"),
           TextAnalysis.tokenCount(col("text")).as("n_tokens"),
           size(TextAnalysis.tokenSet(col("text"))).cast("long").as("n_distinct"),
-          graft.plans.NgramMaxMultiplicity.maxMultCol(s, toks, 2)
+          graft.plans.NgramMaxMultiplicity.maxMultCol(toks, 2)
             .as("top_bigram"),
           greatest(size(toks) - 1, lit(0)).cast("long").as("total_bigrams"))
           .groupBy("lang").agg(

@@ -27,7 +27,6 @@ object StreamQualityGate {
     * self-join, rejected in append mode without watermarks. */
   def score(docs: DataFrame, weights: Seq[Double], bias: Double,
             threshold: Double): DataFrame = {
-    graft.plans.QualityScore.register(docs.sparkSession)
     docs
       .withColumn("qscore",
         QualityClassifier.scoreCol(col("text"), weights, bias))

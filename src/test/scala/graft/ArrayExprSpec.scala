@@ -21,7 +21,7 @@ class ArrayExprSpec extends SparkSpec {
     val b = toks.select(col("doc_id").as("ib"), col("toks").as("tb"))
     val pairs = a.crossJoin(b).where(col("ia") < col("ib")).limit(20000)
     val both = pairs.select(
-        SortedIntersectSize.intersectSizeCol(spark, col("ta"), col("tb")).as("native"),
+        SortedIntersectSize.intersectSizeCol(col("ta"), col("tb")).as("native"),
         size(array_intersect(col("ta"), col("tb"))).as("builtin"))
       .as[(Int, Int)].collect()
     assert(both.length === 20000)
@@ -33,7 +33,7 @@ class ArrayExprSpec extends SparkSpec {
     val toks = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"),
         array_sort(transform(TextAnalysis.tokenSet(col("text")),
-          t => graft.plans.Tok64Hash.tok64Col(spark, t))).as("toks"))
+          t => graft.plans.Tok64Hash.tok64Col(t))).as("toks"))
     val a = toks.select(col("doc_id").as("ia"), col("toks").as("ta"))
     val b = toks.select(col("doc_id").as("ib"), col("toks").as("tb"))
     val pairs = a.crossJoin(b).where(col("ia") < col("ib")).limit(20000)
@@ -41,9 +41,9 @@ class ArrayExprSpec extends SparkSpec {
     for (t <- Seq(0.3, 0.9, 0.99)) {
       val rows = pairs.select(
           graft.plans.SortedIntersectSize
-            .intersectSizeCol(spark, col("ta"), col("tb")).as("plain"),
+            .intersectSizeCol(col("ta"), col("tb")).as("plain"),
           graft.plans.SortedIntersectBounded
-            .boundedCol(spark, col("ta"), col("tb"), lit(t)).as("bounded"),
+            .boundedCol(col("ta"), col("tb"), lit(t)).as("bounded"),
           size(col("ta")).as("na"), size(col("tb")).as("nb"))
         .as[(Int, Int, Int, Int)].collect()
       assert(rows.length === 20000)
@@ -75,7 +75,6 @@ class ArrayExprSpec extends SparkSpec {
   }
 
   test("sorted intersect size: empty/disjoint/null edge cases") {
-    SortedIntersectSize.register(spark)
     val r = spark.sql(
       """SELECT graft_sorted_intersect_size(array('a','b'), CAST(array() AS ARRAY<STRING>)) AS e1,
         |  graft_sorted_intersect_size(CAST(array() AS ARRAY<STRING>), CAST(array() AS ARRAY<STRING>)) AS e2,
@@ -91,7 +90,6 @@ class ArrayExprSpec extends SparkSpec {
   }
 
   test("count_equal == aggregate/zip_with composition on signature-shaped arrays") {
-    CountEqual.register(spark)
     val sigs = spark.range(500).select(col("id"),
       transform(sequence(lit(0), lit(63)),
         i => pmod(hash(col("id") * lit(64) + i), lit(7)).cast("long")).as("sig"))
@@ -102,7 +100,7 @@ class ArrayExprSpec extends SparkSpec {
       zip_with(col("sa"), col("sb"), (x, y) => (x === y).cast("int")),
       lit(0), (acc, x) => acc + x)
     val both = pairs.select(
-        CountEqual.countEqualCol(spark, col("sa"), col("sb")).as("native"),
+        CountEqual.countEqualCol(col("sa"), col("sb")).as("native"),
         hof.as("hof"))
       .as[(Int, Int)].collect()
     assert(both.nonEmpty)
@@ -112,7 +110,6 @@ class ArrayExprSpec extends SparkSpec {
   }
 
   test("count_equal: null array yields null; null elements never match") {
-    CountEqual.register(spark)
     val r = spark.sql(
       """SELECT graft_count_equal(CAST(NULL AS ARRAY<BIGINT>), array(1L)) AS n1,
         |  graft_count_equal(array(1L, CAST(NULL AS BIGINT), 3L),
@@ -144,7 +141,7 @@ class ArrayExprSpec extends SparkSpec {
     }
     val df = cases.map(c => (c._1, c._2, c._3)).toDF("a", "b", "t")
     val got = df.withColumn("pp",
-        graft.plans.PrefixPositional.posCol(spark, col("a"), col("b"), col("t")))
+        graft.plans.PrefixPositional.posCol(col("a"), col("b"), col("t")))
       .select("pp").collect()
       .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
     cases.zip(got).foreach { case ((_, _, qt, a, b), pp) =>
@@ -162,7 +159,7 @@ class ArrayExprSpec extends SparkSpec {
     val n = Seq((Some(Seq(1L, 2L, 3L)), Option.empty[Seq[Long]], 2L))
       .toDF("a", "b", "t")
       .withColumn("pp",
-        graft.plans.PrefixPositional.posCol(spark, col("a"), col("b"), col("t")))
+        graft.plans.PrefixPositional.posCol(col("a"), col("b"), col("t")))
     assert(n.select("pp").collect().head.isNullAt(0))
   }
 
@@ -173,7 +170,7 @@ class ArrayExprSpec extends SparkSpec {
       graft.operators.Dedup.tokenSets(
         spark.read.parquet(s"$sf/documents.parquet")), 0.9)
     val q = pfx.select(graft.plans.PrefixPositional
-        .posCol(spark, col("ptoks"), col("ptoks"), col("tok")).as("pp"))
+        .posCol(col("ptoks"), col("ptoks"), col("tok")).as("pp"))
     q.collect() // finalize the adaptive plan before inspecting it
     val plan = q.queryExecution.executedPlan.toString
     assert("""\*\(\d+\) Project \[graft_prefix_pos""".r
@@ -184,7 +181,7 @@ class ArrayExprSpec extends SparkSpec {
     val toks = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), TextAnalysis.sortedTokenSet(col("text")).as("toks"))
     val plan = toks.select(
-        SortedIntersectSize.intersectSizeCol(spark, col("toks"), col("toks")).as("x"))
+        SortedIntersectSize.intersectSizeCol(col("toks"), col("toks")).as("x"))
       .queryExecution.executedPlan.toString
     // the `*(N)` prefix marks a WholeStageCodegen stage — the projection
     // evaluating the expression must carry it (a CodegenFallback
@@ -198,7 +195,7 @@ class ArrayExprSpec extends SparkSpec {
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
     for (n <- Seq(2, 3)) {
       val native = docs.select(col("doc_id"),
-        NgramMaxMultiplicity.maxMultCol(spark, col("toks"), n).as("top"))
+        NgramMaxMultiplicity.maxMultCol(col("toks"), n).as("top"))
       val exploded = spark.read.parquet(s"$sf/documents.parquet")
         .select(col("doc_id"),
           explode(TextAnalysis.wordNgrams(col("text"), n)).as("gram"))
@@ -215,7 +212,6 @@ class ArrayExprSpec extends SparkSpec {
   }
 
   test("ngram_max_multiplicity: edge cases (empty, short, ties, nulls, n=1)") {
-    NgramMaxMultiplicity.register(spark)
     val r = spark.sql(
       """SELECT
         |  graft_ngram_max_multiplicity(CAST(array() AS ARRAY<STRING>), 2) AS empty2,
@@ -240,7 +236,7 @@ class ArrayExprSpec extends SparkSpec {
   test("ngram_max_multiplicity stays inside whole-stage codegen") {
     val q = spark.read.parquet(s"$sf/documents.parquet")
       .select(NgramMaxMultiplicity
-        .maxMultCol(spark, TextAnalysis.tokens(col("text")), 2).as("top"))
+        .maxMultCol(TextAnalysis.tokens(col("text")), 2).as("top"))
     q.collect()
     val plan = q.queryExecution.executedPlan.toString
     assert("""\*\(\d+\) Project \[graft_ngram_max_multiplicity""".r

@@ -12,9 +12,6 @@ import graft.plans.{Hamming, SignPack}
 class BinaryAnnSpec extends SparkSpec {
   import spark.implicits._
 
-  SignPack.register(spark)
-  Hamming.register(spark)
-
   private val sf = "/root/testdata/sf0.001"
 
   test("sign pack: hand-computed words, zero ties, word boundary, nulls") {

@@ -16,7 +16,7 @@ class CentroidScoresSpec extends SparkSpec {
     }
 
   private def oldForm(v: org.apache.spark.sql.DataFrame) = {
-    val ndot = graft.plans.DotProduct.dotCol(spark, _: org.apache.spark.sql.Column, _: org.apache.spark.sql.Column)
+    val ndot = graft.plans.DotProduct.dotCol(_: org.apache.spark.sql.Column, _: org.apache.spark.sql.Column)
     array(cents.map { case (id, cv, _) =>
       // cc via the same sequential fold the fused form uses
       var cc = 0.0; cv.foreach(x => cc += x * x)
@@ -26,11 +26,11 @@ class CentroidScoresSpec extends SparkSpec {
   }
 
   private def fused(v: org.apache.spark.sql.DataFrame) =
-    CentroidScores.scoresCol(spark,
+    CentroidScores.scoresCol(
       typedLit(cents.map(_._2.toSeq)), typedLit(cents.map(_._1)), col("vec"))
 
   test("fused scores == composable struct array, argmin and sort included") {
-    val ndot = graft.plans.DotProduct.dotCol(spark, _: org.apache.spark.sql.Column, _: org.apache.spark.sql.Column)
+    val ndot = graft.plans.DotProduct.dotCol(_: org.apache.spark.sql.Column, _: org.apache.spark.sql.Column)
     val vecs = Seq.fill(300)(Seq.fill(6)(rnd.nextDouble() - 0.5))
       .zipWithIndex.map { case (v, i) => (i.toLong, v) }
       .toDF("vec_id", "vec")
@@ -53,7 +53,7 @@ class CentroidScoresSpec extends SparkSpec {
   }
 
   test("null element and dim mismatch null every d2; ids survive") {
-    val ndot = graft.plans.DotProduct.dotCol(spark, _: org.apache.spark.sql.Column, _: org.apache.spark.sql.Column)
+    val ndot = graft.plans.DotProduct.dotCol(_: org.apache.spark.sql.Column, _: org.apache.spark.sql.Column)
     val vecs = Seq(
       (1L, Seq[java.lang.Double](0.1, null, 0.3, 0.4, 0.5, 0.6)),
       (2L, Seq[java.lang.Double](0.1, 0.2))

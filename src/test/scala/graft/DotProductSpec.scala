@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 import graft.plans.DotProduct
 
-/** Native codegen'd graft_dot: registration paths + bit-equality with
-  * the composable higher-order-function formulation. */
+/** Native codegen'd graft_dot: SQL resolution + bit-equality with the
+  * composable higher-order-function formulation. */
 class DotProductSpec extends SparkSpec {
   import spark.implicits._
 
@@ -15,8 +15,7 @@ class DotProductSpec extends SparkSpec {
     (3L, Array.empty[Double], Array.empty[Double]))
     .toDF("id", "a", "b")
 
-  test("graft_dot registers and computes") {
-    DotProduct.register(spark)
+  test("graft_dot resolves and computes") {
     val out = df.selectExpr("id", "graft_dot(a, b) AS d")
       .as[(Long, Double)].collect().toMap
     assert(out(1L) === 32.0)
@@ -27,7 +26,7 @@ class DotProductSpec extends SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val both = emb.select(
-        DotProduct.dotCol(spark, col("v"), col("v")).as("native"),
+        DotProduct.dotCol(col("v"), col("v")).as("native"),
         Similarity.dot(col("v"), col("v")).as("hof"))
       .as[(Double, Double)].collect()
     assert(both.nonEmpty)
@@ -38,14 +37,12 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("null inputs yield null") {
-    DotProduct.register(spark)
     val r = spark.sql("SELECT graft_dot(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d))")
       .collect().head
     assert(r.isNullAt(0))
   }
 
   test("ragged arrays and null elements yield null — parity with HOF form") {
-    DotProduct.register(spark)
     val rows = spark.sql(
       """SELECT graft_dot(array(1.0d), array(1.0d, 2.0d)) AS ragged,
         |  graft_dot(array(1.0d, CAST(NULL AS DOUBLE)), array(1.0d, 2.0d)) AS withnull

@@ -121,7 +121,7 @@ class HierQuantizerSpec extends SparkSpec {
     // literalCap = 0 forces the child-table route (the tree assignment
     // over the flat children)
     val tab = Similarity.assignLists(df.withColumn("vv",
-        graft.plans.DotProduct.dotCol(spark, col("vec"), col("vec"))),
+        graft.plans.DotProduct.dotCol(col("vec"), col("vec"))),
         cents, 2, literalCap = 0)
       .select("vec_id", "list_id")
       .as[(Long, Int)].collect().toMap
@@ -151,7 +151,7 @@ class HierQuantizerSpec extends SparkSpec {
       (java.lang.Double.valueOf(1.0) +: Array.fill(dim - 1)(
         null.asInstanceOf[java.lang.Double])).toSeq))
     val df = dirty.toDF("vec_id", "vec")
-      .withColumn("vv", graft.plans.DotProduct.dotCol(spark, col("vec"), col("vec")))
+      .withColumn("vv", graft.plans.DotProduct.dotCol(col("vec"), col("vec")))
     val routed = Similarity.assignLists(df, bigCents, 2, literalCap = 1024)
     assert(routed.columns.toSeq === Seq("vec_id", "vec", "vv", "list_id"))
     val got = routed.select("vec_id", "list_id")

@@ -18,8 +18,6 @@ import graft.plans.BucketSearch
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
 
-  BucketSearch.register(spark)
-
   test("bucket search: upper-bound semantics, edges, nulls") {
     val b = Seq(1.0, 2.0, 2.0, 5.0)
     val got = Seq(0.5, 1.0, 1.5, 2.0, 3.0, 5.0, 9.9, Double.NaN)

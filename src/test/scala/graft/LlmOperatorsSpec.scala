@@ -118,7 +118,7 @@ class LlmOperatorsSpec extends SparkSpec {
     val brute = l.join(r, "lang")
       .where(col("doc_a") < col("doc_b"))
       .withColumn("inter", graft.plans.SortedIntersectSize
-        .intersectSizeCol(spark, col("ta"), col("tb")))
+        .intersectSizeCol(col("ta"), col("tb")))
       .withColumn("jaccard", col("inter").cast("double") /
         (col("na") + col("nb") - col("inter")))
       .where(col("jaccard") >= t)
@@ -267,7 +267,7 @@ class LlmOperatorsSpec extends SparkSpec {
       var s = 0.0; var i = 0
       while (i < a.length) { s += a(i) * b(i); i += 1 }; s
     }
-    val ndot = graft.plans.DotProduct.dotCol(spark, _: org.apache.spark.sql.Column, _: org.apache.spark.sql.Column)
+    val ndot = graft.plans.DotProduct.dotCol(_: org.apache.spark.sql.Column, _: org.apache.spark.sql.Column)
     val vFrame = emb.select(col("vec_id"),
         col("embedding").cast("array<double>").as("vec"))
       .withColumn("vv", ndot(col("vec"), col("vec")))

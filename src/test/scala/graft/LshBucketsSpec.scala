@@ -14,7 +14,7 @@ class LshBucketsSpec extends SparkSpec {
   private val planesLit = typedLit(planes.map(_.map(_.toSeq).toSeq).toSeq)
 
   private def oldForm(vec: org.apache.spark.sql.Column) = {
-    val ndot = graft.plans.DotProduct.dotCol(spark, _: org.apache.spark.sql.Column, _: org.apache.spark.sql.Column)
+    val ndot = graft.plans.DotProduct.dotCol(_: org.apache.spark.sql.Column, _: org.apache.spark.sql.Column)
     array((0 until 4).map { t =>
       (0 until 6).map { b =>
         when(ndot(typedLit(planes(t)(b).toSeq), vec) > 0.0, 1L << b)
@@ -30,7 +30,7 @@ class LshBucketsSpec extends SparkSpec {
       .toDF("vec_id", "vec")
     val both = vecs
       .withColumn("old", oldForm(col("vec")))
-      .withColumn("neu", LshBuckets.bucketsCol(spark, planesLit, col("vec")))
+      .withColumn("neu", LshBuckets.bucketsCol(planesLit, col("vec")))
     assert(both.where(col("old") =!= col("neu")).count() == 0)
     // buckets carry the table tag in the high word
     val tags = both.select(explode(col("neu")).as("b"))
@@ -48,7 +48,7 @@ class LshBucketsSpec extends SparkSpec {
     ).toDF("vec_id", "vec")
     val both = vecs
       .withColumn("old", oldForm(col("vec")))
-      .withColumn("neu", LshBuckets.bucketsCol(spark, planesLit, col("vec")))
+      .withColumn("neu", LshBuckets.bucketsCol(planesLit, col("vec")))
       .orderBy("vec_id")
       .select("vec_id", "old", "neu")
       .as[(Long, Seq[Long], Seq[Long])].collect()

@@ -280,10 +280,10 @@ class ManifestSpec extends SparkSpec {
     assert(cleared.contains("lock-000000002") && !Files.exists(ahead))
   }
 
-  test("readTable resolves manifests; writeGoldAtomic publishes through " +
+  test("readTable resolves manifests; publishOverwrite publishes through " +
     "one") {
     val dir = freshDir("gold")
-    graft.io.Tables.writeGoldAtomic(df(0 until 6), dir)
+    Manifest.publishOverwrite(df(0 until 6), dir)
     assert(graft.io.Tables.readTable(spark, dir)
       .count() === 6L)
     // an uncommitted straggler file is invisible through readTable

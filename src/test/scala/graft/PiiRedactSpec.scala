@@ -15,8 +15,6 @@ import graft.plans.PiiRedact
 class PiiRedactSpec extends SparkSpec {
   import spark.implicits._
 
-  PiiRedact.register(spark)
-
   private def bothForms(texts: Seq[String]) = {
     val df = texts.zipWithIndex
       .map { case (t, i) => (i.toLong, Option(t)) }

@@ -48,18 +48,17 @@ class PortableHashSpec extends SparkSpec {
   test("graft_cp31u (native codegen) == cp31u, standalone and inside a lambda") {
     val df = tricky.toDF("s")
     val out = df
-      .select(col("s"), graft.plans.Cp31Hash.cp31uCol(spark, col("s")).as("h"))
+      .select(col("s"), graft.plans.Cp31Hash.cp31uCol(col("s")).as("h"))
       .as[(String, Long)].collect().toMap
     tricky.foreach(s => assert(out(s) == PortableHash.cp31u(s), s"native($s)"))
     // inside a higher-order-function lambda (the CDC call shape): the
     // expression must evaluate interpreted too
     val inLambda = df
       .select(col("s"), element_at(transform(array(col("s")),
-        x => graft.plans.Cp31Hash.cp31uCol(spark, x)), 1).as("h"))
+        x => graft.plans.Cp31Hash.cp31uCol(x)), 1).as("h"))
       .as[(String, Long)].collect().toMap
     tricky.foreach(s => assert(inLambda(s) == PortableHash.cp31u(s), s"lambda($s)"))
-    // and the SQL name resolves after registration
-    graft.plans.Cp31Hash.register(spark)
+    // and the SQL name resolves
     val viaSql = spark.sql("SELECT graft_cp31u('a👍b')")
       .collect()(0).getLong(0)
     assert(viaSql == PortableHash.cp31u("a👍b"))
@@ -128,7 +127,7 @@ class PortableHashSpec extends SparkSpec {
   test("graft_tok64 == minhash permutation-0 token hash on every input") {
     // single-token signature at numPerm=1 IS tokenHash(0, t)
     val out = tricky.filter(_.nonEmpty).toDF("s")
-      .select(col("s"), graft.plans.Tok64Hash.tok64Col(spark, col("s")).as("h"))
+      .select(col("s"), graft.plans.Tok64Hash.tok64Col(col("s")).as("h"))
       .as[(String, Long)].collect().toMap
     out.foreach { case (s, h) =>
       assert(h == Dedup.minhashSignature(Seq(s), 1)(0), s"tok64($s)")
@@ -142,14 +141,14 @@ class PortableHashSpec extends SparkSpec {
       val df = Seq((ta, tb)).toDF("ta", "tb")
       def hset(c: org.apache.spark.sql.Column) = array_sort(transform(
         array_distinct(split(trim(c), "\\s+")),
-        t => graft.plans.Tok64Hash.tok64Col(spark, t)))
+        t => graft.plans.Tok64Hash.tok64Col(t)))
       def sset(c: org.apache.spark.sql.Column) =
         array_sort(array_distinct(split(trim(c), "\\s+")))
       val (hi, si) = df.select(
         graft.plans.SortedIntersectSize
-          .intersectSizeCol(spark, hset(col("ta")), hset(col("tb"))).as("hi"),
+          .intersectSizeCol(hset(col("ta")), hset(col("tb"))).as("hi"),
         graft.plans.SortedIntersectSize
-          .intersectSizeCol(spark, sset(col("ta")), sset(col("tb"))).as("si"))
+          .intersectSizeCol(sset(col("ta")), sset(col("tb"))).as("si"))
         .as[(Int, Int)].collect().head
       assert(hi == si, s"intersect($ta | $tb)")
     }

@@ -10,8 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-level guard against config drift: [[graft.Session]] is the one
   * place under `src/main/scala` that builds a SparkSession, and the
   * environment is read only for the deployment settings below, so no
-  * query result can depend on an environment variable. Comment lines
-  * are skipped (usage blocks may show a builder). */
+  * query result can depend on an environment variable. The native
+  * `graft_*` functions reach a session one way: the table in
+  * `graft/plans/GraftExtensions.scala`, which names every kernel once.
+  * Comment lines are skipped (usage blocks may show a builder). */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private val root = new File("src/main/scala")
@@ -60,5 +62,26 @@ class SourceHygieneSpec extends AnyFunSuite {
         .map(n => s"$rel: $n")
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("native functions are installed only by the GraftExtensions registry") {
+    val registry = "graft/plans/GraftExtensions.scala"
+    val installers = sources.collect {
+      case (rel, code)
+          if "registerFunction|injectFunction|functionRegistry".r
+            .findFirstIn(code).isDefined => rel
+    }
+    assert(installers === Seq(registry))
+    val kernel = """case class (\w+)\([^)]*\)\s*extends\s+\w*Expression\b""".r
+    val kernels = sources.collect {
+      case (rel, code) if rel.startsWith("graft/plans/") =>
+        kernel.findAllMatchIn(code).map(_.group(1))
+    }.flatten
+    assert(kernels.nonEmpty)
+    val table = sources.toMap.apply(registry)
+    val counts = kernels.map(k => k -> s"\\b$k\\b".r.findAllIn(table).size)
+    assert(counts.forall(_._2 == 1),
+      counts.filter(_._2 != 1).map { case (k, n) => s"$k named $n times" }
+        .mkString("\n"))
   }
 }

@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites (one JVM-wide session; local[4]). */
+/** Shared session for all suites (one JVM-wide session; local[4]). It
+  * carries [[graft.Session]]'s function and pushdown settings: the
+  * `graft_*` functions come from the extension, and the ANN fetches push
+  * their `isin` sets at the production threshold. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -11,6 +14,8 @@ object TestSpark {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -59,8 +59,7 @@ class StreamIndexAppendSpec extends SparkSpec {
       .select("list_id", "cvec", "cc").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
       .sortBy(_._1).toSeq
-    val ndot = graft.plans.DotProduct.dotCol(spark,
-      _: org.apache.spark.sql.Column, _: org.apache.spark.sql.Column)
+    val ndot = graft.plans.DotProduct.dotCol(_: org.apache.spark.sql.Column, _: org.apache.spark.sql.Column)
     val v = emb.select(col("vec_id"),
         col("embedding").cast("array<double>").as("vec"))
       .withColumn("vv", ndot(col("vec"), col("vec")))

@@ -31,7 +31,7 @@ class TreeQuantizerSpec extends SparkSpec {
 
   private def withVv(df: DataFrame): DataFrame =
     df.withColumn("vv",
-      graft.plans.DotProduct.dotCol(spark, col("vec"), col("vec")))
+      graft.plans.DotProduct.dotCol(col("vec"), col("vec")))
 
   private def dot(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
