@@ -3,7 +3,7 @@ package graft.io
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Manifest-gated atomic publish for multi-file parquet sinks — the
@@ -21,13 +21,18 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * SNAPSHOT.
   *
   * Protocol (single writer, many readers — the contract
-  * [[graft.streaming.StreamIndexAppend]] states):
+  * [[graft.streaming.StreamIndexAppend]] states). Every publish —
+  * append, partition upsert, family append, overwrite, compaction —
+  * runs the one private core `publish`, and differs only in what it
+  * writes and which snapshot it commits:
   *
   *  - data files are written STAGED under `<dir>/.stage-<uuid>/`
   *    (dot-prefixed: invisible to Spark's path filter, so even plain
-  *    directory readers never see an in-flight publish), then moved
-  *    into `<dir>` by per-file rename — Spark part names carry a
-  *    per-job UUID, so moves never clobber;
+  *    directory readers never see an in-flight publish), then every
+  *    visible staged file is moved into `<dir>` (or a family subdir)
+  *    by per-file rename, relative paths — partition dirs included —
+  *    preserved. Spark part names carry a per-job UUID, so moves never
+  *    clobber;
   *  - a commit is one file: `<dir>/_manifests/manifest-<version>`
   *    listing the relative data paths of the complete snapshot. It is
   *    written to a dot-tmp name and RENAMED into place — readers see
@@ -45,16 +50,22 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    [[vacuum]] (which clears spent and dangling locks) then retry,
   *    never silent.
   *
+  * A publish whose write fails commits nothing: its stage (and any
+  * file already moved) is uncommitted garbage that readers never
+  * resolve and [[vacuum]] removes.
+  *
   * Scale: the manifest is metadata (one line per file — at 100 TB and
   * 1 GB files, ~10⁵ lines); commit is one rename; readers pay one
   * small-file read + the same parquet scan they always paid. No data
   * movement is added to any publish.
   *
-  * A directory that has never been published through here has no
-  * `_manifests`; [[read]] then falls back to the plain directory scan
-  * and [[publishAppend]] ADOPTS the current committed listing as the
-  * base snapshot — so existing tables upgrade on their first
-  * manifested write with no rewrite.
+  * Adoption, one rule for every publish: a directory that EXISTS but
+  * has never been published through here has no `_manifests`; [[read]]
+  * then falls back to the plain directory scan, and the first publish
+  * commits the plain listing as version 1 BEFORE any new file lands
+  * (so existing tables upgrade with no rewrite, and manifest readers
+  * are torn-proof from the first moved byte). A MISSING directory has
+  * nothing to adopt: its first publish is version 1.
   */
 object Manifest {
 
@@ -66,10 +77,11 @@ object Manifest {
     * (zero data files) still reads with the table's columns — without
     * it `read` could only return the zero-column emptyDataFrame and
     * any downstream `select` of a legit emptied table failed analysis
-    * (r15 verdict). Relative data paths never start with '#'
-    * (plainListing/stageIn exclude dot/underscore prefixes and Spark
-    * part names are alphanumeric), so the marker is unambiguous; pre-
-    * r16 manifests simply have no such line. */
+    * (r15 verdict) — and so partition columns read back with their
+    * committed types, not re-inferred from directory names. Relative
+    * data paths never start with '#' (only visible files are listed,
+    * and Spark part names are alphanumeric), so the marker is
+    * unambiguous; pre-r16 manifests simply have no such line. */
   private val SchemaMarker = "#schema="
 
   private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
@@ -110,11 +122,13 @@ object Manifest {
     * the pre-manifest contract). `basePath` makes partition-dir
     * values (`k=v` path components of a [[publishPartitionUpsert]]
     * table) resolve into columns exactly as a plain directory read
-    * would. */
+    * would; a committed schema pins their types (a string partition
+    * value "01" stays "01", not the integer 1). */
   def read(spark: SparkSession, dir: String): DataFrame =
     latestFull(spark, dir) match {
-      case Some((_, files, _)) if files.nonEmpty =>
-        spark.read.option("basePath", dir)
+      case Some((_, files, schema)) if files.nonEmpty =>
+        val reader = spark.read.option("basePath", dir)
+        schema.fold(reader)(reader.schema)
           .parquet(files.map(f => s"$dir/$f"): _*)
       case Some((_, _, Some(schema))) => // committed-empty, schema kept
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
@@ -123,45 +137,22 @@ object Manifest {
       case None => spark.read.parquet(dir)
     }
 
-  /** Visible (non-hidden, recursively) data files of `dir`, as
-    * `dir`-relative paths — the set a plain `spark.read.parquet(dir)`
-    * would scan, partition subdirs included. Used to adopt a
-    * pre-manifest table on its first manifested publish. */
-  private def plainListing(fs: FileSystem, root: Path): Seq[String] =
-    if (!fs.exists(root)) Seq.empty
+  /** Visible data files under `root` as `root`-relative paths, lazily
+    * (a root that is itself a file lists as the one path ""). Visible
+    * means no path component below `root` is `_`- or `.`-prefixed —
+    * Spark's own path filter, so this is exactly the set a plain
+    * `spark.read.parquet(root)` scans: `_manifests`, `_SUCCESS`,
+    * `_temporary/` of a crashed write and `.stage-*` stay out. Empty
+    * when `root` is missing. */
+  private[io] def visibleFiles(fs: FileSystem, root: Path): Iterator[String] =
+    if (!fs.exists(root)) Iterator.empty
     else {
       val base = fs.makeQualified(root).toUri.getPath.stripSuffix("/")
-      val out = Seq.newBuilder[String]
       val it = fs.listFiles(root, true)
-      while (it.hasNext) {
-        val rel = it.next().getPath.toUri.getPath
-          .stripPrefix(base).stripPrefix("/")
-        if (rel.split("/").forall(c =>
-          !c.startsWith("_") && !c.startsWith("."))) out += rel
-      }
-      out.result()
+      Iterator.continually(it).takeWhile(_.hasNext)
+        .map(_.next().getPath.toUri.getPath.stripPrefix(base).stripPrefix("/"))
+        .filter(_.split("/").forall(c => !c.startsWith("_") && !c.startsWith(".")))
     }
-
-  /** Stage `df`'s part files into `<dir>/.stage-<uuid>`, move them to
-    * the top level, return their names. */
-  private def stageIn(df: DataFrame, dir: String): Seq[String] = {
-    val spark = df.sparkSession
-    val (fs, root) = fsOf(spark, dir)
-    val stage = new Path(root,
-      ".stage-" + java.util.UUID.randomUUID().toString)
-    df.write.parquet(stage.toString)
-    val parts = fs.listStatus(stage).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .map(_.getPath)
-    fs.mkdirs(root)
-    val moved = parts.map { p =>
-      val dst = new Path(root, p.getName)
-      require(fs.rename(p, dst), s"Manifest: staging move failed: $p -> $dst")
-      p.getName
-    }
-    fs.delete(stage, true)
-    moved
-  }
 
   /** Atomically commit `files` (+ optional schema header) as snapshot
     * version `v`. Throws on a detected concurrent commit of the same
@@ -227,6 +218,40 @@ object Manifest {
     commit(fs, root, v, files)
   }
 
+  /** The one publish: resolve the base snapshot (adopting an existing
+    * pre-manifest `dir` as version 1 first), let `write` fill a fresh
+    * `.stage-<uuid>` path under `dir`, move every visible staged file
+    * into `dir` (into `dir/sub` when `sub` is set, paths then recorded
+    * as `sub/…`), and commit `next(base, moved)` with `schema` as
+    * version + 1. Returns that version. */
+  private def publish(spark: SparkSession, dir: String,
+                      schema: Option[StructType], sub: String = "")
+                     (write: String => Unit)
+                     (next: (Seq[String], Seq[String]) => Seq[String]): Long = {
+    val (fs, root) = fsOf(spark, dir)
+    val (v0, base) = latest(spark, dir) match {
+      case Some(snapshot) => snapshot
+      case None if fs.exists(root) =>
+        val adopted = visibleFiles(fs, root).toVector
+        commit(fs, root, 1L, adopted, schema)
+        (1L, adopted)
+      case None => (0L, Seq.empty)
+    }
+    val stage = new Path(root, ".stage-" + java.util.UUID.randomUUID().toString)
+    write(stage.toString)
+    val prefix = if (sub.isEmpty) "" else sub + "/"
+    val moved = visibleFiles(fs, stage).toVector.map { rel =>
+      val dst = new Path(root, prefix + rel)
+      fs.mkdirs(dst.getParent)
+      require(fs.rename(new Path(stage, rel), dst),
+        s"Manifest: staging move failed: $stage/$rel -> $dst")
+      prefix + rel
+    }
+    fs.delete(stage, true)
+    commit(fs, root, v0 + 1, next(base, moved), schema)
+    v0 + 1
+  }
+
   /** Publish `df` as an APPEND: the new snapshot is the current
     * committed set plus `df`'s files. Returns the committed version.
     * A reader concurrent with this call sees the old snapshot until
@@ -235,20 +260,8 @@ object Manifest {
     * own commit FIRST — before any new file lands — so readers are
     * manifest-resolved (and therefore torn-proof) from the first
     * appended byte onward, not just from the second append. */
-  def publishAppend(df: DataFrame, dir: String): Long = {
-    val spark = df.sparkSession
-    val (fs, root) = fsOf(spark, dir)
-    val (v0, base) = latest(spark, dir) match {
-      case Some((v, files)) => (v, files)
-      case None =>
-        val adopted = plainListing(fs, root)
-        commit(fs, root, 1L, adopted, Some(df.schema))
-        (1L, adopted)
-    }
-    val moved = stageIn(df, dir)
-    commit(fs, root, v0 + 1, base ++ moved, Some(df.schema))
-    v0 + 1
-  }
+  def publishAppend(df: DataFrame, dir: String): Long =
+    publish(df.sparkSession, dir, Some(df.schema))(df.write.parquet(_))(_ ++ _)
 
   /** Publish `df` as a PARTITION UPSERT (the dynamic
     * `partitionOverwriteMode` / Delta `replaceWhere` analogue,
@@ -262,48 +275,12 @@ object Manifest {
   def publishPartitionUpsert(df: DataFrame, dir: String,
                              cols: Seq[String]): Long = {
     require(cols.nonEmpty, "publishPartitionUpsert needs partition columns")
-    val spark = df.sparkSession
-    val (fs, root) = fsOf(spark, dir)
-    val (v0, base) = latest(spark, dir) match {
-      case Some((v, files)) => (v, files)
-      case None =>
-        val adopted = plainListing(fs, root)
-        commit(fs, root, 1L, adopted, Some(df.schema))
-        (1L, adopted)
+    publish(df.sparkSession, dir, Some(df.schema))(
+      df.write.partitionBy(cols: _*).parquet(_)) { (base, moved) =>
+      val replaced = moved.map(_.split("/").init.mkString("/")).toSet
+      base.filterNot(f => replaced.exists(pre => f.startsWith(pre + "/"))) ++
+        moved
     }
-    val stage = new Path(root,
-      ".stage-" + java.util.UUID.randomUUID().toString)
-    df.write.partitionBy(cols: _*).parquet(stage.toString)
-    val moved = moveVisible(fs, stage, root)
-    val replaced = moved.map(_.split("/").init.mkString("/")).toSet
-    val kept = base.filterNot(f =>
-      replaced.exists(pre => f.startsWith(pre + "/")))
-    commit(fs, root, v0 + 1, kept ++ moved, Some(df.schema))
-    v0 + 1
-  }
-
-  /** Move every visible file under `stage` into `root`, preserving
-    * relative paths (partition subdirs included); delete the stage.
-    * Returns the moved `root`-relative paths. */
-  private def moveVisible(fs: FileSystem, stage: Path,
-                          root: Path): Seq[String] = {
-    val stageBase = fs.makeQualified(stage).toUri.getPath.stripSuffix("/")
-    val moved = Seq.newBuilder[String]
-    val it = fs.listFiles(stage, true)
-    while (it.hasNext) {
-      val p = it.next().getPath
-      val rel = p.toUri.getPath.stripPrefix(stageBase).stripPrefix("/")
-      if (rel.split("/").forall(c =>
-        !c.startsWith("_") && !c.startsWith("."))) {
-        val dst = new Path(root, rel)
-        fs.mkdirs(dst.getParent)
-        require(fs.rename(p, dst),
-          s"Manifest: staging move failed: $p -> $dst")
-        moved += rel
-      }
-    }
-    fs.delete(stage, true)
-    moved.result()
   }
 
   /** ONE-resolution multi-family read: resolve the latest snapshot of
@@ -339,40 +316,15 @@ object Manifest {
   def publishAppendUnder(df: DataFrame, dir: String, sub: String): Long = {
     require(sub.nonEmpty && !sub.contains("/") && !sub.startsWith("_") &&
       !sub.startsWith("."), s"publishAppendUnder: bad family name '$sub'")
-    val spark = df.sparkSession
-    val (fs, root) = fsOf(spark, dir)
-    val (v0, base) = latest(spark, dir) match {
-      case Some((v, files)) => (v, files)
-      case None =>
-        val adopted = plainListing(fs, root)
-        commit(fs, root, 1L, adopted)
-        (1L, adopted)
-    }
-    val stage = new Path(root,
-      ".stage-" + java.util.UUID.randomUUID().toString)
-    df.write.parquet(stage.toString)
-    val subdir = new Path(root, sub)
-    fs.mkdirs(subdir)
-    val moved = fs.listStatus(stage).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .map { s =>
-        val dst = new Path(subdir, s.getPath.getName)
-        require(fs.rename(s.getPath, dst),
-          s"Manifest: staging move failed: ${s.getPath} -> $dst")
-        sub + "/" + s.getPath.getName
-      }
-    fs.delete(stage, true)
-    commit(fs, root, v0 + 1, base ++ moved)
-    v0 + 1
+    publish(df.sparkSession, dir, None, sub)(df.write.parquet(_))(_ ++ _)
   }
 
   /** Publish `df` as a full OVERWRITE: the new snapshot is exactly
     * `df`'s files; superseded files remain until [[vacuum]]. Returns
     * the committed version. */
   def publishOverwrite(df: DataFrame, dir: String): Long =
-    publishOverwriteStaged(df.sparkSession, dir, Some(df.schema)) { stage =>
-      df.write.parquet(stage)
-    }
+    publishOverwriteStaged(df.sparkSession, dir, Some(df.schema))(
+      df.write.parquet(_))
 
   /** Full-OVERWRITE publish for layouts the plain [[publishOverwrite]]
     * cannot stage — partitioned sinks and writer-option sinks
@@ -387,25 +339,8 @@ object Manifest {
     * the commit so an empty overwrite still reads with columns. */
   def publishOverwriteStaged(spark: SparkSession, dir: String,
                              schema: Option[StructType] = None)
-                            (write: String => Unit): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val v0 = latest(spark, dir) match {
-      case Some((v, _)) => v
-      case None if fs.exists(root) =>
-        // adopt-before-first-overwrite: once v1 = the old listing is
-        // committed, a manifest reader resolves it and cannot see the
-        // new files landing next to the old ones mid-move
-        commit(fs, root, 1L, plainListing(fs, root), schema)
-        1L
-      case None => 0L
-    }
-    val stage = new Path(root,
-      ".stage-" + java.util.UUID.randomUUID().toString)
-    write(stage.toString)
-    val moved = moveVisible(fs, stage, root)
-    commit(fs, root, v0 + 1, moved, schema)
-    v0 + 1
-  }
+                            (write: String => Unit): Long =
+    publish(spark, dir, schema)(write)((_, moved) => moved)
 
   /** Small-file compaction — the OPTIMIZE analogue for tables that
     * accumulate per-batch files (streaming index appends, repeated
@@ -427,44 +362,30 @@ object Manifest {
       throw new IllegalStateException(
         s"Manifest.compact: no manifest at $dir — publish through " +
           "Manifest first (compaction needs a committed snapshot to swap)"))
-    val sized = files.map(f =>
-      f -> fs.getFileStatus(new Path(root, f)).getLen)
-    val groups = sized
+    val groups = files
+      .map(f => f -> fs.getFileStatus(new Path(root, f)).getLen)
       .filter(_._2 < targetBytes)
       .groupBy(_._1.split("/").init.mkString("/"))
       .filter(_._2.size >= 2)
     if (groups.isEmpty) return v0
-    val compacted = groups.flatMap(_._2.map(_._1)).toSet
-    val moved = Seq.newBuilder[String]
-    groups.foreach { case (parent, group) =>
-      val df = spark.read.parquet(group.map(g => s"$dir/${g._1}"): _*)
-      val bytes = group.map(_._2).sum
-      val n = ((bytes + targetBytes - 1) / targetBytes).toInt.max(1)
-      val stage = new Path(root,
-        ".stage-" + java.util.UUID.randomUUID().toString)
-      // coalesce, not repartition: compaction must not shuffle
-      df.coalesce(n).write.parquet(stage.toString)
-      val prefix = if (parent.isEmpty) "" else parent + "/"
-      fs.listStatus(stage).toSeq
-        .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-        .foreach { s =>
-          val dst = new Path(root, prefix + s.getPath.getName)
-          fs.mkdirs(dst.getParent)
-          require(fs.rename(s.getPath, dst),
-            s"Manifest: compaction move failed: ${s.getPath} -> $dst")
-          moved += prefix + s.getPath.getName
-        }
-      fs.delete(stage, true)
-    }
-    commit(fs, root, v0 + 1,
-      files.filterNot(compacted.contains) ++ moved.result(), schema)
-    v0 + 1
+    val compacted = groups.values.flatten.map(_._1).toSet
+    // every group stages into one stage, under its parent dir's name;
+    // append mode, since the root group's target is the stage itself
+    publish(spark, dir, schema) { stage =>
+      groups.foreach { case (parent, group) =>
+        val n = ((group.map(_._2).sum + targetBytes - 1) / targetBytes).toInt
+        // coalesce, not repartition: compaction must not shuffle
+        spark.read.parquet(group.map(g => s"$dir/${g._1}"): _*)
+          .coalesce(n.max(1)).write.mode(SaveMode.Append)
+          .parquet(if (parent.isEmpty) stage else s"$stage/$parent")
+      }
+    }((base, moved) => base.filterNot(compacted) ++ moved)
   }
 
-  /** Delete top-level data files not referenced by the latest
-    * manifest, plus abandoned `.stage-*` dirs. Returns what was
-    * deleted. Requires at least one commit (without a manifest there
-    * is no authority on what is garbage). NOT safe concurrent with a
+  /** Delete data files not referenced by the latest manifest, plus
+    * abandoned `.stage-*` dirs. Returns what was deleted. Requires at
+    * least one commit (without a manifest there is no authority on
+    * what is garbage). NOT safe concurrent with a
     * reader of a SUPERSEDED snapshot — same caveat as Delta VACUUM —
     * and NOT safe concurrent with a live WRITER either: clearing the
     * lock an in-flight writer holds (version latest+1, between its
@@ -485,7 +406,7 @@ object Manifest {
       case None => throw new IllegalStateException(
         s"Manifest.vacuum: no manifest at $dir")
     }
-    val deadFiles = plainListing(fs, root).filterNot(live.contains)
+    val deadFiles = visibleFiles(fs, root).filterNot(live.contains).toVector
     deadFiles.foreach(f => fs.delete(new Path(root, f), false))
     val deadStages =
       if (!fs.exists(root)) Seq.empty

@@ -97,36 +97,23 @@ object Tables {
   def readTable(spark: SparkSession, path: String): DataFrame =
     Manifest.read(spark, path)
 
+  /** True iff `path` holds at least one DATA file (ignoring `_`/`.`
+    * markers like _temporary or _SUCCESS) — a crashed write must not
+    * shadow a valid later tier (the reference probes _delta_log, i.e.
+    * validity, not bare existence). Also the sessions table's "has a
+    * snapshot to merge" probe ([[graft.streaming.Sessionize.run]]). */
+  private[graft] def hasDataFiles(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    Manifest.visibleFiles(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p).hasNext
+  }
+
   /** Tiered silver read (pipeline_local/to_gold/gld_match.py:78-106):
     * the reference's local gold job probes local Delta → S3 Delta →
     * loose CSV files. Spark analogue: first existing parquet location
     * wins (local or remote — one code path, the FS scheme decides),
     * else a recursive CSV directory scan; schema pinned throughout so
     * every tier yields identical types. */
-  /** True iff `path` holds at least one DATA file (ignoring `_`/`.`
-    * markers like _temporary or _SUCCESS) — a crashed write must not
-    * shadow a valid later tier (the reference probes _delta_log, i.e.
-    * validity, not bare existence). */
-  private def hasDataFiles(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
-    if (fs.getFileStatus(p).isFile) return true
-    // EVERY path component below the root must be visible: a part-file
-    // nested under _temporary/ (crashed write) is hidden to spark.read's
-    // path filter, so counting it as data would pick a tier that then
-    // reads as empty.
-    val root = fs.makeQualified(p).toUri.getPath.stripSuffix("/")
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val rel = it.next().getPath.toUri.getPath
-        .stripPrefix(root).stripPrefix("/")
-      if (rel.split("/").forall(c =>
-        !c.startsWith("_") && !c.startsWith("."))) return true
-    }
-    false
-  }
-
   def readSilverTiered(spark: SparkSession, parquetPaths: Seq[String],
                        csvDir: Option[String],
                        schema: org.apache.spark.sql.types.StructType): DataFrame =
@@ -358,15 +345,6 @@ object Tables {
       }
     }.sortBy(_._1).map(_._2)
   }
-
-  /** The sharded delivery as ONE DataFrame in shard-resolved form:
-    * reads [[shardedPairFiles]]'s snapshot (partition-value column
-    * `pair_shard` included via basePath). Row order within a Spark
-    * read is not a contract — consumers needing the global order
-    * stream [[shardedPairFiles]] in sequence. */
-  def readShardedPairs(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("basePath", path)
-      .parquet(shardedPairFiles(spark, path): _*)
 
   /** S12 — table existence probe (ex_match_bs.py:452-457; the local
     * `_delta_log` check in to_silver/slvr_match.py:242 becomes an

@@ -84,6 +84,16 @@ object Sessionize {
   /** File-stream entry: watch `eventsDir` for parquet event files and
     * maintain a sessions table at `outPath` via foreachBatch upsert
     * (latest snapshot per (user_id, session_id) wins).
+    *
+    * Each micro-batch merges into the table's committed snapshot
+    * ([[graft.io.Manifest.read]]) and publishes the result with
+    * [[graft.io.Manifest.publishOverwrite]]: one manifest commit, so a
+    * crash at any step leaves the last committed table whole, and the
+    * replayed batch merges into it again. Files a crashed batch left
+    * behind are never read. [[graft.io.Manifest.vacuum]] then deletes
+    * the superseded snapshot and any such leftovers, so the directory
+    * holds one snapshot and a plain parquet read of `outPath` sees
+    * exactly the table. Single writer: one query per `outPath`.
     */
   def run(spark: SparkSession, eventsDir: String, outPath: String,
           checkpoint: String, gapUs: Long = 1800000000L) = {
@@ -119,29 +129,19 @@ object Sessionize {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[SessionSnapshot], _: Long) =>
         val spark2 = batch.sparkSession
+        // data files, not the bare directory: a first drain that died
+        // mid-publish leaves a directory holding only its stage
         val updated =
-          if (graft.io.Tables.tableExists(spark2, outPath)) {
-            val existing = spark2.read.parquet(outPath)
-            existing
+          if (graft.io.Tables.hasDataFiles(spark2, outPath))
+            graft.io.Manifest.read(spark2, outPath)
               .join(batch.toDF(), Seq("user_id", "session_id"), "left_anti")
               .unionByName(batch.toDF())
-          } else batch.toDF()
-        // write-to-temp then swap via out -> old, tmp -> out: `updated`
-        // reads the current table lazily, so it must fully materialize
-        // before the old dir moves; the current table survives a crash
-        // at every step (worst case it sits at out_old for recovery),
-        // and rename results are checked rather than assumed.
-        val out = new org.apache.hadoop.fs.Path(outPath)
-        val tmp = new org.apache.hadoop.fs.Path(outPath + "_tmp")
-        val old = new org.apache.hadoop.fs.Path(outPath + "_old")
-        val fs = out.getFileSystem(spark2.sparkContext.hadoopConfiguration)
-        fs.delete(tmp, true); fs.delete(old, true)
-        updated.write.mode("overwrite").parquet(tmp.toString)
-        if (fs.exists(out) && !fs.rename(out, old))
-          throw new java.io.IOException(s"swap failed: $out -> $old")
-        if (!fs.rename(tmp, out))
-          throw new java.io.IOException(s"swap failed: $tmp -> $out")
-        fs.delete(old, true)
+          else batch.toDF()
+        // `updated` reads the committed snapshot lazily; the publish
+        // writes the new one beside it and swaps by one manifest commit,
+        // and only then does vacuum drop the superseded files
+        graft.io.Manifest.publishOverwrite(updated, outPath)
+        graft.io.Manifest.vacuum(spark2, outPath)
         ()
       }
       .start()

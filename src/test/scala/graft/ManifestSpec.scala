@@ -13,7 +13,8 @@ import graft.io.Manifest
   * overwrite flips snapshots atomically while superseded files remain
   * until vacuum, a pre-manifest table is adopted before its first
   * append lands, and an accidental second writer fails loudly on the
-  * version CAS. */
+  * version CAS. Every publish entry point runs one core, so the
+  * failed-write and missing-directory cases are pinned for each. */
 class ManifestSpec extends SparkSpec {
 
   import spark.implicits._
@@ -289,5 +290,72 @@ class ManifestSpec extends SparkSpec {
     // an uncommitted straggler file is invisible through readTable
     df(6 until 9).write.mode(SaveMode.Append).parquet(dir)
     assert(graft.io.Tables.readTable(spark, dir).count() === 6L)
+  }
+
+  test("a partitioned snapshot reads back with its committed schema: " +
+    "string partition values are not re-inferred as numbers") {
+    val dir = freshDir("schema")
+    Manifest.publishPartitionUpsert(
+      Seq((1L, "01"), (2L, "1"), (3L, "2")).toDF("id", "match"), dir,
+      Seq("match"))
+    val got = Manifest.read(spark, dir)
+    assert(got.schema("match").dataType === org.apache.spark.sql.types.StringType)
+    assert(got.collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
+      Set((1L, "01"), (2L, "1"), (3L, "2")))
+  }
+
+  /** Every publish entry point, driven with a write that fails or
+    * succeeds: (name, publish of `ok` or of a failing write into `dir`,
+    * the snapshot's ids). */
+  private val modes: Seq[(String, (String, Boolean) => Long, String => Set[Long])] = {
+    val boom = org.apache.spark.sql.functions.udf { (x: Long) =>
+      if (x == 22L) throw new IllegalStateException("boom") else x }
+    def input(ok: Boolean) = {
+      val d = df(20 until 24)
+      if (ok) d else d.select(boom($"id").as("id"))
+    }
+    def famIds(dir: String) = Manifest.readUnder(spark, dir, Seq("fam")).head
+      .select("id").collect().map(_.getLong(0)).toSet
+    Seq(
+      ("append", (dir, ok) => Manifest.publishAppend(input(ok), dir), rows),
+      ("partition upsert", (dir, ok) => Manifest.publishPartitionUpsert(
+        input(ok).withColumn("part", $"id" % 2), dir, Seq("part")), rows),
+      ("publishAppendUnder", (dir, ok) =>
+        Manifest.publishAppendUnder(input(ok), dir, "fam"), famIds),
+      ("publishOverwriteStaged", (dir, ok) =>
+        Manifest.publishOverwriteStaged(spark, dir) { stage =>
+          df(20 until 24).write.parquet(stage)
+          if (!ok) throw new IllegalStateException("boom")
+        }, rows))
+  }
+
+  modes.foreach { case (name, publish, _) =>
+    test(s"$name: a publish whose write fails commits nothing; vacuum " +
+      "removes its stage") {
+      val dir = freshDir("failed")
+      Manifest.publishOverwrite(df(0 until 5), dir)
+      intercept[Exception](publish(dir, false))
+      assert(Manifest.latest(spark, dir).get._1 === 1L)
+      assert(rows(dir) === (0L until 5L).toSet)
+      def stages = new java.io.File(dir).list().filter(_.startsWith(".stage-"))
+      // a failed Spark job deletes its own output dir; a write that
+      // fails after its Spark job (the staged overwrite's) leaves it
+      if (name == "publishOverwriteStaged")
+        assert(stages.nonEmpty, "the failed write should leave its stage")
+      Manifest.vacuum(spark, dir)
+      assert(stages.isEmpty)
+      assert(rows(dir) === (0L until 5L).toSet)
+      assert(spark.read.parquet(dir).count() === 5L)
+    }
+  }
+
+  modes.foreach { case (name, publish, ids) =>
+    test(s"$name: publishing into a missing directory commits version 1") {
+      val dir = freshDir("missing")
+      assert(!Files.exists(Paths.get(dir)))
+      assert(publish(dir, true) === 1L)
+      assert(Manifest.latest(spark, dir).get._1 === 1L)
+      assert(ids(dir) === (20L until 24L).toSet)
+    }
   }
 }

@@ -60,6 +60,40 @@ class SessionizeSpec extends SparkSpec {
     assert(key(streamed) === key(truth))
   }
 
+  test("a crashed drain's leftovers in the sessions table are never read") {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val events = spark.read
+      .parquet("/root/testdata/sf0.001/events.parquet")
+      .select(col("event_id"), col("ts"), col("user_id"))
+    val base = Files.createTempDirectory("graft-sess-crash").toString
+    val inDir = s"$base/in"; val outPath = s"$base/sessions"
+    val ckpt = s"$base/ckpt"
+    val cut = events.orderBy("event_id").limit((events.count() / 2).toInt)
+      .cache()
+    cut.coalesce(1).write.parquet(inDir)
+    // a first drain that died mid-write leaves only its stage: no table
+    val junk = Seq(Sessionize.SessionSnapshot(-1L, 1L, 7L, 0L, 1L)).toDF()
+    junk.write.parquet(s"$outPath/.stage-first")
+    Sessionize.run(spark, inDir, outPath, ckpt, gapUs).awaitTermination()
+
+    // what a drain that died before its commit leaves in the table: data
+    // files moved in but never committed, and a stage it never emptied
+    junk.write.mode("append").parquet(outPath)
+    junk.write.parquet(s"$outPath/.stage-crashed")
+
+    events.join(cut.select("event_id"), Seq("event_id"), "left_anti")
+      .coalesce(1).write.mode("append").parquet(inDir)
+    Sessionize.run(spark, inDir, outPath, ckpt, gapUs).awaitTermination()
+
+    val truth = key(batchSessions(
+      events.select(col("user_id"),
+        graft.queries.Tables.usFromTs(events).as("us"), col("event_id"))))
+    assert(key(graft.io.Manifest.read(spark, outPath)) === truth)
+    // the drain's vacuum leaves one snapshot for plain readers too
+    assert(key(spark.read.parquet(outPath)) === truth)
+    assert(!new java.io.File(s"$outPath/.stage-crashed").exists())
+  }
+
   test("session fold logic handles gaps and batch-order arrival") {
     val evs = Seq(
       Sessionize.Event(1L, 1000L, 1), Sessionize.Event(1L, 2000L, 2),

@@ -13,7 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * query result can depend on an environment variable. The native
   * `graft_*` functions reach a session one way: the table in
   * `graft/plans/GraftExtensions.scala`, which names every kernel once.
-  * Comment lines are skipped (usage blocks may show a builder). */
+  * Tables publish atomically one way: [[graft.io.Manifest]]'s stage →
+  * move → commit, the only code that stages, renames or writes
+  * manifests. Comment lines are skipped (usage blocks may show a
+  * builder). */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private val root = new File("src/main/scala")
@@ -83,5 +86,14 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(counts.forall(_._2 == 1),
       counts.filter(_._2 != 1).map { case (k, n) => s"$k named $n times" }
         .mkString("\n"))
+  }
+
+  test("one publish protocol: staging, manifests and renames appear only " +
+    "in graft/io/Manifest.scala") {
+    val protocol = Seq("\".stage-\"", "_manifests", ".rename(")
+    val users = sources.collect {
+      case (rel, code) if protocol.exists(code.contains) => rel
+    }
+    assert(users === Seq("graft/io/Manifest.scala"))
   }
 }
