@@ -3,7 +3,7 @@ package graft.io
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Manifest-gated atomic publish for multi-file parquet sinks — the
@@ -13,24 +13,24 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * this classpath).
   *
   * Problem closed: every multi-file sink here (gold overwrites,
-  * partition upserts, IVF postings appends) publishes part-files
+  * partition upserts, IVF index rebuilds) publishes part-files
   * non-atomically — a reader listing the directory mid-write sees a
   * TORN snapshot (some new files, or new files next to rows they
   * replace). Parquet gives file-level atomicity (a half-written file
   * is invisible behind its rename), but nothing gave a multi-file
   * SNAPSHOT.
   *
-  * Protocol (single writer, many readers — the contract
-  * [[graft.streaming.StreamIndexAppend]] states). Every publish —
-  * append, partition upsert, family append, overwrite, compaction —
-  * runs the one private core `publish`, and differs only in what it
-  * writes and which snapshot it commits:
+  * Protocol: ONE writer per table at a time, any number of readers.
+  * Callers serialize their publishes to a table; readers need no
+  * coordination. Every publish — append, partition upsert,
+  * overwrite — runs the one private core `publish`, and differs only
+  * in what it writes and which snapshot it commits:
   *
   *  - data files are written STAGED under `<dir>/.stage-<uuid>/`
   *    (dot-prefixed: invisible to Spark's path filter, so even plain
   *    directory readers never see an in-flight publish), then every
-  *    visible staged file is moved into `<dir>` (or a family subdir)
-  *    by per-file rename, relative paths — partition dirs included —
+  *    visible staged file is moved into `<dir>` by per-file rename,
+  *    relative paths — partition and family dirs included —
   *    preserved. Spark part names carry a per-job UUID, so moves never
   *    clobber;
   *  - a commit is one file: `<dir>/_manifests/manifest-<version>`
@@ -221,11 +221,10 @@ object Manifest {
   /** The one publish: resolve the base snapshot (adopting an existing
     * pre-manifest `dir` as version 1 first), let `write` fill a fresh
     * `.stage-<uuid>` path under `dir`, move every visible staged file
-    * into `dir` (into `dir/sub` when `sub` is set, paths then recorded
-    * as `sub/…`), and commit `next(base, moved)` with `schema` as
+    * into `dir`, and commit `next(base, moved)` with `schema` as
     * version + 1. Returns that version. */
   private def publish(spark: SparkSession, dir: String,
-                      schema: Option[StructType], sub: String = "")
+                      schema: Option[StructType])
                      (write: String => Unit)
                      (next: (Seq[String], Seq[String]) => Seq[String]): Long = {
     val (fs, root) = fsOf(spark, dir)
@@ -239,13 +238,12 @@ object Manifest {
     }
     val stage = new Path(root, ".stage-" + java.util.UUID.randomUUID().toString)
     write(stage.toString)
-    val prefix = if (sub.isEmpty) "" else sub + "/"
-    val moved = visibleFiles(fs, stage).toVector.map { rel =>
-      val dst = new Path(root, prefix + rel)
+    val moved = visibleFiles(fs, stage).toVector
+    moved.foreach { rel =>
+      val dst = new Path(root, rel)
       fs.mkdirs(dst.getParent)
       require(fs.rename(new Path(stage, rel), dst),
         s"Manifest: staging move failed: $stage/$rel -> $dst")
-      prefix + rel
     }
     fs.delete(stage, true)
     commit(fs, root, v0 + 1, next(base, moved), schema)
@@ -306,19 +304,6 @@ object Manifest {
     }
   }
 
-  /** Publish `df` as an APPEND into the `sub/` family of the manifest
-    * rooted at `dir`: the new snapshot is the current committed set
-    * (every family) plus `df`'s files under `sub/`. The multi-family
-    * counterpart of [[publishAppend]] — one root manifest governs all
-    * families, so a [[readUnder]] reader sees every family from one
-    * commit. A pre-manifest dir is adopted whole (recursive listing)
-    * first. Returns the committed version. */
-  def publishAppendUnder(df: DataFrame, dir: String, sub: String): Long = {
-    require(sub.nonEmpty && !sub.contains("/") && !sub.startsWith("_") &&
-      !sub.startsWith("."), s"publishAppendUnder: bad family name '$sub'")
-    publish(df.sparkSession, dir, None, sub)(df.write.parquet(_))(_ ++ _)
-  }
-
   /** Publish `df` as a full OVERWRITE: the new snapshot is exactly
     * `df`'s files; superseded files remain until [[vacuum]]. Returns
     * the committed version. */
@@ -341,46 +326,6 @@ object Manifest {
                              schema: Option[StructType] = None)
                             (write: String => Unit): Long =
     publish(spark, dir, schema)(write)((_, moved) => moved)
-
-  /** Small-file compaction — the OPTIMIZE analogue for tables that
-    * accumulate per-batch files (streaming index appends, repeated
-    * [[publishAppend]]s): within each directory of the latest
-    * snapshot, every group of ≥ 2 files smaller than `targetBytes` is
-    * rewritten into ⌈group-bytes / targetBytes⌉ coalesced files and
-    * the swap commits as ONE version — answers are identical before
-    * and after (same rows, same one-manifest-rename visibility), and
-    * superseded small files remain readable by the old snapshot until
-    * [[vacuum]]. Grouping is per PARENT directory so partition-dir
-    * values (`k=v` path components) are preserved — files are only
-    * ever coalesced with siblings. Returns the committed version, or
-    * the current one if nothing qualified. Single-writer contract,
-    * like every publish. */
-  def compact(spark: SparkSession, dir: String, targetBytes: Long): Long = {
-    require(targetBytes >= 1, s"targetBytes must be >= 1, got $targetBytes")
-    val (fs, root) = fsOf(spark, dir)
-    val (v0, files, schema) = latestFull(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"Manifest.compact: no manifest at $dir — publish through " +
-          "Manifest first (compaction needs a committed snapshot to swap)"))
-    val groups = files
-      .map(f => f -> fs.getFileStatus(new Path(root, f)).getLen)
-      .filter(_._2 < targetBytes)
-      .groupBy(_._1.split("/").init.mkString("/"))
-      .filter(_._2.size >= 2)
-    if (groups.isEmpty) return v0
-    val compacted = groups.values.flatten.map(_._1).toSet
-    // every group stages into one stage, under its parent dir's name;
-    // append mode, since the root group's target is the stage itself
-    publish(spark, dir, schema) { stage =>
-      groups.foreach { case (parent, group) =>
-        val n = ((group.map(_._2).sum + targetBytes - 1) / targetBytes).toInt
-        // coalesce, not repartition: compaction must not shuffle
-        spark.read.parquet(group.map(g => s"$dir/${g._1}"): _*)
-          .coalesce(n.max(1)).write.mode(SaveMode.Append)
-          .parquet(if (parent.isEmpty) stage else s"$stage/$parent")
-      }
-    }((base, moved) => base.filterNot(compacted) ++ moved)
-  }
 
   /** Delete data files not referenced by the latest manifest, plus
     * abandoned `.stage-*` dirs. Returns what was deleted. Requires at

@@ -100,9 +100,8 @@ object Tables {
   /** True iff `path` holds at least one DATA file (ignoring `_`/`.`
     * markers like _temporary or _SUCCESS) — a crashed write must not
     * shadow a valid later tier (the reference probes _delta_log, i.e.
-    * validity, not bare existence). Also the sessions table's "has a
-    * snapshot to merge" probe ([[graft.streaming.Sessionize.run]]). */
-  private[graft] def hasDataFiles(spark: SparkSession, path: String): Boolean = {
+    * validity, not bare existence). */
+  private def hasDataFiles(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     Manifest.visibleFiles(
       p.getFileSystem(spark.sparkContext.hadoopConfiguration), p).hasNext
@@ -146,7 +145,7 @@ object Tables {
     * deterministic `df`: re-running overwrites the same partitions with
     * identical rows, which is what makes it the exactly-once write shape
     * for `foreachBatch` sinks keyed by `batch_id`
-    * ([[graft.streaming.StreamNearDedup]], [[graft.streaming.Incremental]]). */
+    * ([[graft.streaming.Incremental]]). */
   def upsertPartitions(df: DataFrame, path: String, cols: Seq[String]): Unit =
     df.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
@@ -222,129 +221,6 @@ object Tables {
   /** S10 — CSV convenience sink (pipeline_local/to_gold/gld_match.py:317-319). */
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-
-  /** Training-shard export — the terminal step of a curation pipeline:
-    * materialize the kept corpus as bounded, globally-ordered parquet
-    * shards a training loader can stream (shard N's keys all precede
-    * shard N+1's; no shard exceeds `recordsPerShard` rows).
-    *
-    * `orderBy` gives the range exchange (a sampled range partitioner —
-    * the scalable global sort); `maxRecordsPerFile` caps each emitted
-    * file without another shuffle. At 100 TB the shard count is
-    * data/recordsPerShard regardless of executor count, and the sort is
-    * the only data-sized movement. */
-  def writeTrainingShards(df: DataFrame, path: String, orderCol: String,
-                          recordsPerShard: Int): Unit = {
-    require(recordsPerShard >= 1, s"recordsPerShard must be >= 1")
-    // manifest-gated (r15 verdict #3): the shards stage under
-    // `.stage-*` and publish as ONE commit — a reader concurrent with
-    // a re-delivery resolves whole-old or whole-new, never a torn
-    // shard set. Superseded shard files remain until Manifest.vacuum;
-    // a consumer listing the directory RAW after a re-delivery must
-    // vacuum first (manifest-resolving readers need not).
-    Manifest.publishOverwriteStaged(df.sparkSession, path,
-      Some(df.schema)) { stage =>
-      df.orderBy(orderCol)
-        .write.option("maxRecordsPerFile", recordsPerShard.toLong)
-        .parquet(stage)
-    }
-    ()
-  }
-
-  /** Sharded delivery for PAIR-SCALE answers (near-duplicate pairs:
-    * [[graft.operators.Dedup.minhashLshPairs]] /
-    * [[graft.operators.Dedup.jaccardPairs]]) — the shape the
-    * q_dedup_minhash_lsh contract note calls for. At sf100 the
-    * registry query's trailing global `orderBy(doc_a, doc_b)` is
-    * ~154 s spent canonically ordering a 959.9M-row ANSWER; at 100×
-    * that, the total-order CONTRACT is the scale-killer, not the
-    * operator. This sink delivers the same information as
-    * range-disjoint sorted shards:
-    *
-    *  - shard key `s = keyA div shardWidth` — ARITHMETIC boundaries on
-    *    the bounded id domain, so (unlike `orderBy`/`repartitionByRange`,
-    *    whose RangePartitioner runs a SAMPLING JOB that re-executes the
-    *    whole pair pipeline's reduce side a second time) the only
-    *    data-sized movement is ONE hash exchange on `s`;
-    *  - `sortWithinPartitions(s, keyA, keyB)` + `partitionBy(s)`: the
-    *    writer's required clustering is already satisfied, so no
-    *    second sort — each shard directory gets exactly one file
-    *    (a shard's hash bucket lives in one task), internally sorted
-    *    by (keyA, keyB);
-    *  - shard s holds exactly the pairs with keyA ∈
-    *    [s·width, (s+1)·width): boundaries are range-disjoint BY
-    *    CONSTRUCTION, so concatenating shard dirs in ascending `s`
-    *    reproduces the global (keyA, keyB) order bit-for-bit
-    *    (ShardedPairsSpec pins it against `orderBy`).
-    *
-    * At 100 TB: shard count = id-domain/width regardless of executor
-    * count; per-task sorts are spillable; a consumer needing global
-    * order streams dirs in shard order, one needing a slice opens only
-    * its shards. Pick width so the SHARD COUNT IS SEVERAL TIMES the
-    * shuffle parallelism: shards land on tasks by hash, and k shards
-    * into k partitions leaves ~1/e of the tasks empty while others
-    * sort two or three shards (balls-in-bins) — at ≥8× partitions the
-    * law of large numbers balances the exchange like a range
-    * partitioner would, without its sampling job. Skew: a hot keyA
-    * window inflates its shard — width is the same knob (ids here are
-    * dense and uniform). Contract: keyA must be a non-negative
-    * integral id (`div` truncates toward zero, which is floor only
-    * for non-negatives). */
-  def writeShardedPairs(pairs: DataFrame, path: String, shardWidth: Long,
-                        keyA: String = "doc_a", keyB: String = "doc_b"): Unit = {
-    require(shardWidth >= 1, s"shardWidth must be >= 1, got $shardWidth")
-    import org.apache.spark.sql.functions.{col, expr}
-    // manifest-gated (r15 verdict #3): shard files stage under
-    // `.stage-*` (relative `pair_shard=N/part-*` paths preserved by the
-    // move) and publish as ONE commit — a reader concurrent with a
-    // re-delivery resolves whole-old or whole-new, never a torn shard
-    // set, and the commit adds no data movement. After a RE-delivery
-    // the one-file-per-shard-dir property holds for the manifest's
-    // listing, not the raw directory, until Manifest.vacuum reclaims
-    // the superseded files.
-    // the shard column/dir is `pair_shard=N`, NOT underscore-prefixed:
-    // `_`-prefixed names are HIDDEN to Spark's path listing (the same
-    // filter that hides `_manifests`), so the pre-r16 `__shard=N`
-    // layout was invisible to any plain directory read — and to the
-    // staged move. Caught by ShardedPairsSpec's manifest-gating case.
-    require(!pairs.columns.contains("pair_shard"),
-      "writeShardedPairs: input already has a pair_shard column")
-    Manifest.publishOverwriteStaged(pairs.sparkSession, path,
-      Some(pairs.schema)) { stage =>
-      pairs
-        .withColumn("pair_shard", expr(s"$keyA div $shardWidth"))
-        .repartition(col("pair_shard"))
-        .sortWithinPartitions("pair_shard", keyA, keyB)
-        .write.partitionBy("pair_shard").parquet(stage)
-    }
-    ()
-  }
-
-  /** The manifest-resolving CONSUMER of [[writeShardedPairs]] (ADVICE
-    * r16): the delivery's data files in ascending shard order — the
-    * exact concat-in-this-order file list that reproduces the global
-    * (keyA, keyB) sort. Resolving through the manifest (not a raw
-    * directory listing) makes the one-sorted-file-per-shard contract
-    * hold ACROSS re-deliveries: between a re-delivery's commit and a
-    * `Manifest.vacuum`, the raw directory holds both generations'
-    * shard files, but the committed snapshot names exactly the new
-    * ones. Returns absolute paths. */
-  def shardedPairFiles(spark: SparkSession, path: String): Seq[String] = {
-    val files = Manifest.latest(spark, path) match {
-      case Some((_, fs)) => fs
-      case None => throw new IllegalStateException(
-        s"shardedPairFiles: no manifest at $path — was the delivery " +
-          "written by writeShardedPairs?")
-    }
-    val Shard = "pair_shard=(-?\\d+)".r
-    files.map { f =>
-      f.split("/").collectFirst { case Shard(n) => n.toLong } match {
-        case Some(n) => (n, s"$path/$f")
-        case None => throw new IllegalStateException(
-          s"shardedPairFiles: non-shard file '$f' in the delivery snapshot")
-      }
-    }.sortBy(_._1).map(_._2)
-  }
 
   /** S12 — table existence probe (ex_match_bs.py:452-457; the local
     * `_delta_log` check in to_silver/slvr_match.py:242 becomes an

@@ -29,24 +29,6 @@ import graft.functions.TextAnalysis
   */
 object BloomFilter {
 
-  /** A built filter with the exact (m, k) it was built under. Probe
-    * positions are a function of (m, k), so a filter probed with
-    * different parameters than it was built with silently breaks the
-    * zero-false-negative guarantee (or trips an out-of-range
-    * `element_at`). Bundling the three into one value makes that drift
-    * unrepresentable — prefer [[build]] + [[Filter.contains]] over the
-    * raw `(words, m, k)` triple. */
-  final case class Filter(words: Array[Long], m: Int, k: Int) {
-    require(m % 64 == 0 && m >= 64 && k >= 1, s"bad filter shape m=$m k=$k")
-    require(words.length * 64 == m,
-      s"filter words carry ${words.length * 64} bits but m=$m")
-    def contains(gram: Column): Column = membershipCol(gram, words, m, k)
-  }
-
-  /** [[buildBits]] bundled with its own (m, k) — see [[Filter]]. */
-  def build(grams: DataFrame, m: Int, k: Int): Filter =
-    Filter(buildBits(grams, m, k), m, k)
-
   /** Filter size for `n` inserted elements: ~14 bits/element rounded up
     * to whole words, floored at 65536 bits (8 KiB — below that the
     * filter is cheaper than the arithmetic around it). 14 bits/element
@@ -96,15 +78,16 @@ object BloomFilter {
     * the same double-hash arithmetic as the batch path, with the string
     * hash folded by [[graft.functions.PortableHash.cp31uCol]] instead
     * of the UDF. Because it is expressions all the way down it composes
-    * anywhere a UDF cannot follow: inside array lambdas
-    * (`filter(grams, g => membershipCol(g, …))`) and on STREAMING
-    * frames, where it filters stateless at the ingest edge
-    * ([[graft.streaming.StreamDecontaminate]]). */
+    * anywhere a UDF cannot follow, such as inside array lambdas
+    * (`filter(grams, g => membershipCol(g, …))`). Probe positions are
+    * a function of (m, k), so `words` must come from [[buildBits]] with
+    * the same `m` and `k`: a mismatch fails here instead of silently
+    * breaking the zero-false-negative guarantee. */
   def membershipCol(gram: Column, words: Array[Long], m: Int, k: Int): Column = {
     require(m % 64 == 0 && m >= 64 && k >= 1, s"bad filter shape m=$m k=$k")
     require(words.length * 64 == m,
       s"filter words carry ${words.length * 64} bits but m=$m — " +
-        "probe (m, k) must match the build parameters (use Filter to bundle them)")
+        "probe (m, k) must match the build parameters")
     val bw = typedLit(words.toSeq)
     val u = graft.functions.PortableHash.cp31uCol(gram)
     val h1 = pmod(u, lit(m.toLong))

@@ -33,20 +33,9 @@ import graft.functions.{PortableHash, TextAnalysis}
   */
 object QualityClassifier {
 
-  /** The raw logit column over a `text` column — exposed separately so
-    * the streaming ingest gate ([[graft.streaming.StreamQualityGate]])
-    * can append it to a streaming frame statelessly (a join against
-    * [[scoreDocs]]' projected output would be a stream-stream
-    * self-join, which append mode rejects without watermarks). */
-  def scoreCol(text: Column, weights: Seq[Double], bias: Double): Column =
-    scoreFromToks(TextAnalysis.tokens(text), weights, bias)
-
-  /** The same logit over an ALREADY-TOKENIZED array column. Split out
-    * so the batch path can stage the `split` once as its own projected
-    * attribute (see [[scoreDocs]]) while the streaming gate keeps the
-    * single-column [[scoreCol]] form; both run the identical per-token
-    * arithmetic, so stream/batch bit-parity
-    * (StreamQualityGateSpec) is preserved by construction.
+  /** The raw logit over an already-tokenized array column. The batch
+    * path stages the `split` once as its own projected attribute (see
+    * [[scoreDocs]]) and scores that attribute here.
     *
     * Evaluation: the fused native [[graft.plans.QualityScore]]
     * expression (one codegen loop — UTF-8 byte hash per token, direct

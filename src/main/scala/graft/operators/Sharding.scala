@@ -7,11 +7,9 @@ import org.apache.spark.sql.functions._
 /** Training-shard assignment: give every document a deterministic global
   * training order — a reproducible pseudo-shuffle by the portable hash,
   * so the order is layout- and engine-independent — and cut that order
-  * into fixed-size shards. The logical counterpart of
-  * [[graft.io.Tables.writeTrainingShards]] (which delegates shard
-  * membership to Spark's range partitioner + maxRecordsPerFile): this
-  * one *names* each document's shard, so a loader manifest, a resume
-  * cursor, or a per-shard audit can be computed without writing files.
+  * into fixed-size shards. Each document's shard is *named*, so a
+  * loader manifest, a resume cursor, or a per-shard audit can be
+  * computed without writing files.
   *
   * Scale shape (the [[Sampling.selectToTokenBudget]] recipe): a single
   * global `row_number` window would sort the corpus in ONE task, so the

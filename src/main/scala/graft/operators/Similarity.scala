@@ -840,8 +840,8 @@ object Similarity {
                        k: Int, nProbe: Int = 4): DataFrame = {
     // ONE manifest resolution for BOTH families: the quantizer and the
     // postings it scores always come from the same committed snapshot,
-    // even while a concurrent (single-writer) append or rebuild is
-    // mid-flight (r17 — the per-family reads could mix generations)
+    // even while a concurrent (single-writer) rebuild is mid-flight
+    // (r17 — the per-family reads could mix generations)
     val Seq(centDf, post) =
       graft.io.Manifest.readUnder(spark, dir, Seq("centroids", "postings"))
     val (probes, cand) = probeIndex(centDf, post,
@@ -901,64 +901,6 @@ object Similarity {
         adc.where(col("neighbor_id").isin(ids: _*)), Seq("neighbor_id"))
     }
     rerank(adcTier(adcIn, rerankK), v, k, site)
-  }
-
-  /** Incrementally append NEW vectors to a saved float index
-    * ([[buildIvfIndex]]) WITHOUT a refit — the path a streaming ingest
-    * chain (StreamQualityGate → index) needs at scale, where re-running
-    * the Lloyd fit + full-corpus assignment per arriving batch cannot
-    * ship. The SAVED quantizer (centroids parquet) assigns the new
-    * vectors — `iters` must equal the build's value (default 2 both
-    * places): the assignment hierarchy ([[hierArgminCol]]'s super fit)
-    * is itself derived from the centroids with `iters` Lloyd rounds, so
-    * a mismatch would route borderline vectors differently than the
-    * build did. New postings land as additional list_id-clustered
-    * parquet files under the `postings/` family, committed through the
-    * index ROOT's manifest ([[graft.io.Manifest.publishAppendUnder]] —
-    * the same one-snapshot root every serve resolves).
-    *
-    * Concurrent-reader contract (pinned by StreamIndexAppendSpec +
-    * ManifestSpec): SINGLE WRITER, manifest-resolving readers. The
-    * append stages its files dot-hidden, moves them in, and commits
-    * ONE manifest rename — so a reader (every serve path here goes
-    * through [[graft.io.Manifest.read]]) sees the pre-append snapshot
-    * until the commit and the whole batch after it: BATCH-level
-    * all-or-nothing visibility, the r14 verdict's torn-read class
-    * closed. A pre-manifest index dir is adopted whole (recursive
-    * listing, both families) on its first append; until then readers
-    * fall back to the plain directory listing, whose guarantee is only
-    * file-level atomicity. Concurrent WRITERS remain outside the contract —
-    * serialize appends (the streaming tail's foreachBatch already
-    * does); an accidental second writer fails loudly on the manifest
-    * version CAS.
-    *
-    * Idempotency: a vec_id already present in the index is REJECTED
-    * fail-fast (the keyed-MERGE dup-source-key precedent) — a
-    * redelivered batch must not double-insert postings, and silently
-    * skipping would hide an id-allocation bug upstream. Returns the
-    * number of postings appended (null-vv rows drop, the
-    * [[assignLists]] contract). */
-  def appendToIvfIndex(emb: DataFrame, dir: String, iters: Int = 2): Long = {
-    // same single-resolution rule as the serves: the quantizer that
-    // assigns this batch and the postings the dup rail probes come
-    // from ONE committed snapshot of the index root
-    val Seq(centDf, postDf) = graft.io.Manifest.readUnder(emb.sparkSession,
-      dir, Seq("centroids", "postings"))
-    val quant = FlatQuantizer(collectCents(centDf), iters)
-    val v = vectors(emb)
-    val dups = postDf
-      .select("vec_id")
-      .join(v.select("vec_id"), "vec_id").limit(5)
-      .collect().map(_.getLong(0))
-    require(dups.isEmpty,
-      s"appendToIvfIndex: vec_ids already indexed (re-delivery?): " +
-        dups.mkString(", "))
-    val rows = quant.assign(v)
-      .select(col("vec_id"), col("vec"), col("vv"), col("list_id"))
-      .repartition(col("list_id"))
-      .localCheckpoint() // one computation feeds both the write + count
-    graft.io.Manifest.publishAppendUnder(rows, dir, "postings")
-    rows.count()
   }
 
   /** Per-vector int8 scale: max |component| (floored at 1e-30). */

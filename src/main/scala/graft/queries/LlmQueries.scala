@@ -732,21 +732,14 @@ object LlmQueries {
     // signature-agreement gate, and exact token-set Jaccard — which
     // also independently proves banding+gate lose no emitted pair.
     //
-    // DELIVERY NOTE (r13 verdict; operator landed r15): the trailing
-    // global orderBy(doc_a, doc_b) exists so the DuckDB hash compare
-    // sees a canonical row order — at sf100 it is ~154 s of the
-    // query's cost, sorting a 959.9M-row ANSWER whose production is
-    // already at its attributed floor (sig 42 s / bucket exchange
-    // ~220 s / gate+verify answer-bound). At 100 TB the canonical-
-    // order CONTRACT itself is the scale-killer, not the operator:
-    // a pair answer that size is delivered by
-    // io.Tables.writeShardedPairs — arithmetic range-disjoint shards,
-    // one hash exchange (no RangePartitioner sampling pass), each
-    // shard one internally-sorted file; concat in boundary order ≡
-    // this global sort (ShardedPairsSpec pins it; sf100 A/B in
-    // BASELINE.md r15). The oracle keeps the
-    // orderBy because the harness compares one hash, not a sharded
-    // layout.
+    // DELIVERY NOTE (r13 verdict): the trailing global
+    // orderBy(doc_a, doc_b) exists only because the oracle compares
+    // ONE hash of the answer, which needs a canonical row order. At
+    // sf100 it is ~154 s of the query's cost, sorting a 959.9M-row
+    // ANSWER whose production is already at its attributed floor
+    // (sig 42 s / bucket exchange ~220 s / gate+verify answer-bound):
+    // the canonical-order contract, not the operator, is what grows
+    // with the answer.
     Q("q_dedup_minhash_lsh",
       (s, dir) => Dedup.minhashLshPairs(documents(s, dir), 0.9,
         bands = 8, rows = 8).orderBy("doc_a", "doc_b"),

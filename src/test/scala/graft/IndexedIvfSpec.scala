@@ -71,47 +71,6 @@ class IndexedIvfSpec extends SparkSpec {
     assert(spread === 1L)
   }
 
-  test("append(A, B) serves exactly like build(A∪B) with the SAME quantizer " +
-    "(fit on A), and re-append is rejected") {
-    val dir = ixDir + "_append"
-    val total = emb.count()
-    val cut = total / 2
-    val a = emb.where(col("vec_id") < cut)
-    val b = emb.where(col("vec_id") >= cut)
-    Similarity.buildIvfIndex(a, dir) // quantizer fit on A only
-    // the plain subdir reads below need the dir listing == the live
-    // snapshot (staged rebuilds keep prior runs' generations around)
-    graft.io.Manifest.vacuum(spark, dir)
-    val appended = Similarity.appendToIvfIndex(b, dir)
-    assert(appended === total - cut)
-    // postings after append == assignment of the FULL corpus with the
-    // saved (A-fit) quantizer: same (vec_id, list_id) set
-    val post = spark.read.parquet(s"$dir/postings")
-    assert(post.count() === total)
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .select("list_id", "cvec", "cc").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-      .sortBy(_._1).toSeq
-    val ndot = graft.plans.DotProduct.dotCol(_: org.apache.spark.sql.Column, _: org.apache.spark.sql.Column)
-    val v = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-      .withColumn("vv", ndot(col("vec"), col("vec")))
-    val expected = Similarity.assignLists(v, cents, 2)
-      .select("vec_id", "list_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet
-    val got = post.select("vec_id", "list_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(got === expected)
-    // serve sanity over the merged index
-    val served = Similarity.ivfTopKFromIndex(spark, dir, 5, 5)
-    assert(served.count() > 0L)
-    // idempotency: a redelivered batch fails fast, postings unchanged
-    val e = intercept[IllegalArgumentException] {
-      Similarity.appendToIvfIndex(b, dir)
-    }
-    assert(e.getMessage.contains("already indexed"))
-    assert(spark.read.parquet(s"$dir/postings").count() === total)
-  }
-
   test("int8 index: generous rerank is bit-identical to the full-precision " +
     "index; practical rerank holds recall") {
     val dir = ixDir + "_int8"

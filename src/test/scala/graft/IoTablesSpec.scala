@@ -135,32 +135,6 @@ class IoTablesSpec extends SparkSpec {
     }
   }
 
-  test("training shards: bounded files, global order across shards, lossless") {
-    val df = spark.range(5000).select(col("id").as("doc_id"),
-      concat(lit("t"), col("id")).as("text"))
-    val path = s"$base/shards"
-    Tables.writeTrainingShards(df, path, "doc_id", recordsPerShard = 500)
-    val files = new java.io.File(path).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-    assert(files.nonEmpty)
-    // every shard is bounded and internally/externally ordered: the
-    // per-file [min, max] doc_id ranges must not overlap
-    val ranges = files.map { f =>
-      val d = spark.read.parquet(f.getAbsolutePath)
-      val n = d.count()
-      assert(n <= 500, s"${f.getName}: $n rows > 500")
-      val mm = d.agg(min("doc_id"), max("doc_id")).head()
-      (mm.getLong(0), mm.getLong(1))
-    }.sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, aMax), (bMin, _)) =>
-        assert(aMax < bMin, s"shard ranges overlap: $aMax >= $bMin")
-      case _ =>
-    }
-    // lossless round-trip
-    assert(spark.read.parquet(path).count() === 5000)
-  }
-
   test("S10: CSV sink round-trips") {
     val df = spark.range(5).select(col("id"), (col("id") * 2).as("dbl"))
     val path = s"$base/csv-out"

@@ -169,46 +169,6 @@ class ManifestSpec extends SparkSpec {
     assert(rows(dir) === (0L until 5L).toSet)
   }
 
-  test("compact rewrites small-file groups into one committed swap: " +
-    "identical rows, monotone version, vacuum reclaims the originals") {
-    val dir = freshDir("compact")
-    (0 until 6).foreach(i => Manifest.publishAppend(df(i * 3 until i * 3 + 3), dir))
-    val (v0, files0) = Manifest.latest(spark, dir).get
-    assert(files0.size >= 6) // one+ file per append
-    val v1 = Manifest.compact(spark, dir, 64L << 20)
-    assert(v1 === v0 + 1)
-    val files1 = Manifest.latest(spark, dir).get._2
-    assert(files1.size === 1, s"expected one coalesced file, got $files1")
-    assert(rows(dir) === (0L until 18L).toSet)
-    // superseded originals linger (old-snapshot readers unbroken)...
-    assert(spark.read.parquet(dir).count() === 36L)
-    // ...until vacuum; then the plain dir holds only the compacted file
-    Manifest.vacuum(spark, dir)
-    assert(spark.read.parquet(dir).count() === 18L)
-    assert(rows(dir) === (0L until 18L).toSet)
-    // idempotent: nothing left to compact -> same version back
-    assert(Manifest.compact(spark, dir, 64L << 20) === v1)
-  }
-
-  test("compact groups per partition dir: sibling files coalesce, " +
-    "partition values survive") {
-    val dir = freshDir("compactpart")
-    val t = Seq((1L, "p1"), (2L, "p1"), (3L, "p1"), (4L, "p2"))
-      .toDF("id", "part").repartition(4) // round-robin: 1 row/task -> 3 p1 files
-    Manifest.publishPartitionUpsert(t, dir, Seq("part"))
-    val before = Manifest.latest(spark, dir).get._2
-    assert(before.count(_.startsWith("part=p1/")) >= 2,
-      s"need multiple p1 files for the test to bite: $before")
-    Manifest.compact(spark, dir, 64L << 20)
-    val after = Manifest.latest(spark, dir).get._2
-    assert(after.count(_.startsWith("part=p1/")) === 1)
-    assert(after.forall(f => f.startsWith("part=p1/") || f.startsWith("part=p2/")),
-      s"compaction moved a file out of its partition dir: $after")
-    val snap = Manifest.read(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(snap === Set((1L, "p1"), (2L, "p1"), (3L, "p1"), (4L, "p2")))
-  }
-
   test("multi-family commits: readUnder resolves every family from ONE " +
     "snapshot; a rebuild mid-flight can never mix families") {
     val dir = freshDir("families")
@@ -242,28 +202,6 @@ class ManifestSpec extends SparkSpec {
       Manifest.readUnder(spark, dir, Seq("nosuch"))
     }
     assert(e.getMessage.contains("nosuch"))
-  }
-
-  test("publishAppendUnder grows ONE family under the root manifest; " +
-    "other families ride the same commit unchanged") {
-    val dir = freshDir("appendunder")
-    Manifest.publishOverwriteStaged(spark, dir) { stage =>
-      df(0 until 2).write.parquet(s"$stage/meta")
-      df(10 until 13).write.parquet(s"$stage/data")
-    }
-    val v = Manifest.publishAppendUnder(df(13 until 16).toDF(), dir, "data")
-    assert(v === 2L)
-    val Seq(meta, data) = Manifest.readUnder(spark, dir, Seq("meta", "data"))
-    assert(meta.count() === 2L)
-    assert(data.select("id").collect().map(_.getLong(0)).toSet ===
-      (10L until 16L).toSet)
-    // family names that would escape the layout are rejected
-    intercept[IllegalArgumentException] {
-      Manifest.publishAppendUnder(df(0 until 1).toDF(), dir, "a/b")
-    }
-    intercept[IllegalArgumentException] {
-      Manifest.publishAppendUnder(df(0 until 1).toDF(), dir, "_hidden")
-    }
   }
 
   test("vacuum lock grace: an AHEAD lock younger than the grace is kept " +
@@ -314,14 +252,10 @@ class ManifestSpec extends SparkSpec {
       val d = df(20 until 24)
       if (ok) d else d.select(boom($"id").as("id"))
     }
-    def famIds(dir: String) = Manifest.readUnder(spark, dir, Seq("fam")).head
-      .select("id").collect().map(_.getLong(0)).toSet
     Seq(
       ("append", (dir, ok) => Manifest.publishAppend(input(ok), dir), rows),
       ("partition upsert", (dir, ok) => Manifest.publishPartitionUpsert(
         input(ok).withColumn("part", $"id" % 2), dir, Seq("part")), rows),
-      ("publishAppendUnder", (dir, ok) =>
-        Manifest.publishAppendUnder(input(ok), dir, "fam"), famIds),
       ("publishOverwriteStaged", (dir, ok) =>
         Manifest.publishOverwriteStaged(spark, dir) { stage =>
           df(20 until 24).write.parquet(stage)

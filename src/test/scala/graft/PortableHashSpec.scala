@@ -181,23 +181,14 @@ class PortableHashSpec extends SparkSpec {
     assert(lang == "en" && nDocs == 1L && nTrue >= 1L && nBloom >= nTrue)
   }
 
-  test("bloom membership rejects words/m drift; Filter bundle cannot drift") {
+  test("bloom membership rejects words/m drift") {
     val grams = Seq("a b c").toDF("gram")
-    val f = BloomFilter.build(grams, m = 256, k = 3)
-    assert(f.words.length == 4)
+    val words = BloomFilter.buildBits(grams, m = 256, k = 3)
+    assert(words.length == 4)
     // probing with an m that disagrees with the built word array is a
     // hard error, not silently-wrong probe positions
     intercept[IllegalArgumentException] {
-      BloomFilter.membershipCol(col("gram"), f.words, m = 512, k = 3)
+      BloomFilter.membershipCol(col("gram"), words, m = 512, k = 3)
     }
-    intercept[IllegalArgumentException] {
-      BloomFilter.Filter(f.words, m = 128, k = 3)
-    }
-    // the bundled filter flags through StreamDecontaminate identically
-    val docs = Seq((1L, "x a b c y"), (2L, "no overlap here"))
-      .toDF("doc_id", "text")
-    val flagged = graft.streaming.StreamDecontaminate.flag(docs, f, n = 3)
-      .select("doc_id", "contaminated").as[(Long, Boolean)].collect().toMap
-    assert(flagged(1L) && !flagged(2L))
   }
 }

@@ -15,8 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft/plans/GraftExtensions.scala`, which names every kernel once.
   * Tables publish atomically one way: [[graft.io.Manifest]]'s stage →
   * move → commit, the only code that stages, renames or writes
-  * manifests. Comment lines are skipped (usage blocks may show a
-  * builder). */
+  * manifests. Every object is reached from an entry point. Comment
+  * lines are skipped (usage blocks may show a builder). */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private val root = new File("src/main/scala")
@@ -28,14 +28,15 @@ class SourceHygieneSpec extends AnyFunSuite {
     "graft/BenchOne.scala" -> Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_RUNS"),
     "graft/tools/Scratch.scala" -> Set("SPARK_GRAFT_NO_SWEEP"))
 
-  /** (path relative to `src/main/scala`, its lines minus comment
-    * lines). A trailing `// ...` stays, so it can only add a hit. */
-  private lazy val sources: Seq[(String, String)] = {
+  /** (path relative to `dir`, its lines minus comment lines) of every
+    * `.scala` file under `dir`. A trailing `// ...` stays, so it can
+    * only add a hit. */
+  private def codeOf(dir: File): Seq[(String, String)] = {
     def walk(f: File): Seq[File] =
       if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    walk(root).map { f =>
-      val rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
+    walk(dir).map { f =>
+      val rel = dir.toPath.relativize(f.toPath).toString.replace('\\', '/')
       val code = Files.readAllLines(f.toPath).asScala.filterNot { l =>
         val t = l.trim
         t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
@@ -43,6 +44,8 @@ class SourceHygieneSpec extends AnyFunSuite {
       rel -> code.mkString("\n")
     }
   }
+
+  private lazy val sources: Seq[(String, String)] = codeOf(root)
 
   test("SparkSession.builder appears only in graft/Session.scala") {
     val builders = sources.collect {
@@ -95,5 +98,33 @@ class SourceHygieneSpec extends AnyFunSuite {
       case (rel, code) if protocol.exists(code.contains) => rel
     }
     assert(users === Seq("graft/io/Manifest.scala"))
+  }
+
+  test("every object under src/main/scala is reached from an entry point") {
+    // a file is reached when reached code names one of its top-level
+    // objects, classes or traits; the roots are the mains, the
+    // extension installed by config string, and the benchmark's code
+    val decl = ("""(?m)^(?:(?:private|sealed|final|abstract|case|implicit)""" +
+      """(?:\[\w+\])?\s+)*(?:object|class|trait)\s+(\w+)""").r
+    val code = sources.toMap
+    val names = code.map { case (rel, c) =>
+      rel -> decl.findAllMatchIn(c).map(_.group(1)).toSet
+    }
+    def named(c: String): Set[String] = names.collect {
+      case (rel, ns) if ns.exists(n => s"\\b$n\\b".r.findFirstIn(c).isDefined) => rel
+    }.toSet
+    val bench = codeOf(new File("perfbench/scala")).map(_._2).mkString("\n")
+    val roots = code.collect { case (rel, c) if c.contains("def main(") => rel }.toSet +
+      "graft/plans/GraftExtensions.scala" ++ named(bench)
+    @annotation.tailrec
+    def reach(seen: Set[String], frontier: Set[String]): Set[String] =
+      if (frontier.isEmpty) seen
+      else {
+        val next = frontier.flatMap(rel => named(code(rel))) -- seen
+        reach(seen ++ next, next)
+      }
+    val unreached = (code.keySet -- reach(roots, roots)).toSeq
+      .flatMap(names).sorted
+    assert(unreached.isEmpty, s"no entry point reaches: ${unreached.mkString(", ")}")
   }
 }
