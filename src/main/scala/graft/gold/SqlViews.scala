@@ -36,9 +36,6 @@ object SqlViews {
     }
   }
 
-  def dropGold(spark: SparkSession): Unit =
-    spark.sql(s"DROP DATABASE IF EXISTS $database CASCADE")
-
   /** README.md:156-168 — the points-table query, verbatim. */
   val pointsTableSql: String =
     """SELECT

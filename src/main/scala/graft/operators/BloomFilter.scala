@@ -21,7 +21,8 @@ import graft.functions.TextAnalysis
   *    engine can express over `unicode(c)`/`ord(c)`; same base hash as
   *    [[Dedup]]'s tokenHash oracle),
   *  - k probe positions by double hashing: `(h1 + j·h2) mod m` with
-  *    `h1 = u32 mod m`, `h2 = 1 + (u32 div m) mod (m−1)`,
+  *    `h1 = u32 mod m`, `h2 = 1 + (u32 div m) mod (m−1)` (one spelling,
+  *    [[probes]], for the build and the membership test),
   *  - the bit array is the distinct probe-position set of the eval
   *    n-grams — at most `m` values collected to the driver (the size of
   *    the filter itself, a constant independent of data volume) and
@@ -40,65 +41,54 @@ object BloomFilter {
     math.max(65536L, math.min(m, Int.MaxValue.toLong - 63L)).toInt
   }
 
-  /** Unsigned low-32 portable code-point fold — the native codegen
+  /** The k probe positions of a gram: `(h1 + j·h2) mod m` with
+    * `h1 = u mod m` and `h2 = 1 + (u div m) mod (m−1)`, over the
+    * unsigned low-32 portable code-point fold `u` — the native codegen
     * expression ([[graft.plans.Cp31Hash]], one primitive loop over the
     * UTF-8 bytes; same base hash as the minhash/simhash token hashes).
     * See [[graft.functions.PortableHash]] for why code points (not
     * UTF-16 code units): the oracle folds `unicode(c)`, and the two
-    * only agree off-BMP if we do too. */
-  private def withProbes(grams: DataFrame, m: Int): DataFrame =
-    grams.withColumn("_h",
-        graft.plans.Cp31Hash.cp31uCol(col("gram")))
-      .withColumn("_h1", pmod(col("_h"), lit(m.toLong)))
-      .withColumn("_h2", lit(1L) + pmod(expr(s"_h div $m"), lit(m - 1L)))
+    * only agree off-BMP if we do too. The one spelling of the double
+    * hashing, shared by [[buildBits]] and [[membershipCol]]. */
+  private def probes(gram: Column, m: Int, k: Int): Seq[Column] = {
+    val u = graft.plans.Cp31Hash.cp31uCol(gram) // u >= 0, so % is mod
+    val h1 = u % m.toLong
+    // integral `div`, not `/`: a double division here ran the sf0.1
+    // corpus filter in 1.75 s, not 0.36 s (local[4])
+    val h2 = lit(1L) + call_function("div", u, lit(m.toLong)) % (m - 1L)
+    (0 until k).map(j => (h1 + h2 * j) % m.toLong)
+  }
 
   /** Build the `m`-bit filter over a gram column: distinct probe
     * positions of every gram, packed into m/64 longs. */
   def buildBits(grams: DataFrame, m: Int, k: Int): Array[Long] = {
     require(m % 64 == 0 && m >= 64, s"m must be a positive multiple of 64, got $m")
     require(k >= 1, s"k must be >= 1, got $k")
-    val pos = withProbes(grams, m)
-      .select(explode(array((0 until k).map(j =>
-        pmod(col("_h1") + col("_h2") * j, lit(m.toLong))): _*)).as("p"))
+    val pos = grams.select(explode(array(probes(col("gram"), m, k): _*)).as("p"))
       .distinct().collect().map(_.getLong(0))
     val words = new Array[Long](m / 64)
     pos.foreach(p => words(p.toInt >> 6) |= 1L << (p.toInt & 63))
     words
   }
 
-  /** All-k-bits-set membership test against the `_bw` literal words. */
-  private def hit(m: Int, k: Int): Column =
-    (0 until k).map { j =>
-      expr(s"(shiftright(element_at(_bw, " +
-        s"CAST(((_h1 + $j * _h2) % $m) div 64 AS INT) + 1), " +
-        s"CAST(pmod((_h1 + $j * _h2) % $m, 64) AS INT)) & 1) = 1")
-    }.reduce(_ && _)
-
-  /** Membership test as a PURE column expression over any gram column —
-    * the same double-hash arithmetic as the batch path, with the string
-    * hash folded by [[graft.functions.PortableHash.cp31uCol]] instead
-    * of the UDF. Because it is expressions all the way down it composes
-    * anywhere a UDF cannot follow, such as inside array lambdas
-    * (`filter(grams, g => membershipCol(g, …))`). Probe positions are
-    * a function of (m, k), so `words` must come from [[buildBits]] with
-    * the same `m` and `k`: a mismatch fails here instead of silently
-    * breaking the zero-false-negative guarantee. */
+  /** Membership test as a PURE column expression over any gram column:
+    * all k probe bits set in `words`. Because it is expressions all the
+    * way down it composes anywhere a UDF cannot follow, such as inside
+    * array lambdas (`filter(grams, g => membershipCol(g, …))`). Probe
+    * positions are a function of (m, k), so `words` must come from
+    * [[buildBits]] with the same `m` and `k`: a mismatch fails here
+    * instead of silently breaking the zero-false-negative guarantee. */
   def membershipCol(gram: Column, words: Array[Long], m: Int, k: Int): Column = {
     require(m % 64 == 0 && m >= 64 && k >= 1, s"bad filter shape m=$m k=$k")
     require(words.length * 64 == m,
       s"filter words carry ${words.length * 64} bits but m=$m — " +
         "probe (m, k) must match the build parameters")
     val bw = typedLit(words.toSeq)
-    val u = graft.functions.PortableHash.cp31uCol(gram)
-    val h1 = pmod(u, lit(m.toLong))
-    // exact integer u div m: u < 2^32, so the double division is exact
-    val h2 = lit(1L) + pmod(((u - h1) / lit(m.toLong)).cast("long"), lit(m - 1L))
     def bitSet(p: Column): Column = {
-      val word = element_at(bw, (p / 64).cast("int") + 1)
-      call_function("shiftright", word, pmod(p, lit(64L)).cast("int"))
-        .bitwiseAND(lit(1L)) === lit(1L)
+      val word = element_at(bw, call_function("div", p, lit(64L)).cast("int") + 1)
+      call_function("shiftright", word, (p % 64L).cast("int")).bitwiseAND(lit(1L)) === lit(1L)
     }
-    (0 until k).map(j => bitSet(pmod(h1 + h2 * j, lit(m.toLong)))).reduce(_ && _)
+    probes(gram, m, k).map(bitSet).reduce(_ && _)
   }
 
   /** Per-language contamination report:
@@ -135,16 +125,12 @@ object BloomFilter {
     // token array staged through its own projection so the gram lambda
     // reads an attribute — see wordNgramsFromTokens' contract (an
     // inlined split re-evaluates per gram position, O(len²)/doc)
-    val bloomHits = withProbes(
-      train.select(col("doc_id"), col("lang"),
+    val bloomHits = train.select(col("doc_id"), col("lang"),
         TextAnalysis.tokens(col("text")).as("_toks"))
-        .select(col("doc_id"), col("lang"),
-          explode(array_distinct(
-            TextAnalysis.wordNgramsFromTokens(col("_toks"), n)))
-            .as("gram")), m1)
-      .withColumn("_bw", typedLit(words.toSeq))
-      .where(hit(m1, k))
-      .select("doc_id", "lang", "gram")
+      .select(col("doc_id"), col("lang"),
+        explode(array_distinct(
+          TextAnalysis.wordNgramsFromTokens(col("_toks"), n))).as("gram"))
+      .where(membershipCol(col("gram"), words, m1, k))
     // ONE pass over the survivors: the exact-match marker arrives via a
     // broadcast left join (benchGrams is distinct, so no duplication)
     // and all three counters aggregate together — materializing

@@ -155,11 +155,4 @@ object Layout {
     * sub-second keys use `unix_micros(col)` upstream — any monotone
     * integer embedding works as a layout dimension. */
   def epochLong(c: Column): Column = c.cast("timestamp").cast("long")
-
-  /** Diagnostic: how many distinct files hold rows matching `pred` —
-    * the locality witness the LayoutSpec/probe assertions use (with
-    * one row group per file, files-holding-matches is exactly the
-    * lower bound of row groups a stats-pruning reader must visit). */
-  def filesTouched(table: DataFrame, pred: Column): Long =
-    table.where(pred).select(input_file_name()).distinct().count()
 }

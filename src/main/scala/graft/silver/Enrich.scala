@@ -8,13 +8,15 @@ import org.apache.spark.sql.functions._
 /** Bronze → silver enrichment (reference: pipeline_2026/ex_match_bs.py:281-349).
   *
   * Every step is a pure column expression except the two dimension
-  * lookups. Both dimensions are tiny and are loaded on the driver first
-  * ([[Dims]], one action each), so a caller can read them beside other
-  * work ([[graft.streaming.Incremental]] does). The per-match metadata
-  * is then applied through a broadcast-variable map lookup keyed by
-  * `match`, and the players catalog through the fuzzy names
-  * ([[FuzzyNames]]). Neither is a join: the fact table never shuffles
-  * for them, and no action pays a broadcast job.
+  * lookups. Both dimensions are tiny and load on the driver first
+  * ([[Dims]]: [[loadMeta]] and [[loadSquads]], one action each, the
+  * only actions of the layer), so a caller can read them beside other
+  * work ([[graft.streaming.Incremental]] does). Then the transform is
+  * plan-only: the per-match metadata applies through a broadcast-variable
+  * map lookup keyed by `match`, and the players squads through the
+  * fuzzy names ([[FuzzyNames]]), scored in the tasks. Neither is a join:
+  * the fact table never shuffles for them, and building the silver
+  * frame starts no Spark job.
   *
   * Each step adds its columns in one ordered `withColumns`: every
   * `withColumn` re-analyzes the whole plan on the driver, a cost the
@@ -22,7 +24,8 @@ import org.apache.spark.sql.functions._
   */
 object Enrich {
 
-  /** One match's prepared metadata: a [[prepMeta]] row without its key. */
+  /** One match's metadata, as [[loadMeta]] prepares it: the
+    * first-innings sides and the raw venue, toss and date. */
   final case class MatchMeta(inn1Batting: String, inn1Bowling: String,
                              venue: String, tossWinner: String,
                              tossDecision: String, date: String)
@@ -62,49 +65,41 @@ object Enrich {
     "is_legal_delivery" ->
       (!lower(col("extra_type")).isin("wide", "no ball", "no-ball", "5 wides")).cast("int")))
 
-  /** Per-match first-innings sides from toss metadata
-    * (ex_match_bs.py:212-247): the toss winner (fuzzy-reconciled to
-    * home/away when the scrape misspells it) bats first iff the decision
-    * contains "bat"; even innings swap sides.
-    *
-    * Returns the meta frame with match_key, inn1_batting, inn1_bowling.
-    */
-  def prepMeta(meta: DataFrame): DataFrame = {
-    val sides = udf { (home: String, away: String, tossWinner: String, tossDecision: String) =>
-      if (home == null || away == null || home == "N/A" || away == "N/A") ("N/A", "N/A")
-      else {
-        val tw0 = if (tossWinner == null) "N/A" else tossWinner
-        val tw =
-          if (tw0 == home || tw0 == away) tw0
-          else FuzzyNames.extractOne(tw0, Seq(home, away), 0.0).getOrElse(tw0)
-        val tl = if (tw == home) away else home
-        val dec = if (tossDecision == null) "" else tossDecision.toLowerCase
-        if (dec.contains("bat")) (tw, tl) else (tl, tw)
-      }
+  /** Per-match first-innings (batting, bowling) sides from toss
+    * metadata (ex_match_bs.py:212-247): the toss winner (fuzzy-reconciled
+    * to home/away when the scrape misspells it) bats first iff the
+    * decision contains "bat". A plain driver function over the collected
+    * meta rows ([[loadMeta]]). */
+  private def sides(home: String, away: String, tossWinner: String,
+                    tossDecision: String): (String, String) =
+    if (home == null || away == null || home == "N/A" || away == "N/A") ("N/A", "N/A")
+    else {
+      val tw0 = if (tossWinner == null) "N/A" else tossWinner
+      val tw =
+        if (tw0 == home || tw0 == away) tw0
+        else FuzzyNames.extractOne(tw0, Seq(home, away), 0.0).getOrElse(tw0)
+      val tl = if (tw == home) away else home
+      val dec = if (tossDecision == null) "" else tossDecision.toLowerCase
+      if (dec.contains("bat")) (tw, tl) else (tl, tw)
     }
-    meta
-      .withColumn("match_key", coalesce(col("short_name"), col("match")))
-      .withColumn("_sides", sides(col("home_team"), col("away_team"),
-        col("toss_winner"), col("toss_decision")))
-      .select(
-        col("match_key"),
-        col("_sides._1").as("inn1_batting"),
-        col("_sides._2").as("inn1_bowling"),
-        col("venue").as("meta_venue"),
-        col("toss_winner").as("meta_toss_winner"),
-        col("toss_decision").as("meta_toss_decision"),
-        col("date").as("meta_date"))
-  }
 
-  /** The prepared meta by match key, in one action. A key on several
-    * meta rows resolves to the row that sorts first on (inn1_batting,
-    * inn1_bowling, venue, toss_winner, toss_decision, date), nulls
-    * first: the choice does not depend on the meta frame's row order.
-    * Rows with a null key are dropped (no delivery could match them). */
+  /** The match meta by key (`short_name`, else `match`), in one action:
+    * the raw meta columns are collected and [[sides]] runs on the driver.
+    * A key on several meta rows resolves to the row that sorts first on
+    * (inn1_batting, inn1_bowling, venue, toss_winner, toss_decision,
+    * date), nulls first: the choice does not depend on the meta frame's
+    * row order. Rows with a null key are dropped (no delivery could
+    * match them). */
   def loadMeta(meta: DataFrame): Map[String, MatchMeta] =
-    prepMeta(meta).where(col("match_key").isNotNull).collect()
-      .map(r => r.getString(0) -> MatchMeta(r.getString(1), r.getString(2),
-        r.getString(3), r.getString(4), r.getString(5), r.getString(6)))
+    meta.select(coalesce(col("short_name"), col("match")), col("home_team"),
+        col("away_team"), col("toss_winner"), col("toss_decision"), col("venue"),
+        col("date"))
+      .collect().filter(!_.isNullAt(0))
+      .map { r =>
+        val Seq(key, home, away, toss, decision, venue, date) = (0 until 7).map(r.getString)
+        val (bat, bowl) = sides(home, away, toss, decision)
+        key -> MatchMeta(bat, bowl, venue, toss, decision, date)
+      }
       .groupBy(_._1).map { case (k, rows) => k -> rows.map(_._2).minBy(sortKey) }
 
   private def sortKey(m: MatchMeta) =

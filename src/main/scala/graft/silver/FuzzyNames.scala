@@ -1,5 +1,7 @@
 package graft.silver
 
+import java.util.concurrent.ConcurrentHashMap
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,14 +18,16 @@ import org.apache.spark.sql.functions._
   * scores them ~78. Cutoffs are preserved: player match ≥ 75, team-key
   * match ≥ 70 (ex_match_bs.py:198,256).
   *
-  * Scale shape (reference: ex_match_bs.py:249-259,323-336 and the 10×
-  * claim at README.md:64):
+  * Scale shape (reference: ex_match_bs.py:249-259,323-336). README.md:64
+  * claims 10× for the squad scoping; one traced benchmark run
+  * (`perfbench/run.py --workload match_stream --seed 1300 --trace 1`, 4
+  * cores) reads `silver.fuzzy_scope_speedup` 2.88×:
   *  - candidate pruning: choices restricted to the batting/bowling squad
   *    via a broadcast team→players map (small dimension, never shuffled);
-  *  - memoization: the fuzzy matcher runs once per DISTINCT (team, raw
-  *    name) pair — a tiny set, collected in one action — and rows get
-  *    the result back via a broadcast map lookup, so the quadratic string
-  *    matching never touches the fact table's row count.
+  *  - memoization: inside each task, the fuzzy matcher runs once per
+  *    distinct (team, raw name) pair the task meets, so the quadratic
+  *    string matching scales with a partition's distinct pairs, not its
+  *    rows. No pair is collected to the driver: the names add no job.
   */
 object FuzzyNames {
 
@@ -178,37 +182,30 @@ object FuzzyNames {
 
   /** Normalize `batsman`, `bowler`, `out_batsman` in a silver frame.
     *
-    * One action, one lookup (ex_match_bs.py:315-336): the distinct
-    * (scoping team, raw name) pairs of all three roles are collected
-    * together — batsman and out_batsman scoped to the batting squad,
-    * bowler to the bowling squad — each pair is fuzzy-matched once on
-    * the driver, and the rows get the result back through one broadcast
-    * map lookup per role. The silver lineage is evaluated once for the
-    * pairs, not once per role.
+    * The catalog is collected once ([[squadMap]]); the rest is plan-only
+    * (ex_match_bs.py:315-336) and starts no Spark job: one lookup per
+    * role — batsman and out_batsman scoped to the batting squad, bowler
+    * to the bowling squad — computes `matchPlayerName(raw,
+    * teamChoices(team, …))` in the tasks over the broadcast squads. The
+    * (team, raw) → name memo travels in the task's closure, so each task
+    * deserializes and fills its own copy; it is a concurrent map, so a
+    * copy that several threads share stays correct.
     */
   def normalize(spark: SparkSession, silver: DataFrame, players: DataFrame): DataFrame =
     normalizeWith(spark, silver, squadMap(players))
 
   private[silver] def normalizeWith(spark: SparkSession, silver: DataFrame,
       squads: (Map[String, Seq[String]], Seq[String])): DataFrame = {
-    val (byTeam, all) = squads
-    val roles = Seq("batsman" -> "batting_team", "bowler" -> "bowling_team",
+    val bcSquads = spark.sparkContext.broadcast(squads)
+    val memo = new ConcurrentHashMap[(String, String), String]()
+    val lookup = udf { (team: String, raw: String) =>
+      memo.computeIfAbsent((team, raw), _ => {
+        val (byTeam, all) = bcSquads.value
+        matchPlayerName(raw, teamChoices(team, byTeam, all))
+      })
+    }
+    val roles = ListMap("batsman" -> "batting_team", "bowler" -> "bowling_team",
       "out_batsman" -> "batting_team")
-    val pairs = silver
-      .select(explode(array(roles.map { case (name, team) =>
-        struct(col(team).as("t"), col(name).as("raw")) }: _*)).as("p"))
-      .select("p.t", "p.raw").rdd
-      .mapPartitions(_.map(r => (r.getString(0), r.getString(1))).toSet.iterator)
-      .collect().toSet
-    val scored = pairs.iterator.map { case (t, raw) =>
-      (t, raw) -> matchPlayerName(raw, teamChoices(t, byTeam, all))
-    }.toMap
-    val bcScored = spark.sparkContext.broadcast(scored)
-    val lookup = udf { (t: String, raw: String) =>
-      bcScored.value.getOrElse((t, raw), raw)
-    }
-    roles.foldLeft(silver) { case (df, (name, team)) =>
-      df.withColumn(name, lookup(col(team), col(name)))
-    }
+    silver.withColumns(roles.map { case (name, team) => name -> lookup(col(team), col(name)) })
   }
 }

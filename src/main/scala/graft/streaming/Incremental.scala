@@ -47,9 +47,10 @@ import graft.silver.Enrich
   *    window's keys include `match`), ending in one eager checkpoint;
   *  - the bronze write on a second thread, beside the silver chain on
   *    the batch thread: silver derives from the same checkpoint (the
-  *    rows being written, no re-read of the table); its fuzzy names cost
-  *    one action ([[graft.silver.FuzzyNames.normalize]]) and its meta is
-  *    a map lookup, not a join, so it costs none.
+  *    rows being written, no re-read of the table); its fuzzy names
+  *    score in the silver tasks ([[graft.silver.FuzzyNames.normalize]])
+  *    and its meta is a map lookup, not a join, so neither costs an
+  *    action.
   * The batch returns only once both writes are joined, and a failure in
   * either fails it (the stream then does not commit the offset, and a
   * replay converges). The checkpoint's blocks are freed after the join,
@@ -59,7 +60,7 @@ import graft.silver.Enrich
   *
   * A keyed-MERGE formulation (Delta `MERGE ON` the delivery key) once
   * stood beside this one and converged to the same tables; it cost 24
-  * Spark jobs per snapshot of a stored match, all serial, against 9
+  * Spark jobs per snapshot of a stored match, all serial, against 8
   * here, and was removed.
   *
   * Scale: each micro-batch shuffles only the affected matches' rows; the

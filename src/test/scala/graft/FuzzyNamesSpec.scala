@@ -1,7 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.graftprobe.ListenerDrain
 import graft.silver.{Enrich, FuzzyNames}
 import graft.silver.FuzzyNames._
 
@@ -116,6 +119,13 @@ class FuzzyNamesSpec extends SparkSpec {
       ("MS Dhoni", "Chennai Super Kings"), ("Virat Kohli", "Royal Challengers"),
       ("Dhoni Junior", null)).toDF("Name", "Team")
     assertRowWise(silver, players)
+    // the same rows over 3 partitions, the ("Gotham Knights", "V Kohli")
+    // row in every one: each task scores the pair through its own memo
+    val rows = silver.collect()
+    val spread = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(rows(0), rows(4), rows(1), rows(4), rows(2), rows(3), rows(4)), 3), silver.schema)
+    assert(spread.rdd.glom().collect().map(_.count(_ == rows(4))).toSeq === Seq(1, 1, 1))
+    assertRowWise(spread, players)
     // and the names really moved
     assert(FuzzyNames.normalize(spark, silver, players).where($"match" === "m1")
       .select("batsman").as[String].collect().toSet === Set("Rohit Sharma", "N/A"))
@@ -140,5 +150,32 @@ class FuzzyNamesSpec extends SparkSpec {
     val names = Seq("batsman", "bowler", "out_batsman").map(org.apache.spark.sql.functions.col)
     assert(withEmpty.select(names: _*).except(bronze.select(names: _*)).isEmpty,
       "every silver name is a raw bronze name")
+  }
+
+  test("Enrich.transformWith over loaded dims starts no Spark job until consumed") {
+    import spark.implicits._
+    val (raw, meta) = Fixtures.rawSeason(spark)
+    val bronze = Pipeline.toBronze(raw)
+    // the fixture's squad names, each misspelled with a trailing "x"
+    val players = Seq("Alpha", "Beta", "Gamma", "Delta").flatMap(t =>
+      (1 to 6).map(i => (s"${t.toLowerCase.take(3)}_p${i}x", t))).toDF("Name", "Team")
+    val dims = Enrich.Dims(Enrich.loadMeta(meta), Enrich.loadSquads(Some(players)))
+    assert(dims.squads.nonEmpty)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val silver = try {
+      val s = Enrich.transformWith(spark, bronze, dims)
+      ListenerDrain.drain(spark.sparkContext)
+      s
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get === 0, "building the silver frame ran a Spark job")
+    // consumed, it is the silver of the two-step transform, names moved
+    def rows(df: DataFrame) = df.collect().map(_.mkString("|")).sorted.toSeq
+    assert(rows(silver) === rows(Enrich.transform(spark, bronze, meta, Some(players))))
+    assert(silver.select("batsman").as[String].collect().forall(_.endsWith("x")))
   }
 }

@@ -198,7 +198,7 @@ class IncrementalSpec extends SparkSpec {
     assert(freed.synchronized(freed.filter(_ > firstId).toSet.size) === 2)
   }
 
-  test("one snapshot of a stored match costs at most 9 Spark jobs") {
+  test("one snapshot of a stored match costs at most 8 Spark jobs") {
     val base = Files.createTempDirectory("graft-incr-jobs").toString
     val rawDir = s"$base/raw"; Files.createDirectories(Paths.get(rawDir))
     val bronzePath = s"$base/bronze"; val silverPath = s"$base/silver"
@@ -235,9 +235,9 @@ class IncrementalSpec extends SparkSpec {
       spark.sparkContext.removeSparkListener(listener)
     }
     // affected ids 1, bronze checkpoint 2 (shuffle by match + count),
-    // catalog 1, meta 1, bronze write 1, name pairs 1, silver write 2
-    // (Enrich.dedup shuffle + write)
-    assert(jobs.get <= 9)
+    // catalog 1, meta 1, bronze write 1, silver write 2 (Enrich.dedup
+    // shuffle + write); the fuzzy names score in the silver tasks
+    assert(jobs.get <= 8)
     // the jobs of the batch's own driver threads carry the caller's
     // local properties, as the stream thread's do
     assert(untagged.get === 0, "a job lost the caller's local properties")

@@ -54,13 +54,13 @@ class SqlSurfaceSpec extends SparkSpec {
   test("catalog registration is idempotent and droppable") {
     SqlViews.registerGold(spark, gold) // second registration overwrites
     assert(spark.sql(SqlViews.pointsTableSql).count() > 0)
-    SqlViews.dropGold(spark)
+    spark.sql(s"DROP DATABASE IF EXISTS ${SqlViews.database} CASCADE")
     assert(!spark.catalog.databaseExists(SqlViews.database))
   }
 
   test("registration refuses to delete a non-table directory at a table location") {
     val g = gold // force fixture
-    SqlViews.dropGold(spark)
+    spark.sql(s"DROP DATABASE IF EXISTS ${SqlViews.database} CASCADE")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS ${SqlViews.database}")
     val dbLoc = spark.catalog.getDatabase(SqlViews.database).locationUri
     val name = g.keys.head
