@@ -2,10 +2,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    // reclaim dead blockmgr/spark-local dirs from crashed earlier runs
-    // BEFORE allocating our own scratch (r11-late box note: 35 GB of
-    // stale blockmgr starved the next run's page cache)
-    graft.tools.Scratch.sweepStale()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session("graft-bench")
     spark.sparkContext.setLogLevel("WARN")

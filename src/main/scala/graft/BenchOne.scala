@@ -1,7 +1,6 @@
 package graft
 object BenchOne {
   def main(args: Array[String]): Unit = {
-    graft.tools.Scratch.sweepStale() // drop crashed runs' dead scratch first
     // the same session as Bench, so a BenchOne timing/row-count
     // reproduces Bench instead of measuring a config delta
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

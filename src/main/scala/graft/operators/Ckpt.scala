@@ -9,8 +9,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * entry for a checkpoint-backed LogicalRDD, so on a checkpointed frame
   * it is a NO-OP (r17 verdict finding): the persisted RDD's blocks live
   * until the driver GCs the RDD object and the ContextCleaner notices —
-  * which on a pair-scale DISK_ONLY checkpoint is real scratch footprint
-  * held between GC cycles. This helper unpersists the underlying
+  * in an iterative loop, one dead generation of blocks per round held
+  * between GC cycles. This helper unpersists the underlying
   * checkpoint RDD itself (non-blocking), freeing the blocks as soon as
   * the call is made.
   *

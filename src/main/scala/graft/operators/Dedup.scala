@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.functions.TextAnalysis
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
@@ -122,8 +121,8 @@ object Dedup {
     * qualifying pair exactly once, every bound applied MAP-SIDE inside
     * the join stage, before the pair shuffle. Used by [[jaccardPairs]].
     *
-    * Four conjoined *necessary* conditions, each lossless (r12 — the
-    * full ppjoin family, Xiao et al. WWW'08):
+    * Four conjoined *necessary* conditions, each lossless (the full
+    * ppjoin family, Xiao et al. WWW'08):
     *  - size compatibility: J ≥ t ⟹ min ≥ t·max (size filter + bucket
     *    replication on side b);
     *  - asymmetric INDEX prefix (in the body below): the smaller side
@@ -132,15 +131,13 @@ object Dedup {
     *  - canonical occurrence: a pair sharing m candidate tokens meets m
     *    times; [[graft.plans.PrefixPositional]] returns non-NULL only
     *    where the join token is the FIRST common (df, tok) prefix
-    *    entry — exact dedup with no occurrence shuffle (a `distinct()`
-    *    here overflowed local scratch at the r11 sf100 probe), the
-    *    minhash FirstEqualIndex shape. Buckets and salts cannot
-    *    double-count: side a pins its own bucket and salt, so a pair
-    *    meets a given shared token at most once;
-    *  - ppjoin positional bound (the r11 finding: 946.6M candidates
-    *    for a 245.97M-pair sf100 answer = 3.8× over-generation): at
-    *    that first common token, |A∩B| ≤ min(|A| − posA + 1,
-    *    |B| − posB + 1), and J ≥ t needs |A∩B| ≥ ⌈t·(|A|+|B|)/(1+t)⌉,
+    *    entry — exact dedup with no occurrence shuffle, the minhash
+    *    FirstEqualIndex shape. Buckets cannot double-count: side a pins
+    *    its own bucket, so a pair meets a given shared token at most
+    *    once;
+    *  - ppjoin positional bound: at that first common token,
+    *    |A∩B| ≤ min(|A| − posA + 1, |B| − posB + 1), and J ≥ t needs
+    *    |A∩B| ≥ ⌈t·(|A|+|B|)/(1+t)⌉,
     *    so candidates whose shared token sits too deep in either
     *    prefix die HERE instead of riding the pair shuffle into the
     *    verify. The 1e-9 slack inside ceil can only round the required
@@ -148,12 +145,11 @@ object Dedup {
     *    no qualifying pair is lost (the prefix-length slack argument).
     *
     * `positional = false` selects [[jaccardCandidatesSymmetric]] — the
-    * r11 shape (symmetric probe prefixes, no bound) kept as the
+    * symmetric probe-prefix shape without the bound, kept as the
     * pruning spec's reference; production callers never pass it. */
   private[graft] def jaccardCandidates(pfx: DataFrame, threshold: Double,
-                                       salts: Int = 1,
                                        positional: Boolean = true): DataFrame = {
-    if (!positional) return jaccardCandidatesSymmetric(pfx, threshold, salts)
+    if (!positional) return jaccardCandidatesSymmetric(pfx, threshold)
     // Orientation by SIZE (a = larger, ties by id): the side-b stream
     // offers only its INDEX prefix — the first
     // `n − ⌈(2t/(1+t))·n⌉ + 1` tokens in the (df, tok) order (~3 at
@@ -168,9 +164,6 @@ object Dedup {
     val a = pfx.select(col("doc_id").as("ida"), col("lang"),
       col("tok"), col("n_toks").as("na"), col("ptoks").as("pa"))
       .withColumn("size_bucket", sizeBucket(col("na"), threshold))
-      // scrambled id (murmur3), not raw id mod salts: strided id
-      // allocation must not skew the salt spread (semDedup precedent)
-      .withColumn("salt", pmod(hash(col("ida")), lit(salts)).cast("int"))
     val idxLen = (col("n_toks") -
       ceil(col("n_toks") * lit(2.0 * threshold / (1.0 + threshold)) -
         lit(1e-9)) + lit(1)).cast("int")
@@ -187,13 +180,12 @@ object Dedup {
         col("n_toks").as("nb"),
         slice(col("ptoks"), lit(1), col("_il") * lit(3)).as("pb"))
       .withColumn("size_bucket", explode(array(bkt, bkt + 1)))
-      .withColumn("salt", explode(lit((0 until salts).toArray)))
     val pp = graft.plans.PrefixPositional
       .posCol(col("pa"), col("pb"), col("tok"))
     // required overlap for J ≥ t: o/(na+nb−o) ≥ t ⟺ o ≥ t(na+nb)/(1+t)
     val alpha = ceil((col("na") + col("nb")) *
       lit(threshold / (1.0 + threshold)) - lit(1e-9))
-    a.join(b, Seq("lang", "size_bucket", "tok", "salt"))
+    a.join(b, Seq("lang", "size_bucket", "tok"))
       .where((col("na") > col("nb") ||
           (col("na") === col("nb") && col("ida") < col("idb"))) &&
         col("nb") >= col("na") * threshold)
@@ -209,23 +201,21 @@ object Dedup {
         greatest(col("ida"), col("idb")).as("doc_b"))
   }
 
-  /** The r11 symmetric probe×probe shape without the positional bound —
+  /** The symmetric probe×probe shape without the positional bound —
     * kept ONLY as the pruning spec's reference, behind
     * `jaccardCandidates(positional = false)`. */
-  private def jaccardCandidatesSymmetric(pfx: DataFrame, threshold: Double,
-                                         salts: Int): DataFrame = {
+  private def jaccardCandidatesSymmetric(pfx: DataFrame,
+                                         threshold: Double): DataFrame = {
     val a = pfx.select(col("doc_id").as("doc_a"), col("lang"),
       col("tok"), col("n_toks").as("na"), col("ptoks").as("pa"))
       .withColumn("size_bucket", sizeBucket(col("na"), threshold))
-      .withColumn("salt", pmod(hash(col("doc_a")), lit(salts)).cast("int"))
     val bkt = sizeBucket(col("nb"), threshold)
     val b = pfx.select(col("doc_id").as("doc_b"), col("lang"),
       col("tok"), col("n_toks").as("nb"), col("ptoks").as("pb"))
       .withColumn("size_bucket", explode(array(bkt - 1, bkt, bkt + 1)))
-      .withColumn("salt", explode(lit((0 until salts).toArray)))
     val pp = graft.plans.PrefixPositional
       .posCol(col("pa"), col("pb"), col("tok"))
-    a.join(b, Seq("lang", "size_bucket", "tok", "salt"))
+    a.join(b, Seq("lang", "size_bucket", "tok"))
       .where(col("doc_a") < col("doc_b") &&
         col("na") >= col("nb") * threshold &&
         col("nb") >= col("na") * threshold)
@@ -247,8 +237,8 @@ object Dedup {
     *    `n − ⌈t·n⌉ + 1` tokens ([[prefixTokens]]);
     *  - ppjoin positional bound: at the pair's FIRST common prefix
     *    token, the achievable overlap min(|A| − posA + 1, |B| − posB + 1)
-    *    must reach ⌈t·(|A|+|B|)/(1+t)⌉ (r12; cut sf100 candidates
-    *    before the pair shuffle).
+    *    must reach ⌈t·(|A|+|B|)/(1+t)⌉, so weak candidates die before
+    *    the pair shuffle.
     * A pair sharing m prefix tokens matches m times; the fused
     * [[graft.plans.PrefixPositional]] keeps only the first-common-token
     * occurrence IN the join stage (no pair-key `distinct` shuffle), so
@@ -262,13 +252,13 @@ object Dedup {
     * VOCABULARY: disjoint-vocabulary documents (other crawl shards,
     * other languages) generate zero candidates, and residual hot-token
     * skew is AQE-splittable because the quadratic work is spread over
-    * (bucket × token) cells. `salts` multiplies parallelism further for
-    * residual skew (side a pins a scrambled-doc-id salt, side b
-    * replicates across all N — output identical); default 1 because the
-    * 3× bucket replication already dominates.
+    * (bucket × token) cells.
+    *
+    * Verify: both sides' token arrays attach to the candidate ids by two
+    * plain joins, then the two-pointer [[graft.plans.SortedIntersectSize]]
+    * gives the exact intersection.
     */
-  def jaccardPairs(docs: DataFrame, threshold: Double,
-                   salts: Int = 1, routeThresholdDocs: Long = 200000L): DataFrame = {
+  def jaccardPairs(docs: DataFrame, threshold: Double): DataFrame = {
     // ONE tokenize pass (localCheckpoint, the minhashLshPairs
     // precedent): four consumers — the df aggregate and the prefix
     // stream inside prefixTokens, and both verify-side attach joins —
@@ -286,131 +276,20 @@ object Dedup {
     // checkpoint once so the self-join's two sides don't each re-run
     // the df aggregate + rank window
     val pfx = prefixTokens(toks, threshold).localCheckpoint()
-    val cand = jaccardCandidates(pfx, threshold, salts)
-    // Two verify shapes, same output. DIRECT attaches the token arrays
-    // with two plain joins — but the second one re-shuffles every
-    // candidate pair WITH doc_a's array attached (~|set|·8 B per PAIR:
-    // ~300 GB at sf100, where the r10 probe died on scratch). Above
-    // routeThresholdDocs the CLUSTER-ROUTED shape ships each doc's
-    // array once instead (see [[clusterRoutedVerify]]). The switch is a
-    // deterministic function of the corpus size, and both shapes are
-    // output-identical (spec-pinned), so the oracle is unaffected.
-    val direct = {
-      val ta = toks.select(col("doc_id").as("doc_a"), col("toks").as("toks_a"),
-        col("n_toks").as("na"))
-      val tb = toks.select(col("doc_id").as("doc_b"), col("toks").as("toks_b"),
-        col("n_toks").as("nb"))
-      val inter = graft.plans.SortedIntersectSize
-        .intersectSizeCol(col("toks_a"), col("toks_b"))
-      cand.join(ta, "doc_a").join(tb, "doc_b")
-        .withColumn("inter", inter)
-        // raw int/int division — bit-identical in any engine, so no ROUND
-        // (which Spark and DuckDB perform differently on binary doubles)
-        .withColumn("jaccard",
-          col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
-        .where(col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    }
-    if (toks.count() < routeThresholdDocs) direct
-    else {
-      // PAIR-scale block store entries go straight to disk: at sf100
-      // the 842M-row candidate list cached MEMORY_AND_DISK squeezed the
-      // unified pool until concurrent aggregates got ZERO execution
-      // memory (UNABLE_TO_ACQUIRE_MEMORY, in-bench r12) — and on a real
-      // executor the same competition exists per node. Re-reads are
-      // sequential scans (verify + CC rounds), which local disk + page
-      // cache serve at memory speed; only pair-scale frames pay the
-      // serialization toll (node- and corpus-scale checkpoints stay
-      // MEMORY_AND_DISK).
-      val c = cand.localCheckpoint(true, StorageLevel.DISK_ONLY) // eager: candidate generation runs here
-      // the prefix stream's blocks are dead once candidates exist —
-      // free them for real (Ckpt.free; Dataset.unpersist is a no-op on
-      // checkpoint-backed frames)
-      Ckpt.free(pfx)
-      // reclaim the generation stages' shuffle files (tokenize/df/rank/
-      // join) before CC + verify allocate their own — the checkpoint
-      // truncated the lineage, so a GC frees them
-      System.gc()
-      clusterRoutedVerify(c, toks, threshold)
-    }
-  }
-
-  /** Sorted-set intersection size — the driver/executor-side twin of
-    * [[graft.plans.SortedIntersectSize]]'s two-pointer walk (same
-    * contract: both arrays ascending + distinct). */
-  private[graft] def intersectSorted(a: Array[Long], b: Array[Long]): Int = {
-    var i = 0; var j = 0; var n = 0
-    while (i < a.length && j < b.length) {
-      if (a(i) < b(j)) i += 1
-      else if (a(i) > b(j)) j += 1
-      else { n += 1; i += 1; j += 1 }
-    }
-    n
-  }
-
-  /** One-exchange-per-input candidate-pair verification, routed by
-    * connected component (the r10 sf100 finding: the direct verify's
-    * second attach join ships doc_a's token array once per PAIR —
-    * ~300 GB of shuffle for a 246M-pair answer vs 55 GB of local
-    * scratch; the DATA only needs each doc's array once, because a
-    * candidate pair graph is clustered — every pair lies INSIDE a
-    * connected component by definition).
-    *
-    * Shape: label every candidate endpoint with its component id
-    * ([[duplicateClusters]] — id-only pointer-jumping shuffles), then
-    * `cogroup` the pairs and the token sets on the component key. Each
-    * input crosses the network exactly once — pair ids (~16 B/pair) and
-    * per-doc arrays (once per doc, not per pair) — and the per-component
-    * verify streams the pairs against an in-memory id→set map of that
-    * component only. A join-based spelling was tried first and rejected:
-    * with `spark.sql.requireAllClusterKeysForCoPartition` (default true
-    * since Spark 3.3) the subset-key partitioning reuse between the two
-    * attach joins is conf-dependent, and a sort-merge second join would
-    * external-sort the array-carrying intermediate (~the same 300 GB as
-    * spill). `cogroup` guarantees the shape structurally: the plan
-    * contains NO exchange whose rows carry both a pair id and a token
-    * array (spec-asserted in JaccardRouteSpec).
-    *
-    * Memory/skew: the per-group map holds one component's sets
-    * (|component| × |set| longs). Near-dup components are dup families —
-    * small and bounded — and a pathological giant component degrades
-    * parallelism/memory gracefully toward the direct shape's cost.
-    * Output-identical to the direct verify (spec-pinned): same
-    * two-pointer intersection, same int-then-double division.
-    */
-  private[graft] def clusterRoutedVerify(cand: DataFrame, toks: DataFrame,
-                                         threshold: Double): DataFrame = {
-    val spark = cand.sparkSession
-    import spark.implicits._
-    val endpoints = cand.select(col("doc_a").as("doc_id"))
-      .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()
-    val cm = duplicateClusters(cand, endpoints,
-      maxRounds = 50, pairsMaterialized = true)
-      .select(col("doc_id"), col("cluster_id").as("_cl"))
-    val pairsByCl = cand
-      .join(cm.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-      .select(col("_cl"), col("doc_a"), col("doc_b"))
-      .as[(Long, Long, Long)].groupByKey(_._1)
-    // docs outside any candidate pair drop here (inner join): nothing
-    // to verify
-    val toksByCl = toks.join(cm, "doc_id")
-      .select(col("_cl"), col("doc_id"), col("toks"))
-      .as[(Long, Long, Array[Long])].groupByKey(_._1)
-    pairsByCl.cogroup(toksByCl) { (_, ps, ts) =>
-      val sets = new java.util.HashMap[Long, Array[Long]]()
-      ts.foreach { case (_, id, tk) => sets.put(id, tk) }
-      ps.flatMap { case (_, a, b) =>
-        val ta = sets.get(a); val tb = sets.get(b)
-        if (ta == null || tb == null) Iterator.empty // unreachable: both endpoints are labeled
-        else {
-          val inter = intersectSorted(ta, tb)
-          // int arithmetic then one double division — bit-identical to
-          // the direct shape's cast(inter)/(na + nb − inter)
-          val j = inter.toDouble / (ta.length + tb.length - inter).toDouble
-          if (j >= threshold) Iterator.single((a, b, j)) else Iterator.empty
-        }
-      }
-    }.toDF("doc_a", "doc_b", "jaccard")
+    val ta = toks.select(col("doc_id").as("doc_a"), col("toks").as("toks_a"),
+      col("n_toks").as("na"))
+    val tb = toks.select(col("doc_id").as("doc_b"), col("toks").as("toks_b"),
+      col("n_toks").as("nb"))
+    val inter = graft.plans.SortedIntersectSize
+      .intersectSizeCol(col("toks_a"), col("toks_b"))
+    jaccardCandidates(pfx, threshold).join(ta, "doc_a").join(tb, "doc_b")
+      .withColumn("inter", inter)
+      // raw int/int division — bit-identical in any engine, so no ROUND
+      // (which Spark and DuckDB perform differently on binary doubles)
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
+      .where(col("jaccard") >= threshold)
+      .select("doc_a", "doc_b", "jaccard")
   }
 
   /** Connected components of a near-duplicate pair graph: every document
@@ -421,110 +300,49 @@ object Dedup {
     *
     * Algorithm: iterative smallest-label propagation with pointer
     * jumping — each round every node takes the min of its own and its
-    * neighbors' labels (one hash-join + min-aggregate, both map-side
-    * combining), then shortcuts label := label(label) (one more hash
-    * join; labels are node ids, so the lookup is total). The jump halves
-    * the distance to each component's minimum every round, so the round
-    * bound is O(log diameter) — a 10k-link chain converges in ~15
-    * rounds, not 10k — at the price of a second corpus-sized join per
-    * round (irrelevant for the tight clusters near-dup graphs produce,
-    * decisive for adversarial chains; pinned in LlmOperatorsSpec's
-    * path-graph test). The loop stops when no label changes. Labels are
-    * `localCheckpoint`ed per round so the plan doesn't grow with the
-    * iteration count; the driver holds only a change COUNT, never the
-    * graph. Returns (doc_id, cluster_id), deterministic for any input
-    * partitioning.
+    * neighbors' labels (one broadcast-join + min-aggregate, map-side
+    * combining), then shortcuts label := label(label) (one more
+    * broadcast join; labels are node ids, so the lookup is total). The
+    * jump halves the distance to each component's minimum every round,
+    * so the round bound is O(log diameter) — a 10k-link chain converges
+    * in ~15 rounds, not 10k — at the price of a second node-sized join
+    * per round (irrelevant for the tight clusters near-dup graphs
+    * produce, decisive for adversarial chains; pinned in
+    * LlmOperatorsSpec's path-graph test). Labels are `localCheckpoint`ed
+    * per round so the plan doesn't grow with the iteration count; the
+    * driver holds only a crossing-edge COUNT, never the graph. Returns
+    * (doc_id, cluster_id), deterministic for any input partitioning.
     *
-    * Edge CONTRACTION (the r11 sf100 finding — CC was 817 s of the
-    * ~1190 s jaccard run because every round re-streamed the full
-    * 1.9B-row edge list): above `contractAboveEdges`, each round ends
-    * by relabeling the edge list through the freshly propagated labels
-    * and keeping only edges whose endpoints still differ. A label is
-    * always the id of a node in the SAME component (propagation only
-    * moves ids along edges), so edge (label(u), label(v)) connects
-    * exactly the components (u, v) did — the quotient graph has the
-    * same component structure — and every node stays linked to its
-    * representative through the label pointer the jump keeps
-    * resolving. Near-dup pair graphs are dup FAMILIES (the sf100
-    * component histogram: median 2, p99 ≈ 2k, near-cliques from
-    * prefix blocking), so one propagation round collapses almost every
-    * edge to equal labels and the `la != lb` filter drops them
-    * MAP-SIDE before the distinct's exchange: the full edge list is
-    * streamed ~twice (round 1 + the first contraction) instead of
-    * once per round, and rounds 2+ run over a vanishing remainder.
-    * Output-identical for any threshold (spec-pinned: contraction
-    * every round vs never on path/family graphs).
+    * Convergence: the loop stops in the last CHANGING round, when no
+    * edge crosses (label(src) != label(dst)). If no edge crosses,
+    * propagation is a no-op, so labels are uniform per component; a
+    * uniform component label L is the id of a node in that component
+    * whose own label is then L by the same uniformity, so the pointer
+    * jump is the identity too — the next round provably reproduces the
+    * labels bit-for-bit, and skipping it cannot change the output. The
+    * probe runs over the caller's full edge list, which the loop never
+    * rewrites (CCConvergenceSpec pins the saved round).
     */
   def duplicateClusters(pairs: DataFrame, docs: DataFrame,
-                        maxRounds: Int = 50,
-                        pairsMaterialized: Boolean = false,
-                        contractAboveEdges: Long = 10000000L): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val edges0 = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+                        maxRounds: Int = 50): DataFrame = {
+    // lazy checkpoint: round 1's job materializes the blocks, and every
+    // later round streams them instead of re-running the caller's plan
+    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    // When the caller's pairs frame is ALREADY materialized (the routed
-    // jaccard verify hands in a localCheckpoint), re-checkpointing its
-    // ×2 projection only doubles the block-store footprint (30 GB at
-    // the sf100 probe, which tipped the box over) — the per-round scans
-    // are narrow maps over the existing blocks. A lazy caller (a whole
-    // operator pipeline) still gets the checkpoint so rounds don't
-    // re-execute it.
-    // lazy checkpoint: the edgeCount action right below materializes the
-    // blocks in the SAME job (r17 — the eager form spent one extra
-    // pair-scale pass; every per-round checkpoint below gets the same
-    // treatment, halving the loop's driver actions)
-    var edges = if (pairsMaterialized) edges0
-      else edges0.localCheckpoint(false, StorageLevel.DISK_ONLY) // pair-scale (see jaccardPairs)
-    // the checkpoint whose blocks back `edges`, when THIS call made it
-    // (freed once a contraction's replacement has MATERIALIZED from
-    // it) — the pairsMaterialized frame belongs to the caller
-    var edgesCkpt: Option[DataFrame] = if (pairsMaterialized) None else Some(edges)
-    // Each round leaves its join/aggregate shuffle files on local disk
-    // until the ContextCleaner sees the dependency objects COLLECTED —
-    // and a driver that never GCs mid-loop accumulates every round's
-    // files (the r11 sf100 jaccard probe filled 58 GB of scratch inside
-    // the CC loop this way). On corpus-sized graphs, nudge a full GC per
-    // round so round N−1's shuffles are reclaimed while round N runs;
-    // skipped on small graphs where a full GC would cost more than the
-    // round.
-    var edgeCount = edges.count()
+      .localCheckpoint(false)
     // Propagate over docs ∪ pair endpoints: a caller may pass pairs whose
     // nodes were filtered out of `docs`, and paths THROUGH such nodes
     // must still connect (only the output is restricted to docs).
     val nodes = docs.select(col("doc_id"))
       .unionByName(edges.select(col("src").as("doc_id"))).distinct()
     var labels = nodes.withColumn("label", col("doc_id"))
-      .localCheckpoint(false) // materialized by the count+sum probe below
-    // Labels only ever DECREASE (min of self + neighbors), so the exact
-    // per-round label sum is equal iff no label changed — one aggregate
-    // per round instead of a join + count. DECIMAL(38,0): exact at any
-    // id magnitude × corpus size.
-    // coalesce keeps the empty-graph case total (sum over zero rows is
-    // null, and null.compareTo would NPE the convergence probe)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("label").cast(DecimalType(38, 0))),
-        lit(0).cast(DecimalType(38, 0)))).first().getDecimal(0)
-    // ONE action seeds the loop (r18; was two): it materializes the
-    // label checkpoint and returns both the node count (broadcast-
-    // threshold decision) and the initial label sum (convergence seed).
-    val (nNodes, initSum) = {
-      val r = labels.agg(count(lit(1)),
-        coalesce(sum(col("label").cast(DecimalType(38, 0))),
-          lit(0).cast(DecimalType(38, 0)))).first()
-      (r.getLong(0), r.getDecimal(1))
-    }
-    // The label table is NODE-sized while the edge list is PAIR-sized —
-    // near-dup graphs run ~100+ edges per node, so joining them
-    // sort-merge re-shuffles the edge list every round (the r11 sf100
-    // probe: 1.9B edge rows × ~45 GB/round against 5M labels).
-    // Broadcasting the labels streams the edges straight from their
-    // checkpoint blocks: per-round shuffle drops to the map-side-combined
-    // aggregate (≤ nodes rows per mapper). Nodes-bounded, so safe to
-    // ~20M nodes (~300 MB broadcast); past that — a 10⁹-doc corpus on a
-    // real cluster — the hint is dropped and the planner's shuffle join
-    // spreads the edge exchange across executors instead.
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (nNodes <= 20000000L) broadcast(df) else df
+      .localCheckpoint(false) // materialized by round 1's job
+    // The label table is NODE-sized while the edge list is PAIR-sized
+    // (near-dup graphs run ~100+ edges per node), so every label lookup
+    // below broadcasts the labels and streams the edges from their
+    // checkpoint blocks: the per-round shuffle is only the map-side-
+    // combined aggregate (≤ nodes rows per mapper). The broadcast is
+    // node-bounded: ~300 MB at 20M nodes.
     // (r18 negative, measured: a data-derived round-width cap — coalesce
     // edges + hash-repartition the propagation aggregate to
     // ceil((edges+nodes)/500k) partitions when under defaultParallelism,
@@ -532,52 +350,28 @@ object Dedup {
     // (4.4-4.8 s vs 4.1-4.9 s fresh-JVM on q_neardup_prune): the
     // per-round cost is driver/AQE/job latency, not 32-way task
     // scheduling. Reverted to keep the loop's one shape.)
-    var prevSum = initSum
-    var round = 0
-    var converged = false
-    // Convergence probe selection (r18, the r17 verdict's #2). The label
-    // sum detects a fixpoint one full round AFTER the labels stop moving:
-    // the last CHANGING round produces the final labels, and only the
-    // next round's unchanged sum reveals it — at contract scale 1 of the
-    // 4 rounds is that pure detection pass. A strictly earlier sound
-    // signal exists on the ORIGINAL edge list: labels are converged iff
-    // no edge still crosses (label(src) != label(dst)). If no edge
-    // crosses, propagation is a no-op, so labels are uniform per
-    // component; a uniform component label L is the id of a node in that
-    // component whose own label is then L by the same uniformity, so the
-    // pointer jump is the identity too — the next round provably
-    // reproduces `labels` bit-for-bit, and skipping it cannot change the
-    // output. The crossing count is PAIR-scale, so the probe only
-    // replaces the node-scale sum when the edge list is small enough
-    // that contraction will never rewrite it (edgeCount only changes via
-    // contraction, so the regime is fixed at entry): on a contracted
-    // (quotient) edge list the signal is UNSOUND — nodes absent from the
-    // quotient graph can still need jump rounds after the last quotient
-    // edge collapses — and at that scale the extra pair-scale pass per
-    // round would cost more than the one round it saves anyway.
-    val crossingProbe = edgeCount <= contractAboveEdges
     def crossingCount(lbl: DataFrame): Long = {
       val la = lbl.select(col("doc_id").as("src"), col("label").as("la"))
       val lb = lbl.select(col("doc_id").as("dst"), col("label").as("lb"))
-      edges.join(maybeBroadcast(la), "src").join(maybeBroadcast(lb), "dst")
+      edges.join(broadcast(la), "src").join(broadcast(lb), "dst")
         .where(col("la") =!= col("lb")).count()
     }
+    var round = 0
+    var converged = false
     while (!converged) {
       round += 1
       require(round <= maxRounds, s"CC did not converge in $maxRounds rounds")
-      // Round 1 is join-free (r12, the hash-to-min initialization): the
+      // Round 1 is join-free (the hash-to-min initialization): the
       // labels are still the identity (label(src) == src for every
       // node), so the broadcast-join lookup below would be an identity
-      // map evaluated once per edge — on the 1.9B-row sf100 edge list
-      // that probe-per-row plus the broadcast build was pure overhead.
-      // Emitting the edge directly computes the same round-1
-      // propagation min(self, neighbors); rounds 2+ need the real
-      // label lookup.
+      // map evaluated once per edge. Emitting the edge directly computes
+      // the same round-1 propagation min(self, neighbors); rounds 2+
+      // need the real label lookup.
       val fromNeighbors =
         if (round == 1)
           edges.select(col("dst").as("doc_id"), col("src").as("label"))
         else edges
-          .join(maybeBroadcast(labels.withColumnRenamed("doc_id", "src")), "src")
+          .join(broadcast(labels.withColumnRenamed("doc_id", "src")), "src")
           .select(col("dst").as("doc_id"), col("label"))
       val propagated = labels.unionByName(fromNeighbors)
         .groupBy("doc_id").agg(min("label").as("label"))
@@ -596,62 +390,19 @@ object Dedup {
       val mapping = propagated
         .select(col("doc_id").as("map_src"), col("label").as("map_dst"))
       val next = propagated
-        .join(maybeBroadcast(mapping), col("label") === col("map_src"), "left")
+        .join(broadcast(mapping), col("label") === col("map_src"), "left")
         .select(col("doc_id"),
           coalesce(col("map_dst"), col("label")).as("label"))
         .localCheckpoint(false) // materialized by the convergence probe
-      // one action per round either way: the crossing probe's broadcast
-      // builds execute (and so materialize) the lazy checkpoint just as
-      // the sum aggregate does
-      if (crossingProbe) {
-        converged = crossingCount(next) == 0L
-      } else {
-        val nextSum = labelSum(next)
-        converged = nextSum.compareTo(prevSum) == 0
-        prevSum = nextSum
-      }
-      // `next` is materialized by the convergence probe above, so the
-      // previous round's checkpoint blocks are dead — free them NOW
-      // (Ckpt.free releases the underlying RDD's blocks; the old
-      // Dataset.unpersist() here was a CacheManager no-op, r17 verdict)
+      // the probe's broadcast builds execute (and so materialize) the
+      // lazy checkpoint: one action per round
+      converged = crossingCount(next) == 0L
+      // `next` is materialized, so the previous round's checkpoint
+      // blocks are dead — free them NOW (Ckpt.free releases the
+      // underlying RDD's blocks; Dataset.unpersist() is a CacheManager
+      // no-op on a checkpoint)
       Ckpt.free(labels)
       labels = next
-      // Edge contraction (scaladoc above): relabel the edge list through
-      // the new labels, keep only still-crossing edges. The la != lb
-      // filter drops intra-family edges before the distinct's exchange,
-      // so the contracted list materializes at quotient-graph size.
-      val wasBig = edgeCount > 10000000L
-      if (!converged && edgeCount > contractAboveEdges) {
-        val la = next.select(col("doc_id").as("src"), col("label").as("la"))
-        val lb = next.select(col("doc_id").as("dst"), col("label").as("lb"))
-        val ck = edges
-          .join(maybeBroadcast(la), "src")
-          .join(maybeBroadcast(lb), "dst")
-          .where(col("la") =!= col("lb"))
-          .select(col("la").as("src"), col("lb").as("dst"))
-          .distinct()
-          // quotient-graph-sized but unbounded above — pair-scale on
-          // the first contraction of a sparse graph, so disk-staged;
-          // lazy: the edgeCount below materializes it
-          .localCheckpoint(false, StorageLevel.DISK_ONLY)
-        val oldCkpt = edgesCkpt
-        // fresh attribute lineage over the checkpointed blocks: the
-        // contracted list derives from `next`, and NEXT round joins it
-        // back against the same label table — shared expression ids
-        // across the propagation union's children trip Catalyst's
-        // constraint rewrite (NoSuchElementException in
-        // UnionBase.rewriteConstraints). Quotient-graph-sized, so the
-        // Row round-trip is noise.
-        edges = ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-        edgesCkpt = Some(ck)
-        edgeCount = edges.count()
-        // the count above materialized `ck` (which READ the old edge
-        // blocks), so only now are they dead — free them for real
-        // (r18; the old pre-materialization Dataset.unpersist() was
-        // both a no-op AND, had it worked, an ordering bug)
-        oldCkpt.foreach(Ckpt.free)
-      }
-      if (wasBig) System.gc() // release the round's shuffle files (see above)
     }
     labels.join(docs.select("doc_id").distinct(), "doc_id")
       .select(col("doc_id"), col("label").as("cluster_id"))
@@ -714,8 +465,8 @@ object Dedup {
     // built and A/B'd: band-join on (doc_id, bhs, bucket) only — 9×
     // fewer bytes per band replica — emitting bare candidate ids, then
     // the gate + exact verify cogrouped by connected component so each
-    // doc's (sig, htoks) crossed the network once (the jaccardPairs
-    // clusterRoutedVerify shape). Output-identical (9,587,106 pairs
+    // doc's (sig, htoks) crossed the network once (the shape of a
+    // since-deleted routed jaccard verify). Output-identical (9,587,106 pairs
     // both arms at sf1), but 3× SLOWER at sf1 (32.2 s vs 9.9-10 s) and
     // ≥8× slower at sf10 (one routed execution exceeded 8 min vs
     // 53.9 s fused): candidates outnumber docs ~100:1 on a dup-heavy

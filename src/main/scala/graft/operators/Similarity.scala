@@ -293,13 +293,12 @@ object Similarity {
     * count — constant. Integer-only so the DuckDB oracle reproduces
     * it: `greatest(16, least(cap, n // 1024))`.
     *
-    * The flat cap, 16384: past 4096 lists the corpus assignment routes
-    * through the child-table shape ([[assignLists]]), the fit sample
-    * scales with the list count ([[fitSample]]), and only the FIT-round
-    * argmin still carries the k-row literal matrix (≤ 8 MB at the cap,
-    * over the ≤ 4·k-row sample — metadata scale). At 16384 the cap next
+    * The flat cap, 16384: the fit sample scales with the list count
+    * ([[fitSample]]), and both the fit-round argmin and the corpus
+    * assignment ([[assignLists]]) carry the k-row child matrix as a
+    * literal (~0.5 KB/child, ≤ 8 MB at the cap). At 16384 the cap next
     * binds at ~16M vectors/partition-box; beyond it [[superQuantizer]]'s
-    * driver Lloyd (O(k·√k·d) ≈ 134 MFLOP at the cap) and the fit-round
+    * driver Lloyd (O(k·√k·d) ≈ 134 MFLOP at the cap) and the k-row
     * literal are the limits, which [[treeFit]] lifts: it has no k-sized
     * literal and never collects children to the driver, so it sizes
     * with cap 2²⁴ (binding at ~17B vectors). */
@@ -459,48 +458,22 @@ object Similarity {
     graft.plans.HierArgmin.argminCol(typedLit(cfg), col("vec"))
   }
 
-  /** The flat quantizer's corpus assignment, routed by child count: at
-    * ≤ literalCap children the fused literal [[hierArgminCol]] (zero
-    * joins, pure codegen — the child matrix rides the expression as a
-    * reference object, ~0.5 KB/child, so 4096 is ~2 MB of task binary,
-    * measured materially faster than the join shape: sf100 semdedup at
-    * k=1953 read 206–355 s via the table path vs 165 s-class literal);
-    * past it the same two-level hierarchy as a [[TreeQuantizer]] over a
-    * child TABLE ([[childTree]]) and [[treeAssign]]'s broadcast join,
-    * whose reference objects stay √k-sized at any k. Both routes return
-    * `v`'s columns plus list_id, bit-identically (HierQuantizerSpec).
+  /** The flat quantizer's corpus assignment: the fused literal
+    * [[hierArgminCol]] (zero joins, pure codegen — the child matrix
+    * rides the expression as a reference object, ~0.5 KB/child).
+    * Returns `v`'s columns plus list_id.
     *
-    * Null contract, route-independent (r12, pinned in
-    * HierQuantizerSpec): a null vector or null element gets no
+    * Null contract (pinned in HierQuantizerSpec and, for the tree,
+    * TreeQuantizerSpec): a null vector or null element gets no
     * assignment and the row DROPS — enforced HERE by the vv filter (vv
     * is null exactly when the vector is null or carries a null element,
-    * so the guard costs no extra pass). Without it the routes diverged
-    * on null-bearing data depending on corpus size: the literal path
-    * emitted a null list_id while the table path's min_by over a null
-    * d2 ASSIGNED the row to an arbitrary list (struct ordering places
-    * nulls first). */
-  private[graft] def assignLists(v: DataFrame, cents: Seq[Cent], iters: Int,
-                                 literalCap: Int = 4096): DataFrame = {
+    * so the guard costs no extra pass). [[treeAssign]] drops the same
+    * rows, so both quantizers agree on null-bearing data. */
+  private[graft] def assignLists(v: DataFrame, cents: Seq[Cent],
+                                 iters: Int): DataFrame = {
     val clean = v.where(col("vv").isNotNull)
-    if (cents.size <= literalCap)
-      clean.withColumn("list_id", hierArgminCol(clean, cents, iters))
-        .where(col("list_id").isNotNull)
-    else childTree(cents, iters, v.sparkSession).assign(clean)
-  }
-
-  /** The flat fit's two-level hierarchy as a [[TreeQuantizer]]: the
-    * populated supers of [[superQuantizer]] over a child table
-    * (super_id, list_id, cvec, cc) built from the flat children. */
-  private def childTree(cents: Seq[Cent], iters: Int,
-                        spark: SparkSession): TreeQuantizer = {
-    import spark.implicits._
-    val (sup, branchOf) = superQuantizer(cents, iters)
-    val populated = branchOf.values.toSet
-    TreeQuantizer(sup.filter(s => populated.contains(s._1)),
-      cents.sortBy(_._1)
-        .map { case (cid, cv, cc) => (branchOf(cid), cid, cv.toSeq, cc) }
-        .toDF("super_id", "list_id", "cvec", "cc"),
-      cents.size)
+    clean.withColumn("list_id", hierArgminCol(clean, cents, iters))
+      .where(col("list_id").isNotNull)
   }
 
   /** Third-level (tree) quantizer fit — the lever past the flat fit's
@@ -547,14 +520,13 @@ object Similarity {
     val cq = (nl + ns - 1) / ns
 
     // null-vv rows (null vector or null element) are excluded from BOTH
-    // fit stages — route-independent, the assignLists null contract. The
-    // super fit filter matters even under the ingest null-free contract:
-    // lloydFit's init sample orders by (pb, vec_id) without looking at
-    // vector content, so a sampled null row would become a null super
-    // centroid and the downstream argmin over null d2 would assign rows
-    // arbitrarily (the exact struct-ordering failure assignLists
-    // closed). On null-free data the filter is a no-op, so the
-    // q_embed_ann_ivf_tree oracle replay is unchanged.
+    // fit stages — the assignLists null contract. The super fit filter
+    // matters even under the ingest null-free contract: lloydFit's init
+    // sample orders by (pb, vec_id) without looking at vector content,
+    // so a sampled null row would become a null super centroid and the
+    // downstream argmin over null d2 would assign rows arbitrarily (min_by
+    // struct ordering places nulls first). On null-free data the filter
+    // is a no-op, so the q_embed_ann_ivf_tree oracle replay is unchanged.
     val supers = lloydFit(v.where(col("vv").isNotNull), ns, iters,
       maxFitRows, n)
     // LAZY checkpoints throughout the build (r18, the CC-loop
@@ -609,29 +581,26 @@ object Similarity {
       .localCheckpoint(false) // materialized by the populated collect
     val populated = kids.select("super_id").distinct()
       .collect().map(_.getInt(0)).toSet // ≤ ns rows — metadata scale
-    TreeQuantizer(supers.filter(s => populated.contains(s._1)), kids, nl)
+    TreeQuantizer(supers.filter(s => populated.contains(s._1)), kids)
   }
 
   /** Corpus-side assignment against a tree: literal argmin over the
     * populated `supers`, then the nearest child of that branch via the
-    * child-TABLE join + narrow-row min_by (ties (d2, list_id) through
-    * the struct ordering of min_by). The child join broadcasts up to
-    * 16384 lists (≤ ~8 MB of centroids) and falls back to a shuffle
-    * join on super_id beyond — at 2²⁴ lists the child table is ~8 GB,
-    * far past any broadcast budget, and branch sizes are hash-spread
-    * ~uniform so the shuffle join has no skew cliff. Per vector: one
-    * codegen'd super argmin, a join that fans out to that branch's ~√k
-    * children, and a map-side-combining min_by — n·√k streamed rows,
-    * but the shuffle is one row per vector (the partial min). Null
+    * broadcast child-TABLE join + narrow-row min_by (ties (d2, list_id)
+    * through the struct ordering of min_by). The broadcast holds every
+    * child centroid (~0.5 KB/child: ~8 MB at 16384 lists, but ~8 GB at
+    * [[treeFit]]'s 2²⁴ cap, past any broadcast budget). Per vector:
+    * one codegen'd super argmin, a join that fans out to that branch's
+    * ~√k children, and a map-side-combining min_by — n·√k streamed
+    * rows, but the shuffle is one row per vector (the partial min). Null
     * contract as [[assignLists]]: rows whose vv is null DROP. Returns
     * `v`'s columns plus list_id. */
   private[graft] def treeAssign(v: DataFrame, supers: Seq[Cent],
-      kids: DataFrame, nLists: Int): DataFrame = {
+      kids: DataFrame): DataFrame = {
     val clean = v.where(col("vv").isNotNull)
-    val kidsJ = if (nLists <= 16384) broadcast(kids) else kids
     val asg = clean.select(col("vec_id"), col("vec"), col("vv"))
       .withColumn("super_id", argminCol(supers))
-      .join(kidsJ, "super_id")
+      .join(broadcast(kids), "super_id")
       .withColumn("d2", col("vv") + col("cc") -
         lit(2.0) * dotCol(col("vec"), col("cvec")))
       // NARROW rows into the aggregate — (long, int, double) only. An
@@ -675,13 +644,12 @@ object Similarity {
         .withColumn("list_id", col("p.id")).drop("p")
   }
 
-  /** The tree fit ([[treeFit]]), or a flat fit's hierarchy past the
-    * literal cap ([[childTree]]): populated supers on the driver, the
+  /** The tree fit ([[treeFit]]): populated supers on the driver, the
     * children as a table. The probe is a JOIN of the broadcast query side
     * against the child table — no stage carries k driver-side. */
   private[graft] final case class TreeQuantizer(supers: Seq[Cent],
-      kids: DataFrame, nLists: Int) extends Quantizer {
-    def assign(v: DataFrame): DataFrame = treeAssign(v, supers, kids, nLists)
+      kids: DataFrame) extends Quantizer {
+    def assign(v: DataFrame): DataFrame = treeAssign(v, supers, kids)
     def probe(q: DataFrame, nProbe: Int): DataFrame =
       topPer(kids.crossJoin(broadcast(q)).withColumn("d2", col("vv") +
           col("cc") - lit(2.0) * dotCol(col("vec"), col("cvec"))),

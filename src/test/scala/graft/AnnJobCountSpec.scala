@@ -5,11 +5,13 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graftprobe.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-/** Driver actions per ANN registry query: each query (its index build,
-  * where it has one, plus the collect of its answer) runs at most the
-  * pinned number of Spark jobs on the sf0.001 fixture. A refactor that
-  * adds an eager checkpoint, a count or a collect to a build or serve
-  * path fails here, before any timing shows it. */
+/** Driver actions per ANN and near-dup registry query: each query (its
+  * index build, where it has one, plus the collect of its answer) runs
+  * at most the pinned number of Spark jobs on the sf0.001 fixture. A
+  * refactor that adds an eager checkpoint, a count or a collect to a
+  * build, serve or near-dup path fails here, before any timing shows
+  * it. A count costs two jobs here (a shuffle-map job and a result
+  * job). */
 class AnnJobCountSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -23,7 +25,10 @@ class AnnJobCountSpec extends SparkSpec {
     "q_embed_ann_ivf_int8" -> 28,
     "q_embed_ann_funnel" -> 33,
     "q_embed_ann_ivf_tree" -> 36,
-    "q_embed_semdedup" -> 17)
+    "q_embed_semdedup" -> 17,
+    "q_dedup_ngram_jaccard" -> 11,
+    "q_dedup_clusters" -> 34,
+    "q_neardup_prune" -> 38)
 
   private def jobsOf(name: String): Int = {
     val q = SparkEntry.registry.find(_.name == name).get

@@ -3,22 +3,19 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
-/** Pins the r18 crossing-edge convergence probe of
-  * [[Dedup.duplicateClusters]]: on an uncontracted edge list the loop
-  * stops in the LAST CHANGING round (no edge still crosses ⟹ the next
-  * round is provably the identity), one full round earlier than the
-  * label-sum fixpoint the big-graph path still uses. The tests pin both
-  * the saved round (via maxRounds tightness — a revert to sum detection
-  * fails the require) and output identity between the two probes. */
+/** Pins the crossing-edge convergence probe of
+  * [[Dedup.duplicateClusters]]: the loop stops in the LAST CHANGING
+  * round (no edge still crosses ⟹ the next round is provably the
+  * identity), one full round earlier than a label-sum fixpoint would.
+  * Each test pins the expected labels and the saved round (via
+  * maxRounds tightness — one more round fails the require). */
 class CCConvergenceSpec extends SparkSpec {
   import spark.implicits._
 
   private def cc(pairs: Seq[(Long, Long)], docs: Seq[Long],
-                 maxRounds: Int = 50,
-                 contractAboveEdges: Long = 10000000L): Seq[(Long, Long)] =
+                 maxRounds: Int = 50): Seq[(Long, Long)] =
     Dedup.duplicateClusters(pairs.toDF("doc_a", "doc_b"),
-        docs.toDF("doc_id"), maxRounds = maxRounds,
-        contractAboveEdges = contractAboveEdges)
+        docs.toDF("doc_id"), maxRounds = maxRounds)
       .as[(Long, Long)].collect().sorted.toSeq
 
   test("crossing probe stops in the last changing round: 8-node path needs 3") {
@@ -40,11 +37,9 @@ class CCConvergenceSpec extends SparkSpec {
     assert(cc(pairs, ids, maxRounds = 1) === ids.map(d => (d, 10L)))
   }
 
-  test("probe parity: crossing vs contraction+sum on star/bridge/isolated") {
+  test("crossing probe labels a star, a bridge and isolated docs") {
     // star centered on a NON-min node + a bridge into a clique + two
-    // isolated docs. contractAboveEdges = 0 forces the contraction+sum
-    // path on every round; the default keeps the crossing probe. The
-    // outputs must be bit-identical (same multiset of (doc, cluster)).
+    // isolated docs: one component labeled 2, the isolated docs their own
     val star = Seq(2L, 3L, 4L, 6L, 7L).map(i => (5L, i))
     val clique = Seq((20L, 21L), (20L, 22L), (21L, 22L))
     val bridge = Seq((7L, 20L))
@@ -55,7 +50,21 @@ class CCConvergenceSpec extends SparkSpec {
       (d, if (d == 90L || d == 91L) d else 2L)
     }
     assert(cc(pairs, docs) === expected)
-    assert(cc(pairs, docs, contractAboveEdges = 0L) === expected)
+  }
+
+  test("crossing probe: two bridged 40-cliques converge in 2 rounds") {
+    // the near-dup family shape: two 40-doc cliques bridged by
+    // (1039, 2000), plus singletons. Round 1 labels clique A 1000,
+    // doc 2000 1000 (via the bridge and the jump) and the rest of
+    // clique B 1039; round 2 pulls clique B to 1000 through doc 2000,
+    // and no edge crosses.
+    val fam = (for {
+      base <- Seq(1000L, 2000L); i <- 0 until 40; j <- (i + 1) until 40
+    } yield (base + i, base + j)) :+ ((1039L, 2000L))
+    val docs = (fam.flatMap(p => Seq(p._1, p._2)).distinct ++
+      Seq(9001L, 9002L)).sorted
+    val expected = docs.map(d => (d, if (d > 9000L) d else 1000L))
+    assert(cc(fam, docs, maxRounds = 2) === expected)
   }
 
   test("probe parity: empty pair graph converges immediately") {

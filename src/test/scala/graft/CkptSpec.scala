@@ -7,8 +7,7 @@ import graft.operators.Ckpt
   * `Dataset.unpersist()` on a localCheckpoint'd frame is a CacheManager
   * no-op (its blocks survive), while [[Ckpt.free]] releases the
   * underlying checkpoint RDD's blocks immediately — the behaviour the
-  * CC loop and the routed jaccard verify now rely on to bound their
-  * pair-scale scratch footprint to ~one generation. */
+  * CC loop relies on to hold ~one generation of label blocks. */
 class CkptSpec extends SparkSpec {
 
   import spark.implicits._

@@ -110,58 +110,12 @@ class HierQuantizerSpec extends SparkSpec {
       .toMap
     assert(out(1L).isDefined)
     assert(out(2L).isEmpty)
-  }
-
-  test("broadcast-table child level == fused literal path (the nLists>1024 shape)") {
-    val df = (0 until 400).map { i =>
-      (i.toLong, Array.fill(dim)(rnd.nextDouble() * 10 - 5).toSeq)
-    }.toDF("vec_id", "vec")
-    val lit = df.withColumn("list_id", Similarity.hierArgminCol(df, cents, 2))
-      .select("vec_id", "list_id").as[(Long, Int)].collect().toMap
-    // literalCap = 0 forces the child-table route (the tree assignment
-    // over the flat children)
-    val tab = Similarity.assignLists(df.withColumn("vv",
-        graft.plans.DotProduct.dotCol(col("vec"), col("vec"))),
-        cents, 2, literalCap = 0)
-      .select("vec_id", "list_id")
-      .as[(Long, Int)].collect().toMap
-    assert(tab.size == 400)
-    assert(tab == lit)
-  }
-
-  test("assignLists routes >1024 children through the attach join, output == literal") {
-    // 1100 synthetic children with literalCap=1024 force the table branch (broadcast-table
-    // assignment + the n-sized attach join) — the sf100 semdedup path —
-    // and must match the fused literal assignment row-for-row,
-    // INCLUDING the re-attached vec/vv columns.
-    val bigCents: Seq[(Int, Array[Double], Double)] = (0 until 1100).map { i =>
-      val c = Array.tabulate(dim)(d =>
-        (if (d == i % dim) 4.0 else 0.0) + ((i * 31 + d * 7) % 97) / 97.0)
-      (i, c, { var s = 0.0; c.foreach(x => s += x * x); s })
-    }
-    // one null-element vector: the null contract must be ROUTE-
-    // independent (r12 — previously the literal path kept a null
-    // list_id row where the table path's inner join dropped it, so
-    // output diverged by corpus size for the same data)
-    val clean = (0 until 300).map { i =>
-      (i.toLong, Array.fill(dim)(rnd.nextDouble() * 8 - 4)
-        .map(java.lang.Double.valueOf).toSeq)
-    }
-    val dirty = clean :+ ((300L,
-      (java.lang.Double.valueOf(1.0) +: Array.fill(dim - 1)(
-        null.asInstanceOf[java.lang.Double])).toSeq))
-    val df = dirty.toDF("vec_id", "vec")
-      .withColumn("vv", graft.plans.DotProduct.dotCol(col("vec"), col("vec")))
-    val routed = Similarity.assignLists(df, bigCents, 2, literalCap = 1024)
-    assert(routed.columns.toSeq === Seq("vec_id", "vec", "vv", "list_id"))
-    val got = routed.select("vec_id", "list_id")
-      .as[(Long, Int)].collect().toMap
-    val viaLiteral = Similarity.assignLists(df, bigCents, 2,
-        literalCap = Int.MaxValue).select("vec_id", "list_id")
-      .as[(Long, Int)].collect().toMap
-    assert(got.size == 300 && viaLiteral.size == 300) // null vector dropped on BOTH routes
-    assert(!got.contains(300L) && !viaLiteral.contains(300L))
-    assert(got == viaLiteral)
+    // the corpus assignment keeps v's columns plus list_id and drops
+    // the null-element row (its vv is null)
+    val asg = Similarity.assignLists(df.withColumn("vv",
+        graft.plans.DotProduct.dotCol(col("vec"), col("vec"))), cents, 2)
+    assert(asg.columns.toSeq === Seq("vec_id", "vec", "vv", "list_id"))
+    assert(asg.select("vec_id").as[Long].collect().toSeq === Seq(1L))
   }
 
   test("superQuantizer is deterministic and empty supers drop") {

@@ -24,9 +24,8 @@ class SourceHygieneSpec extends AnyFunSuite {
   /** file (relative to `src/main/scala`) → the variables it may read */
   private val envAllowed = Map(
     "graft/Session.scala" -> Set("SPARK_GRAFT_CPUS", "SPARK_MASTER"),
-    "graft/Bench.scala" -> Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_RUNS"),
-    "graft/BenchOne.scala" -> Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_RUNS"),
-    "graft/tools/Scratch.scala" -> Set("SPARK_GRAFT_NO_SWEEP"))
+    "graft/Bench.scala" -> Set("SPARK_GRAFT_SF_DIR"),
+    "graft/BenchOne.scala" -> Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_RUNS"))
 
   /** (path relative to `dir`, its lines minus comment lines) of every
     * `.scala` file under `dir`. A trailing `// ...` stays, so it can

@@ -41,7 +41,7 @@ class TreeQuantizerSpec extends SparkSpec {
 
   test("treeFit: flat ids injective and branch-recoverable, returned supers all populated") {
     val v = withVv(corpus(600).toDF("vec_id", "vec"))
-    val Similarity.TreeQuantizer(supers, kids, _) =
+    val Similarity.TreeQuantizer(supers, kids) =
       Similarity.treeFit(v, nLists = 12, iters = 2, maxFitRows = 4096L)
     val ns = Similarity.superCount(12)
     val cq = (12 + ns - 1) / ns
@@ -63,11 +63,11 @@ class TreeQuantizerSpec extends SparkSpec {
   test("treeAssign == brute-force reference (nearest populated super, then nearest child of that branch)") {
     val vecs = corpus(500)
     val v = withVv(vecs.toDF("vec_id", "vec"))
-    val Similarity.TreeQuantizer(supers, kids, _) =
+    val Similarity.TreeQuantizer(supers, kids) =
       Similarity.treeFit(v, nLists = 12, iters = 2, maxFitRows = 4096L)
     val kidRows = kids.collect().map(r => (r.getInt(0), r.getInt(1),
       r.getSeq[Double](2).toArray, r.getDouble(3))).toSeq
-    val got = Similarity.treeAssign(v, supers, kids, nLists = 12)
+    val got = Similarity.treeAssign(v, supers, kids)
       .select("vec_id", "list_id").as[(Long, Int)].collect().toMap
     assert(got.size == 500)
     vecs.foreach { case (id, vecSeq) =>
@@ -90,13 +90,13 @@ class TreeQuantizerSpec extends SparkSpec {
       (java.lang.Double.valueOf(1.0) +: Array.fill(dim - 1)(
         null.asInstanceOf[java.lang.Double])).toSeq))
     val v = withVv(dirty.toDF("vec_id", "vec"))
-    val Similarity.TreeQuantizer(supers, kids, _) =
+    val Similarity.TreeQuantizer(supers, kids) =
       Similarity.treeFit(v, nLists = 12, iters = 2, maxFitRows = 4096L)
     // no child centroid may carry a null component (the dirty row must
     // not have seeded or shifted any child)
     val badCents = kids.where(exists(col("cvec"), x => x.isNull)).count()
     assert(badCents == 0, "null leaked into a child centroid")
-    val got = Similarity.treeAssign(v, supers, kids, nLists = 12)
+    val got = Similarity.treeAssign(v, supers, kids)
       .select("vec_id", "list_id").as[(Long, Int)].collect().toMap
     assert(got.size == 300 && !got.contains(300L),
       "null-vv row must drop from assignment")
@@ -126,7 +126,7 @@ class TreeQuantizerSpec extends SparkSpec {
   test("treeFit is deterministic across runs") {
     val v = withVv(corpus(400).toDF("vec_id", "vec"))
     def run(): (Seq[Int], Set[(Int, Int, Seq[Double], Long)]) = {
-      val Similarity.TreeQuantizer(s, k, _) = Similarity.treeFit(v,
+      val Similarity.TreeQuantizer(s, k) = Similarity.treeFit(v,
         nLists = 12, iters = 2, maxFitRows = 4096L)
       (s.map(_._1), k.collect().map(r => (r.getInt(0), r.getInt(1),
         r.getSeq[Double](2), java.lang.Double.doubleToLongBits(
@@ -151,9 +151,9 @@ class TreeQuantizerSpec extends SparkSpec {
 
   test("corpus assignment carries no k-sized literal: children arrive via a broadcast join") {
     val v = withVv(corpus(300).toDF("vec_id", "vec"))
-    val Similarity.TreeQuantizer(supers, kids, _) =
+    val Similarity.TreeQuantizer(supers, kids) =
       Similarity.treeFit(v, nLists = 12, iters = 2, maxFitRows = 4096L)
-    val plan = Similarity.treeAssign(v, supers, kids, nLists = 12)
+    val plan = Similarity.treeAssign(v, supers, kids)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"expected the child table on a broadcast join, got:\n$plan")
