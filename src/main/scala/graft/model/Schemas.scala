@@ -46,12 +46,13 @@ object Schemas {
     StructField("wicket_method", StringType),
     StructField("out_batsman", StringType),
     StructField("total_runs", IntegerType),
+    // Explicit ingest-order column; the reference relies on physical file
+    // order for its stateful scans (SURVEY §2.5 note) — we pin it. It sits
+    // where the decode emits it, before the innings state.
+    StructField("seq", LongType),
     StructField("innings", IntegerType),
     StructField("score", IntegerType),
     StructField("fallen_wickets", IntegerType),
-    // Explicit ingest-order column; the reference relies on physical file
-    // order for its stateful scans (SURVEY §2.5 note) — we pin it.
-    StructField("seq", LongType),
   ))
 
   /** Per-match metadata object.

@@ -1,9 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, classic}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.graftshim.DatasetOf
 
-/** Actually release a `localCheckpoint`ed Dataset's storage blocks.
+/** Local checkpoints: take one that keeps its producer's clustering
+  * ([[Ckpt.local]]), and actually release one's storage blocks.
   *
   * `Dataset.unpersist()` routes through the CacheManager, which holds no
   * entry for a checkpoint-backed LogicalRDD, so on a checkpointed frame
@@ -22,6 +25,26 @@ import org.apache.spark.sql.execution.LogicalRDD
   * materializes the next round's checkpoint (pinned in CkptSpec).
   */
 object Ckpt {
+  /** An eager local checkpoint that keeps the clustering of the plan that
+    * produced it. Spark takes a checkpoint's partitioning from the root of
+    * the executed plan, and an adaptive root reports none, so a consumer
+    * keyed like the producer (a window over the same key) would shuffle
+    * the rows again. The checkpoint's RDD holds the final adaptive plan's
+    * output partitions as they are, so its `LogicalRDD` is rebound to that
+    * plan's output partitioning (a coalesced read reports its own count).
+    * Any other frame keeps Spark's checkpoint as it is. */
+  def local(df: DataFrame): DataFrame = {
+    val ckpt = df.localCheckpoint(eager = true)
+    (ckpt.queryExecution.logical, df.queryExecution.executedPlan) match {
+      case (r: LogicalRDD, a: AdaptiveSparkPlanExec) if a.isFinalPlan =>
+        val spark = ckpt.sparkSession.asInstanceOf[classic.SparkSession]
+        DatasetOf(spark, LogicalRDD(r.output, r.rdd, a.executedPlan.outputPartitioning,
+          r.outputOrdering, r.isStreaming, r.stream)(
+          spark, Some(r.computeStats()), Some(r.constraints)))
+      case _ => ckpt
+    }
+  }
+
   def free(df: DataFrame): Unit = df.queryExecution.logical match {
     case r: LogicalRDD => r.rdd.unpersist(blocking = false)
     case _ => () // not a checkpoint-backed frame: nothing to free

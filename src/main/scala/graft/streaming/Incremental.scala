@@ -1,7 +1,9 @@
 package graft.streaming
 
 import java.util.concurrent.{ExecutionException, FutureTask}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -42,15 +44,19 @@ import graft.silver.Enrich
   *    driver threads, beside the bronze chain;
   *  - one action for the affected match ids (a per-partition distinct),
   *    on its own thread beside the planning of the bronze chain;
-  *  - one shuffle by `match` for all of bronze: it clusters the seq
-  *    offset, the first-wins dedup and both innings windows (every
-  *    window's keys include `match`), ending in one eager checkpoint;
+  *  - one shuffle by `match` over the batch's rows and the stored rows
+  *    of exactly the affected matches' directories, in one plan shape
+  *    whatever the store holds: it clusters the seq offset, the dedup
+  *    and both innings windows (every window's keys include `match`),
+  *    ending in one eager checkpoint that keeps the clustering
+  *    ([[graft.operators.Ckpt.local]]);
   *  - the bronze write on a second thread, beside the silver chain on
   *    the batch thread: silver derives from the same checkpoint (the
-  *    rows being written, no re-read of the table); its fuzzy names
-  *    score in the silver tasks ([[graft.silver.FuzzyNames.normalize]])
-  *    and its meta is a map lookup, not a join, so neither costs an
-  *    action.
+  *    rows being written, no re-read of the table); its dedup runs in
+  *    the checkpoint's clustering, its fuzzy names score in the silver
+  *    tasks and its meta is a map lookup, so none costs a job.
+  * That is 7 Spark jobs, 4 on the critical path: the ids (beside the
+  * dimensions), the checkpoint (shuffle + count), the silver write.
   * The batch returns only once both writes are joined, and a failure in
   * either fails it (the stream then does not commit the offset, and a
   * replay converges). The checkpoint's blocks are freed after the join,
@@ -60,12 +66,12 @@ import graft.silver.Enrich
   *
   * A keyed-MERGE formulation (Delta `MERGE ON` the delivery key) once
   * stood beside this one and converged to the same tables; it cost 24
-  * Spark jobs per snapshot of a stored match, all serial, against 8
+  * Spark jobs per snapshot of a stored match, all serial, against 7
   * here, and was removed.
   *
-  * Scale: each micro-batch shuffles only the affected matches' rows; the
-  * checkpoint dir gives exactly-once file processing. At 100 TB the unit
-  * of work stays one match (a few thousand rows), not the table.
+  * Scale: each micro-batch lists and shuffles only the affected matches'
+  * rows; the checkpoint dir gives exactly-once file processing. At 100 TB
+  * the unit of work stays one match (a few thousand rows), not the table.
   */
 object Incremental {
 
@@ -101,54 +107,48 @@ object Incremental {
     * bronze rows of the affected matches (innings assignment needs
     * whole-match context), first-wins dedup, innings segmentation.
     * Returns the bronze rows of the affected matches — a checkpoint,
-    * lineage-truncated, safe to write over `bronzePath`, and exactly the
-    * rows the write stores for them — or None for an empty batch. */
+    * lineage-truncated, safe to write over `bronzePath`, clustered by
+    * `match`, and exactly the rows the write stores for them — or None
+    * for an empty batch. The plan has one shape whatever the store holds:
+    * the first batch of a JVM compiles the plan every later one runs. */
   private def bronzeForBatch(spark: SparkSession, rawBatch: DataFrame,
                              bronzePath: String): Option[DataFrame] = {
-    // the affected match ids, collected beside the plan-only work below
+    // the affected ids, collected beside the plan-only decode (its `seq`,
+    // a monotonically increasing id, is fixed on the unshuffled read)
     val ids = new Fork("match-ids")(rawBatch.select("match").rdd
       .mapPartitions(_.map(_.getString(0)).toSet.iterator)
       .collect().distinct.toSeq)
-    val (decoded, bronzeSchema, bronzeStored) = joining(Seq(ids)) {
-      // decode on the unshuffled source read: `seq` (monotonically
-      // increasing id) is fixed below the exchange
-      val decoded = EventDecode.decode(rawBatch)
-      // Pinned read-back schema (plan-only, no job): partition-column
-      // inference would retype numeric-looking match ids (merging '01'
-      // with '1'), break the unionByName below, and defeat the isin
-      // partition filter — the exact failure RunPipeline's silver
-      // read-back fixed.
-      (decoded, Innings.addInnings(Pipeline.dedupDecoded(decoded)).schema,
-        gio.Tables.tableExists(spark, bronzePath))
-    }
+    val decoded = joining(Seq(ids))(EventDecode.decode(rawBatch))
     val matches = ids.join()
     if (matches.isEmpty) return None
 
-    val merged =
-      if (bronzeStored) {
-        val existing = spark.read.schema(bronzeSchema).parquet(bronzePath)
-          .where(col("match").isin(matches: _*))
-          .select(decoded.columns.toIndexedSeq.map(col): _*)
-        // new rows sort after their match's stored rows: offset = the
-        // match's stored max(seq) + 1 (0 for a match not stored yet)
-        val stored = col("_stored")
-        val offset = coalesce(
-          max(when(stored, col("seq"))).over(Window.partitionBy("match")) + 1,
-          lit(0L))
-        existing.withColumn("_stored", lit(true))
-          .unionByName(decoded.withColumn("_stored", lit(false)))
-          .repartition(col("match"))
-          .withColumn("seq", when(stored, col("seq")).otherwise(col("seq") + offset))
-          .drop("_stored")
-      } else decoded.repartition(col("match"))
+    // the stored rows of exactly the affected matches' directories (made
+    // empty for a new match; none for a null id), read with the pinned
+    // schema: no listing grows with the store, no '01' id becomes '1'
+    val base = new Path(bronzePath)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = matches.filter(m => m != null && m.nonEmpty)
+      .map(m => new Path(base, ExternalCatalogUtils.getPartitionPathString("match", m)))
+    (base +: dirs).foreach(fs.mkdirs)
+    val existing = spark.read.schema(Schemas.bronzeDelivery)
+      .option("basePath", bronzePath).parquet(dirs.map(_.toString): _*)
+      .select(decoded.columns.toIndexedSeq.map(col): _*)
+    // new rows sort after their match's stored rows: offset = the
+    // match's stored max(seq) + 1 (0 for a match not stored yet)
+    val stored = col("_stored")
+    val offset =
+      coalesce(max(when(stored, col("seq"))).over(Window.partitionBy("match")) + 1, lit(0L))
+    val merged = existing.withColumn("_stored", lit(true))
+      .unionByName(decoded.withColumn("_stored", lit(false)))
+      .repartition(col("match"))
+      .withColumn("seq", when(stored, col("seq")).otherwise(col("seq") + offset))
+      .drop("_stored")
 
     // Materialize (lineage-truncating) BEFORE the overwrite: the merged
-    // plan lazily reads bronzePath, the same path the write replaces.
-    // Dynamic partition overwrite defers deletion to job commit, but a
-    // recompute-during-write (task retry) or a mid-commit crash would
-    // otherwise read partially-replaced state with no recovery copy.
-    Some(Innings.addInnings(Pipeline.dedupDecoded(merged))
-      .localCheckpoint(eager = true))
+    // plan lazily reads bronzePath, the path the write replaces, and a
+    // task retry or a mid-commit crash would otherwise read partially
+    // replaced state with no recovery copy.
+    Some(Ckpt.local(Innings.addInnings(Pipeline.dedupDecoded(merged))))
   }
 
   /** Process one micro-batch of raw snapshot rows (exposed for tests +

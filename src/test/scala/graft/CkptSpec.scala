@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.ClusteredDistribution
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.row_number
 import org.apache.spark.storage.StorageLevel
 import graft.operators.Ckpt
 
@@ -8,7 +14,7 @@ import graft.operators.Ckpt
   * no-op (its blocks survive), while [[Ckpt.free]] releases the
   * underlying checkpoint RDD's blocks immediately — the behaviour the
   * CC loop relies on to hold ~one generation of label blocks. */
-class CkptSpec extends SparkSpec {
+class CkptSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   import spark.implicits._
 
@@ -57,5 +63,28 @@ class CkptSpec extends SparkSpec {
     assert(!Ckpt.isHeld(df))
     Ckpt.free(df) // must not throw
     assert(df.count() === 10L)
+  }
+
+  test("Ckpt.local keeps the producer's clustering: a window keyed like it " +
+    "plans no exchange, and free/isHeld work on it") {
+    val before = persistentIds
+    val df = Ckpt.local((1 to 500).map(i => (i % 7L, i.toLong)).toDF("k", "v")
+      .repartition($"k"))
+    val ckpt = df.queryExecution.logical match { case r: LogicalRDD => r }
+    assert(ckpt.outputPartitioning.satisfies(
+      ClusteredDistribution(ckpt.output.filter(_.name == "k"))), ckpt.outputPartitioning)
+    assert(ckpt.outputPartitioning.numPartitions === ckpt.rdd.getNumPartitions)
+
+    val firsts = df.withColumn("rn", row_number().over(Window.partitionBy("k").orderBy("v")))
+      .where($"rn" === 1)
+    assert(collect(firsts.queryExecution.executedPlan) { case s: ShuffleExchangeExec => s }
+      .isEmpty, firsts.queryExecution.executedPlan.treeString)
+    assert(firsts.select("k", "v").as[(Long, Long)].collect().sorted.toSeq ===
+      (1L to 7L).map(v => (v % 7L, v)).sorted)
+
+    assert(Ckpt.isHeld(df))
+    Ckpt.free(df)
+    assert(!Ckpt.isHeld(df))
+    assert((persistentIds -- before).isEmpty)
   }
 }

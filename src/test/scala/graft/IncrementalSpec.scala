@@ -5,9 +5,14 @@ import scala.jdk.CollectionConverters._
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.graftprobe.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerUnpersistRDD}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.model.Schemas
 import graft.streaming.Incremental
 
 /** Streaming/incremental contract (SURVEY §2.10): draining the raw
@@ -198,7 +203,11 @@ class IncrementalSpec extends SparkSpec {
     assert(freed.synchronized(freed.filter(_ > firstId).toSet.size) === 2)
   }
 
-  test("one snapshot of a stored match costs at most 8 Spark jobs") {
+  /** The Spark jobs of one drained snapshot of a stored match (its second
+    * scrape: 60 rows over 30 stored), with `fillers` more matches stored
+    * beside it. Every job must carry the caller's local properties, and
+    * the snapshot must land. */
+  private def storedSnapshotJobs(fillers: Int): Int = {
     val base = Files.createTempDirectory("graft-incr-jobs").toString
     val rawDir = s"$base/raw"; Files.createDirectories(Paths.get(rawDir))
     val bronzePath = s"$base/bronze"; val silverPath = s"$base/silver"
@@ -213,6 +222,15 @@ class IncrementalSpec extends SparkSpec {
     }
     writeSnapshot(s"$rawDir/1_$m.csv", m, 30)
     drain()
+    if (fillers > 0) {
+      // copies of the stored match under other ids: more bronze
+      // directories, none of them affected by the snapshot
+      val stored = spark.read.schema(Schemas.bronzeDelivery).parquet(bronzePath)
+      val ids = spark.range(fillers).select(format_string("filler_%02d", col("id")).as("match"))
+      graft.io.Tables.upsertPartitions(
+        stored.drop("match").crossJoin(ids).select(stored.columns.toIndexedSeq.map(col): _*),
+        bronzePath, Seq("match"))
+    }
 
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val untagged = new java.util.concurrent.atomic.AtomicInteger
@@ -234,14 +252,93 @@ class IncrementalSpec extends SparkSpec {
       spark.sparkContext.setLocalProperty(tag, null)
       spark.sparkContext.removeSparkListener(listener)
     }
-    // affected ids 1, bronze checkpoint 2 (shuffle by match + count),
-    // catalog 1, meta 1, bronze write 1, silver write 2 (Enrich.dedup
-    // shuffle + write); the fuzzy names score in the silver tasks
-    assert(jobs.get <= 8)
     // the jobs of the batch's own driver threads carry the caller's
     // local properties, as the stream thread's do
     assert(untagged.get === 0, "a job lost the caller's local properties")
-    assert(spark.read.parquet(bronzePath).count() === 60L, "the snapshot landed")
+    val landed = spark.read.schema(Schemas.bronzeDelivery).parquet(bronzePath)
+    assert(landed.where(col("match") === m).count() === 60L, "the snapshot landed")
+    assert(landed.select("match").distinct().count() === fillers + 1L)
+    jobs.get
+  }
+
+  // affected ids 1, catalog 1, meta 1 (the three side by side), bronze
+  // checkpoint 2 (shuffle by match + count), bronze write 1, silver
+  // write 1: silver's dedup runs in the checkpoint's clustering, and the
+  // fuzzy names score in the silver tasks
+  test("one snapshot of a stored match costs at most 7 Spark jobs") {
+    assert(storedSnapshotJobs(fillers = 0) <= 7)
+  }
+
+  test("one snapshot costs at most 7 Spark jobs with 40 matches stored " +
+    "(past the parallel partition-discovery threshold, 32)") {
+    assert(storedSnapshotJobs(fillers = 39) <= 7)
+  }
+
+  test("the first snapshot into an empty store and a snapshot of a stored " +
+    "match checkpoint through one physical plan shape") {
+    val base = Files.createTempDirectory("graft-incr-shape").toString
+    val rawDir = s"$base/raw"; Files.createDirectories(Paths.get(rawDir))
+    val bronzePath = s"$base/bronze"; val silverPath = s"$base/silver"
+    val ckpt = s"$base/ckpt"
+    val (_, meta) = Fixtures.rawSeason(spark)
+    val m = meta.select("short_name").first().getString(0)
+    val shapes = ArrayBuffer.empty[Seq[String]]
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint")
+          shapes.synchronized(shapes += collect(qe.executedPlan) { case p => p.nodeName })
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Seq(30, 60).foreach { rows =>
+        writeSnapshot(s"$rawDir/${rows}_$m.csv", m, rows)
+        val q = Incremental.run(spark, rawDir, meta, bronzePath, silverPath, ckpt)
+        q.awaitTermination()
+        q.exception.foreach(e => throw e)
+      }
+      ListenerDrain.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val Seq(first, stored) = shapes.synchronized(shapes.toSeq)
+    assert(first.contains("Union"), first.mkString(" > "))
+    assert(first === stored, "the plan branches on the store's state")
+  }
+
+  test("bronze rows carry the pinned read schema: Schemas.bronzeDelivery's " +
+    "names and types, in order") {
+    val (raw, _) = Fixtures.rawSeason(spark)
+    def shape(s: StructType) = s.fields.toSeq.map(f => f.name -> f.dataType)
+    assert(shape(Pipeline.toBronze(raw).schema) === shape(Schemas.bronzeDelivery))
+  }
+
+  test("a stored match '1' and a landed '01' stay two matches; an id that " +
+    "needs path escaping round-trips") {
+    val base = Files.createTempDirectory("graft-incr-ids").toString
+    val bronzePath = s"$base/bronze"; val silverPath = s"$base/silver"
+    val (rawRows, _) = Fixtures.seasonRows
+    val (_, meta) = Fixtures.rawSeason(spark)
+    val m = meta.select("short_name").first().getString(0)
+    val rows = rawRows.filter(_.getString(0) == m)
+    /** The rows of `m`, relabelled: one (id, rows) part per match. */
+    def landing(parts: (String, Seq[Row])*): DataFrame = spark.createDataFrame(
+      parts.flatMap { case (id, rs) => rs.map(r => Row.fromSeq(id +: r.toSeq.tail)) }.asJava,
+      Schemas.rawBall)
+    val odd = "a/b=c%d"
+    Incremental.processBatch(spark, landing("1" -> rows.take(25), odd -> rows.take(30)),
+      meta, bronzePath, silverPath)
+    // the odd id's second landing holds only its next 30 deliveries: its
+    // stored 30 survive only if the batch read them back
+    Incremental.processBatch(spark, landing("01" -> rows.take(40), odd -> rows.slice(30, 60)),
+      meta, bronzePath, silverPath)
+
+    val stored = spark.read.schema(Schemas.bronzeDelivery).parquet(bronzePath)
+    val counts = stored.groupBy("match").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(counts === Map("1" -> 25L, "01" -> 40L, odd -> 60L))
+    assert(Files.isDirectory(Paths.get(s"$bronzePath/match=a%2Fb%3Dc%25d")))
+    assert(bronzeSummary(stored.where(col("match") === odd)) ===
+      bronzeSummary(Pipeline.toBronze(landing(odd -> rows.take(60)))))
+    assert(spark.read.parquet(silverPath).where(col("match") === odd).count() === 60L)
   }
 
   test("a failed write fails the batch, frees its checkpoint, and a replay converges") {

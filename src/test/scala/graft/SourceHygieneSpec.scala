@@ -15,7 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft/plans/GraftExtensions.scala`, which names every kernel once.
   * Tables publish atomically one way: [[graft.io.Manifest]]'s stage →
   * move → commit, the only code that stages, renames or writes
-  * manifests. Every object is reached from an entry point. Comment
+  * manifests. Spark's internal `LogicalRDD` is built in one place,
+  * [[graft.operators.Ckpt]], through one `org.apache.spark.sql` shim.
+  * Every object is reached from an entry point. Comment
   * lines are skipped (usage blocks may show a builder). */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -97,6 +99,16 @@ class SourceHygieneSpec extends AnyFunSuite {
       case (rel, code) if protocol.exists(code.contains) => rel
     }
     assert(users === Seq("graft/io/Manifest.scala"))
+  }
+
+  test("Spark internals stay contained: LogicalRDD construction and the " +
+    "org.apache.spark.sql shim appear only in Ckpt and the shim's file") {
+    val shim = "org/apache/spark/sql/graftshim/DatasetOf.scala"
+    val users = sources.collect {
+      case (rel, code) if rel.startsWith("org/apache/spark/sql/") ||
+          "LogicalRDD\\(|graftshim|DatasetOf".r.findFirstIn(code).isDefined => rel
+    }
+    assert(users === Seq("graft/operators/Ckpt.scala", shim))
   }
 
   test("every object under src/main/scala is reached from an entry point") {
