@@ -4,7 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import graft.model.Schemas
 
-/** Source / sink layer (SURVEY §2.1, S1–S12).
+/** Source / sink layer (SURVEY §2.1, S1–S11). No writer here branches on
+  * whether a table exists, so S12's existence probe has no counterpart.
   *
   * The reference stores silver/gold as Delta Lake with partition-predicate
   * overwrite for idempotent re-runs (reference: pipeline_2026/
@@ -221,13 +222,4 @@ object Tables {
   /** S10 — CSV convenience sink (pipeline_local/to_gold/gld_match.py:317-319). */
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-
-  /** S12 — table existence probe (ex_match_bs.py:452-457; the local
-    * `_delta_log` check in to_silver/slvr_match.py:242 becomes an
-    * HDFS-API path probe). */
-  def tableExists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p)
-  }
 }

@@ -1,12 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.graftshim.DatasetOf
+import org.apache.spark.sql.types.StructType
 
 /** Local checkpoints: take one that keeps its producer's clustering
-  * ([[Ckpt.local]]), and actually release one's storage blocks.
+  * ([[Ckpt.local]]), actually release one's storage blocks, and analyze a
+  * plan once to run it over each call's frames ([[Ckpt.prepare]]).
   *
   * `Dataset.unpersist()` routes through the CacheManager, which holds no
   * entry for a checkpoint-backed LogicalRDD, so on a checkpointed frame
@@ -43,6 +47,56 @@ object Ckpt {
           spark, Some(r.computeStats()), Some(r.constraints)))
       case _ => ckpt
     }
+  }
+
+  /** A frame's analyzed plan, built once over stand-in leaves and run per
+    * call over real frames ([[Prepared.bind]]). */
+  final class Prepared private[Ckpt] (val standIns: Seq[LocalRelation], val plan: LogicalPlan) {
+
+    /** The prepared plan over `frames` (one per stand-in, in order), under
+      * `spark`. Each frame's analyzed plan takes its stand-in's place, under
+      * a projection that gives the frame's columns, matched by name (not by
+      * position: a partitioned read lists its partition column last), the
+      * stand-in's ids and so the plan above keeps its analysis. Pass the
+      * caller's session, not a frame's: the executors' generated classes
+      * are cached per session, so a per-call session compiles anew. */
+    def bind(spark: SparkSession, frames: DataFrame*): DataFrame = {
+      val bound: Map[LogicalPlan, LogicalPlan] = standIns.zip(frames).map { case (leaf, df) =>
+        val in = df.queryExecution.analyzed
+        leaf -> Project(leaf.output.map { a =>
+          val column = in.output.find(o => o.name == a.name && o.dataType == a.dataType)
+          require(column.isDefined, s"no column ${a.name} ${a.dataType.simpleString} to bind")
+          Alias(column.get, a.name)(exprId = a.exprId)
+        }, in)
+      }.toMap
+      DatasetOf(spark.asInstanceOf[classic.SparkSession],
+        plan.transformUp { case l: LocalRelation if bound.contains(l) => bound(l) })
+    }
+  }
+
+  /** Prepares `build`'s plan over stand-ins of the given schemas (empty
+    * relations), under `spark`: analyzed once, here. Every stand-in column
+    * is nullable, so no step above it is analyzed as if a bound frame's
+    * column could hold no null. */
+  def prepare(spark: SparkSession, schemas: StructType*)(
+      build: Seq[DataFrame] => DataFrame): Prepared = {
+    val standIns = schemas.map(s => LocalRelation(StructType(s.map(_.copy(nullable = true)))))
+    val session = spark.asInstanceOf[classic.SparkSession]
+    new Prepared(standIns, build(standIns.map(DatasetOf(session, _))).queryExecution.analyzed)
+  }
+
+  /** One prepared plan and the key of everything baked into it: the plan
+    * is prepared again when asked for under another key. */
+  final class Slot {
+    private var held: Option[(Any, Prepared)] = None
+
+    def apply(key: Any)(prepare: => Prepared): Prepared = synchronized {
+      if (!held.exists(_._1 == key)) held = Some(key -> prepare)
+      held.get._2
+    }
+
+    /** The plan held now, if any. */
+    def current: Option[Prepared] = synchronized(held.map(_._2))
   }
 
   def free(df: DataFrame): Unit = df.queryExecution.logical match {

@@ -64,6 +64,19 @@ import graft.silver.Enrich
   * batch, so they inherit the batch thread's Spark local properties (job
   * group, scheduler pool, SQL execution).
   *
+  * The bronze and silver chains are analyzed once per JVM, not once per
+  * batch: each is a prepared plan ([[graft.operators.Ckpt.prepare]]) over
+  * stand-in leaves, and every batch, the first included, binds its own
+  * leaves into it (the raw rows and the stored read for bronze, the
+  * checkpoint for silver). A plan is prepared again only when its key
+  * changes. The bronze key is the session, `bronzePath` and the raw
+  * batch's schema. The silver key is the session, the dimensions (by
+  * value, so equal dimensions reuse the broadcasts baked into the plan)
+  * and the checkpoint's schema. A batch binds under the caller's
+  * session, never under the batch frame's: each drain's query hands its
+  * batches a session of its own, and the executors cache generated
+  * classes per session, so they would compile the plan anew each drain.
+  *
   * A keyed-MERGE formulation (Delta `MERGE ON` the delivery key) once
   * stood beside this one and converged to the same tables; it cost 24
   * Spark jobs per snapshot of a stored match, all serial, against 7
@@ -103,22 +116,51 @@ object Incremental {
     result.get
   }
 
+  /** The prepared bronze and silver plans, each with its key (the
+    * decode branches on a raw `seq` column, so the raw schema is in
+    * bronze's key). */
+  private[graft] val bronzePlan, silverPlan = new Ckpt.Slot
+
+  /** decode → union with the stored rows → seq offset → first-wins dedup
+    * → innings, over the raw batch and the stored rows of its matches. */
+  private def bronzeChain(leaves: Seq[DataFrame]): DataFrame = {
+    val Seq(raw, stored) = leaves
+    val decoded = EventDecode.decode(raw)
+    val existing = stored.select(decoded.columns.toIndexedSeq.map(col): _*)
+    // new rows sort after their match's stored rows: offset = the
+    // match's stored max(seq) + 1 (0 for a match not stored yet)
+    val isStored = col("_stored")
+    val offset =
+      coalesce(max(when(isStored, col("seq"))).over(Window.partitionBy("match")) + 1, lit(0L))
+    val merged = existing.withColumn("_stored", lit(true))
+      .unionByName(decoded.withColumn("_stored", lit(false)))
+      .repartition(col("match"))
+      .withColumn("seq", when(isStored, col("seq")).otherwise(col("seq") + offset))
+      .drop("_stored")
+    Innings.addInnings(Pipeline.dedupDecoded(merged))
+  }
+
   /** The shared per-batch computation: decode, merge with the stored
     * bronze rows of the affected matches (innings assignment needs
     * whole-match context), first-wins dedup, innings segmentation.
     * Returns the bronze rows of the affected matches — a checkpoint,
     * lineage-truncated, safe to write over `bronzePath`, clustered by
     * `match`, and exactly the rows the write stores for them — or None
-    * for an empty batch. The plan has one shape whatever the store holds:
-    * the first batch of a JVM compiles the plan every later one runs. */
+    * for an empty batch. The plan has one shape whatever the store holds,
+    * prepared once ([[bronzeChain]]) and bound to each batch's raw rows
+    * and stored read: the first batch of a JVM compiles the plan every
+    * later one runs. */
   private def bronzeForBatch(spark: SparkSession, rawBatch: DataFrame,
                              bronzePath: String): Option[DataFrame] = {
-    // the affected ids, collected beside the plan-only decode (its `seq`,
-    // a monotonically increasing id, is fixed on the unshuffled read)
+    // the affected ids, collected beside the plan preparation (the
+    // decode's `seq`, a monotonically increasing id, is fixed on the
+    // unshuffled read)
     val ids = new Fork("match-ids")(rawBatch.select("match").rdd
       .mapPartitions(_.map(_.getString(0)).toSet.iterator)
       .collect().distinct.toSeq)
-    val decoded = joining(Seq(ids))(EventDecode.decode(rawBatch))
+    val schema = rawBatch.schema
+    val plan = joining(Seq(ids))(bronzePlan((spark, bronzePath, schema))(
+      Ckpt.prepare(spark, schema, Schemas.bronzeDelivery)(bronzeChain)))
     val matches = ids.join()
     if (matches.isEmpty) return None
 
@@ -132,23 +174,12 @@ object Incremental {
     (base +: dirs).foreach(fs.mkdirs)
     val existing = spark.read.schema(Schemas.bronzeDelivery)
       .option("basePath", bronzePath).parquet(dirs.map(_.toString): _*)
-      .select(decoded.columns.toIndexedSeq.map(col): _*)
-    // new rows sort after their match's stored rows: offset = the
-    // match's stored max(seq) + 1 (0 for a match not stored yet)
-    val stored = col("_stored")
-    val offset =
-      coalesce(max(when(stored, col("seq"))).over(Window.partitionBy("match")) + 1, lit(0L))
-    val merged = existing.withColumn("_stored", lit(true))
-      .unionByName(decoded.withColumn("_stored", lit(false)))
-      .repartition(col("match"))
-      .withColumn("seq", when(stored, col("seq")).otherwise(col("seq") + offset))
-      .drop("_stored")
 
     // Materialize (lineage-truncating) BEFORE the overwrite: the merged
     // plan lazily reads bronzePath, the path the write replaces, and a
     // task retry or a mid-commit crash would otherwise read partially
     // replaced state with no recovery copy.
-    Some(Ckpt.local(Innings.addInnings(Pipeline.dedupDecoded(merged))))
+    Some(Ckpt.local(plan.bind(spark, rawBatch, existing)))
   }
 
   /** Process one micro-batch of raw snapshot rows (exposed for tests +
@@ -171,8 +202,9 @@ object Incremental {
             gio.Tables.upsertPartitions(bronze, bronzePath, Seq("match")))
           joining(Seq(bronzeWrite)) {
             val dims = Enrich.Dims(metaFork.join(), squadsFork.join())
-            gio.Tables.upsertSilverPartitions(
-              Enrich.transformWith(spark, bronze, dims), silverPath)
+            val silver = silverPlan((spark, dims, bronze.schema))(Ckpt.prepare(
+              spark, bronze.schema)(b => Enrich.transformWith(spark, b.head, dims)))
+            gio.Tables.upsertSilverPartitions(silver.bind(spark, bronze), silverPath)
           }
         } finally Ckpt.free(bronze)
       }

@@ -4,15 +4,20 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.graftprobe.ListenerDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerUnpersistRDD}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.model.Schemas
+import graft.operators.Ckpt
 import graft.streaming.Incremental
 
 /** Streaming/incremental contract (SURVEY §2.10): draining the raw
@@ -394,5 +399,124 @@ class IncrementalSpec extends SparkSpec {
     assert(b.exceptAll(st).isEmpty && st.exceptAll(b).isEmpty,
       "stored silver must equal the batch silver on every column but seq")
     assert(stored.select("match").distinct().count() === 2L)
+  }
+
+  /** `plan` with each leaf bound by [[Ckpt.Prepared.bind]] (a projection
+    * that aliases its child's columns to a stand-in's ids) put back as
+    * that stand-in, and the bound children's outputs, by stand-in. */
+  private def unbind(prepared: Ckpt.Prepared, plan: LogicalPlan)
+      : (LogicalPlan, Map[Int, Seq[String]]) = {
+    val children = ArrayBuffer.empty[(Int, Seq[String])]
+    val standIn = prepared.standIns.zipWithIndex.map { case (l, i) =>
+      l.output.map(_.exprId) -> (l, i) }.toMap
+    val unbound = plan.transformUp {
+      case p @ Project(list, child) if list.forall(_.isInstanceOf[Alias]) &&
+          standIn.contains(list.map(_.exprId)) =>
+        val (leaf, i) = standIn(list.map(_.exprId))
+        children += i -> child.output.map(_.name)
+        leaf
+    }
+    (unbound, children.toMap)
+  }
+
+  test("the first landing into an empty store and a landing of a stored " +
+    "match run one prepared analyzed plan, bound to their own leaves by name") {
+    val base = Files.createTempDirectory("graft-incr-prepared").toString
+    val rawDir = s"$base/raw"; Files.createDirectories(Paths.get(rawDir))
+    val bronzePath = s"$base/bronze"; val silverPath = s"$base/silver"
+    val ckpt = s"$base/ckpt"
+    val (_, meta) = Fixtures.rawSeason(spark)
+    val m = meta.select("short_name").first().getString(0)
+    val plans = ArrayBuffer.empty[LogicalPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.synchronized(plans += qe.analyzed)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val preparations = Seq(30, 60).map { rows =>
+      writeSnapshot(s"$rawDir/${rows}_$m.csv", m, rows)
+      spark.listenerManager.register(listener)
+      try {
+        val q = Incremental.run(spark, rawDir, meta, bronzePath, silverPath, ckpt)
+        q.awaitTermination()
+        q.exception.foreach(e => throw e)
+        ListenerDrain.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      (Incremental.bronzePlan.current.get, Incremental.silverPlan.current.get)
+    }
+    val Seq((bronze, silver), (bronze2, silver2)) = preparations
+    assert((bronze2 eq bronze) && (silver2 eq silver), "a landing prepared its plans again")
+    val Seq(first, stored) = plans.synchronized(plans.toSeq).map(unbind(bronze, _))
+    assert(first._1 == bronze.plan, "the first landing ran another plan")
+    assert(stored._1 == bronze.plan, "the stored match's landing ran another plan")
+    // the stored read (leaf 1) lists `match` at its schema position over
+    // empty directories, and last, as the partition column, over files
+    assert(first._2(1).head === "match")
+    assert(stored._2(1).last === "match")
+    assert(spark.read.schema(Schemas.bronzeDelivery).parquet(bronzePath).count() === 60L)
+  }
+
+  test("new dimensions prepare silver again and reach it; a raw batch " +
+    "carrying `seq` gets its own bronze plan") {
+    val base = Files.createTempDirectory("graft-incr-reprepare").toString
+    val bronzePath = s"$base/bronze"; val silverPath = s"$base/silver"
+    val (rawRows, _) = Fixtures.seasonRows
+    val (_, meta) = Fixtures.rawSeason(spark)
+    val m = meta.select("short_name").first().getString(0)
+    val rows = rawRows.filter(_.getString(0) == m)
+    def landing(rs: Seq[Row]): DataFrame =
+      spark.createDataFrame(rs.asJava, Schemas.rawBall)
+    def plans = (Incremental.bronzePlan.current.get, Incremental.silverPlan.current.get)
+
+    Incremental.processBatch(spark, landing(rows.take(30)), meta, bronzePath, silverPath)
+    val (bronze, silver) = plans
+    Incremental.processBatch(spark, landing(rows.take(40)), meta, bronzePath, silverPath)
+    assert(plans._1 eq bronze); assert(plans._2 eq silver)
+
+    // one meta row edited: its venue and toss decision
+    val edited = meta.withColumn("venue",
+        when(col("short_name") === m, lit("Edited Park")).otherwise(col("venue")))
+      .withColumn("toss_decision",
+        when(col("short_name") === m, lit("edited")).otherwise(col("toss_decision")))
+    Incremental.processBatch(spark, landing(rows.take(50)), edited, bronzePath, silverPath)
+    assert(plans._1 eq bronze, "the bronze plan depends on no dimension")
+    assert(plans._2 ne silver, "new dimensions reused the old silver plan")
+    val stored = spark.read.parquet(silverPath).where(col("match") === m)
+    assert(stored.count() === 50L)
+    assert(stored.select("venue", "toss_decision").distinct().collect().toSeq ===
+      Seq(Row("Edited Park", "edited")))
+
+    // the decode keeps a batch's own `seq`: another bronze plan
+    val withSeq = landing(rows.take(60)).withColumn("seq", monotonically_increasing_id())
+    Incremental.processBatch(spark, withSeq, edited, bronzePath, silverPath)
+    val seqBronze = plans._1
+    assert(seqBronze ne bronze, "a raw batch with `seq` reused the plan without it")
+    Incremental.processBatch(spark, landing(rows.take(70)), edited, bronzePath, silverPath)
+    assert(plans._1 ne seqBronze)
+    val landed = spark.read.schema(Schemas.bronzeDelivery).parquet(bronzePath)
+    assert(bronzeSummary(landed) === bronzeSummary(Pipeline.toBronze(landing(rows.take(70)))))
+  }
+
+  test("a stored match's later drains in one session compile no new " +
+    "generated classes") {
+    val base = Files.createTempDirectory("graft-incr-codegen").toString
+    val rawDir = s"$base/raw"; Files.createDirectories(Paths.get(rawDir))
+    val bronzePath = s"$base/bronze"; val silverPath = s"$base/silver"
+    val ckpt = s"$base/ckpt"
+    val (_, meta) = Fixtures.rawSeason(spark)
+    val players = writePlayers(base)
+    val m = meta.select("short_name").first().getString(0)
+    /** Lands a snapshot of `rows` deliveries and drains it: the classes
+      * the drain compiled. */
+    def drain(name: String, rows: Int): Long = {
+      writeSnapshot(s"$rawDir/${name}_$m.csv", m, rows)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val q = Incremental.run(spark, rawDir, meta, bronzePath, silverPath, ckpt, Some(players))
+      q.awaitTermination()
+      q.exception.foreach(e => throw e)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val compiled = Seq("a" -> 30, "b" -> 60, "c" -> 60, "d" -> 60).map((drain _).tupled)
+    assert(compiled.last === 0L, s"classes compiled per drain: ${compiled.mkString(" ")}")
   }
 }
